@@ -7,6 +7,11 @@ appends one row; re-running a load appends another row rather than
 updating in place — the log is the immutable record the "did
 yesterday's load succeed" query reads.
 
+The row is built JVM-side, as a typed literal projection over a
+one-row range, and appended in one Spark job: no Python-local rows, so
+no Python worker starts for a one-row write, and file names (which come
+from outside the program) never pass through SQL text.
+
 Scale posture: one tiny file per load event, partitioned by log_date so
 status queries prune to the days they ask about. At 100 TB-scale load
 volume you'd compact small files per day (a nightly coalesce of closed
@@ -20,6 +25,8 @@ import time
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 if TYPE_CHECKING:  # pragma: no cover - import cycle guard (typing only)
     from .pipeline import IngestReport
@@ -44,24 +51,36 @@ def log_ingest(
     _heal_log(log_dir)
     ts = int(time.time_ns() // 1000) if now_us is None else int(now_us)
     day = _dt.datetime.fromtimestamp(ts / 1e6, tz=_dt.timezone.utc).date().isoformat()
-    row = [
-        (
-            report.file,
-            report.route,
-            int(report.loaded_rows),
-            int(report.bad_rows),
-            report.status,
-            report.detail,
-            ts,
-            day,
-        )
-    ]
+    row = (
+        report.file,
+        report.route,
+        int(report.loaded_rows),
+        int(report.bad_rows),
+        report.status,
+        report.detail,
+        ts,
+        day,
+    )
     (
-        spark.createDataFrame(row, LOG_SCHEMA)
+        _log_row(spark, row)
         .coalesce(1)
         .write.mode("append")
         .partitionBy("log_date")
         .parquet(log_dir)
+    )
+
+
+def _log_row(spark: SparkSession, values: tuple | None = None) -> DataFrame:
+    """One ``LOG_SCHEMA`` row of ``values`` (all NULL when omitted) as
+    literals cast to the declared types, projected over a one-partition
+    range — the relation never leaves the JVM."""
+    schema = StructType.fromDDL(LOG_SCHEMA)
+    values = values or (None,) * len(schema.fields)
+    return spark.range(0, 1, 1, 1).select(
+        *[
+            F.lit(v).cast(f.dataType).alias(f.name)
+            for f, v in zip(schema.fields, values)
+        ]
     )
 
 
@@ -95,12 +114,14 @@ def _heal_log(log_dir: str) -> None:
 
 def load_ingest_log(spark: SparkSession, log_dir: str) -> DataFrame:
     """The audit table, ready for status queries (partition-pruned on
-    log_date). An empty/absent log (fresh deployment, or retention that
-    expired every day) reads as zero rows, not a schema-inference
-    error: the "did yesterday's load succeed" job must not die on the
-    day there is nothing to report. The empty fallback triggers only
-    when Spark itself cannot read the path, so remote (s3a/hdfs) logs
-    are read normally.
+    log_date), always typed as ``LOG_SCHEMA`` — ``log_date`` stays a
+    STRING rather than the DATE partition inference would make of it,
+    and no schema-inference job runs. An empty/absent log (fresh
+    deployment, or retention that expired every day) reads as zero
+    rows, not a schema-inference error: the "did yesterday's load
+    succeed" job must not die on the day there is nothing to report.
+    The empty fallback triggers only when Spark itself cannot read the
+    path, so remote (s3a/hdfs) logs are read normally.
 
     Readers do NOT heal crashed compaction swaps (that would race the
     maintainer's in-flight swap — see _heal_log): a day stranded by a
@@ -128,7 +149,7 @@ def load_ingest_log(spark: SparkSession, log_dir: str) -> DataFrame:
                 stacklevel=2,
             )
     try:
-        return spark.read.parquet(log_dir)
+        return spark.read.schema(LOG_SCHEMA).parquet(log_dir)
     except AnalysisException:
         # fall back to a typed zero-row log ONLY when the path is
         # genuinely absent or holds no day partitions (fresh deployment,
@@ -140,14 +161,12 @@ def load_ingest_log(spark: SparkSession, log_dir: str) -> DataFrame:
             e.startswith("log_date=") for e in os.listdir(log_dir)
         ):
             raise
-        return spark.createDataFrame([], LOG_SCHEMA)
+        return _log_row(spark).limit(0)
 
 
 def status_rollup(log: DataFrame) -> DataFrame:
     """Loads per (log_date, status): the reference's post-load probe
     (`2.2:389` "check log_for_loading for today's status")."""
-    from pyspark.sql import functions as F
-
     return (
         log.groupBy("log_date", "status")
         .agg(

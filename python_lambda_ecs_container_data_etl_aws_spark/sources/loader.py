@@ -13,8 +13,9 @@ Reference contract being re-expressed (cited, not copied):
 
 Spark shape: one PERMISSIVE read with a corrupt-record column; good
 rows are re-projected to canonical order (missing columns become
-typed NULLs, extras are dropped); bad rows go to quarantine. The
-count-compare commit gate is :func:`validate_counts`.
+typed NULLs, extras are dropped); bad rows go to quarantine. Source,
+bad and good row counts come from one aggregate over the cached scan.
+The count-compare commit gate is :func:`validate_counts`.
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ class IngestResult:
     quarantine: DataFrame
     src_rows: int
     bad_rows: int
+    good_rows: int
     accepted: bool
     raw: DataFrame | None = None  # the cached scan; release() when done
 
@@ -112,14 +114,20 @@ def read_csv_canonical(
             for c in spec.canonical_columns
         ]
     )
-    src_rows = raw.count()
-    bad_rows = bad.count()
+    # one aggregate over the cached scan (its first action fills the
+    # cache) yields every count the gates need
+    counts = raw.agg(
+        F.count(F.lit(1)).alias("src"),
+        F.count(F.col(CORRUPT_COL)).alias("bad"),
+        F.count(F.when(F.col(CORRUPT_COL).isNull(), 1)).alias("good"),
+    ).first()
     return IngestResult(
         good=projected,
         quarantine=bad,
-        src_rows=src_rows,
-        bad_rows=bad_rows,
-        accepted=bad_rows <= maxerrors,
+        src_rows=counts["src"],
+        bad_rows=counts["bad"],
+        good_rows=counts["good"],
+        accepted=counts["bad"] <= maxerrors,
         raw=raw,
     )
 

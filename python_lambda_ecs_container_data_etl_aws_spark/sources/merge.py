@@ -41,7 +41,7 @@ def upsert(perm: DataFrame, delta: DataFrame, keys: list[str]) -> DataFrame:
 
 def incremental_agg_merge(
     base: DataFrame,
-    retract: DataFrame,
+    retract: DataFrame | None,
     delta: DataFrame,
     keys: list[str],
     measures: list[str],
@@ -61,15 +61,16 @@ def incremental_agg_merge(
     names. Use exact types (DECIMAL sums, BIGINT counts) so the
     subtraction is exact — groups whose count reaches zero should be
     filtered by the caller (they have no surviving rows).
+
+    ``retract=None`` (a load that replaced no rows) skips the negated
+    branch rather than unioning an empty relation.
     """
-    neg = retract.select(
-        *keys, *[(-F.col(m)).alias(m) for m in measures]
-    )
-    merged = (
-        base.select(*keys, *measures)
-        .unionByName(neg)
-        .unionByName(delta.select(*keys, *measures))
-    )
+    merged = base.select(*keys, *measures)
+    if retract is not None:
+        merged = merged.unionByName(
+            retract.select(*keys, *[(-F.col(m)).alias(m) for m in measures])
+        )
+    merged = merged.unionByName(delta.select(*keys, *measures))
     return merged.groupBy(*keys).agg(
         *[F.sum(m).alias(m) for m in measures]
     )

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from . import archive as archive_mod
 from . import registry
 from .audit import log_ingest
-from .loader import IngestResult, read_csv_canonical, validate_counts
+from .loader import read_csv_canonical, validate_counts
 from .merge import upsert
 from .report import ReportSpec, aggregate_state, last_applied_marker, refresh_report
 
@@ -221,11 +221,7 @@ def ingest_file(
     file's rows, and the fact table is never re-scanned.
     """
 
-    res: IngestResult | None = None
-
     def _finish(report: IngestReport, rejected: bool = False) -> IngestReport:
-        if res is not None:
-            res.release()  # drop this file version's cached scan
         if log_dir:
             log_ingest(spark, log_dir, report)
         if rejected and on_reject is not None:
@@ -246,288 +242,301 @@ def ingest_file(
         )
 
     res = read_csv_canonical(spark, file_path, spec, maxerrors=maxerrors)
-    if quarantine_dir and res.bad_rows > 0:
-        (
-            res.quarantine.withColumn("source_file", F.lit(fname))
-            .write.mode("append")
-            .parquet(quarantine_dir)
-        )
-    if not res.accepted:
-        return _finish(
-            IngestReport(
-                file=fname,
-                route=spec.table,
-                bad_rows=res.bad_rows,
-                status="rejected",
-                detail=f"{res.bad_rows} bad rows > maxerrors={maxerrors}",
-            ),
-            rejected=True,
-        )
-
-    table_dir = os.path.join(warehouse_dir, spec.table)
-    # crashes interrupted mid-swap must be healed BEFORE the existence
-    # check and the merge's permanent-table scan below — otherwise this
-    # load would recreate the table from one delta (whole-table swap)
-    # or merge without a stranded bucket's rows (per-bucket swap)
-    _heal_unbucketed_swap(table_dir)
-    _heal_bucket_asides(table_dir)
-    # Per-file A2 gate, two halves:
-    #  - parse gate (the reference's maxerrors semantics): src rows
-    #    minus bad rows vs what the canonical read produced;
-    #  - write gate: the files THIS load physically wrote, read back
-    #    (parquet footers — no data scan), must hold the rows the plan
-    #    claimed. Comparing the plan against itself would be a
-    #    tautology; the read-back catches lost/partial writes, and
-    #    every count is bounded by the delta/touched buckets, never the
-    #    table.
-    loaded = res.good.count()
-    extras: dict = {}
-    write_ok = True
-
-    # Report maintenance ordering + crash recovery: the incremental
-    # refresh runs BEFORE the table swap (its retract state reads the
-    # pre-merge table) and carries a per-load marker, so the designed
-    # recovery — re-running the same file after a crash — converges:
-    # a crash before the refresh re-derives the same retract from the
-    # unchanged table; a crash after it (mid- or pre-swap) skips the
-    # already-applied refresh via the marker and the idempotent merge
-    # heals the table. The marker is a high-water guard for the
-    # immediate-retry case; re-running an OLD file after newer loads
-    # re-applies (use a bootstrap/recompute to repair — see below).
-    rdir = report_dir or table_dir + "__report"
-    # the marker id must distinguish a crash REPLAY of this physical
-    # file (same inode, same mtime — refresh already applied, skip)
-    # from a NEW drop that happens to reuse yesterday's filename and
-    # row counts (daily re-delivery with updated values — refresh must
-    # apply). Name+counts alone cannot tell those apart.
-    st = os.stat(file_path)
-    load_id = (
-        f"{fname}|{res.src_rows}|{res.bad_rows}|{st.st_size}|{st.st_mtime_ns}"
-    )
-    table_existed = os.path.isdir(table_dir)
-    # A missing report over a table WITH history (first enablement, or
-    # operational loss) cannot be folded incrementally — bootstrap by
-    # full recompute from the merged table after the swap instead.
-    bootstrap_report = (
-        report_spec is not None and table_existed and not os.path.isdir(rdir)
-    )
-
-    def _refresh_incremental(pre_merge: DataFrame | None) -> None:
-        if report_spec is None or bootstrap_report:
-            return
-        if last_applied_marker(rdir) == load_id:
-            return  # crash-recovery re-run: refresh already landed
-        retract = None
-        if pre_merge is not None:
-            replaced = pre_merge.join(
-                res.good.select(*keys).distinct(), keys, "left_semi"
-            )
-            retract = aggregate_state(replaced, report_spec)
-        refresh_report(
-            spark,
-            rdir,
-            report_spec,
-            delta_state=aggregate_state(res.good, report_spec),
-            retract_state=retract,
-            marker_batch_id=load_id,
-        )
-
-    if keys is not None:
-        # the bucket function is part of the table's physical layout:
-        # honoring a DIFFERENT n_buckets on a later load would hash the
-        # delta into buckets the existing rows don't occupy — the merge
-        # would never see the old copy of a key and the table would end
-        # up with duplicate keys, silently. The layout file wins; a
-        # keys mismatch rejects the load through the normal path (audit
-        # row + on_reject + cache release), like every other failure.
-        layout = _read_layout(table_dir) if table_existed else None
-        if layout is not None:
-            if list(layout["keys"]) != list(keys):
-                return _finish(
-                    IngestReport(
-                        file=fname,
-                        route=spec.table,
-                        bad_rows=res.bad_rows,
-                        status="rejected",
-                        detail=(
-                            f"table is bucketed on keys={layout['keys']}, "
-                            f"load requested keys={list(keys)}"
-                        ),
-                    ),
-                    rejected=True,
-                )
-            n_buckets = int(layout["n_buckets"])
-        elif table_existed and _is_bucketed(table_dir):
-            # pre-layout table: the caller's n_buckets is a CLAIM, not a
-            # record. Validate it against the stored bucket values once
-            # (one scan — a one-time migration event) before adopting it
-            # into .layout.json; a wrong claim rejected here is a
-            # re-runnable error, a wrong claim adopted is permanent
-            # silent duplicate-key corruption.
-            mismatched = (
-                spark.read.parquet(table_dir)
-                .filter(_bucket_expr(keys, n_buckets) != F.col(BUCKET_COL))
-                .limit(1)
-                .count()
-            )
-            if mismatched:
-                return _finish(
-                    IngestReport(
-                        file=fname,
-                        route=spec.table,
-                        bad_rows=res.bad_rows,
-                        status="rejected",
-                        detail=(
-                            f"existing bucket layout does not match "
-                            f"n_buckets={n_buckets}/keys={list(keys)}; pass "
-                            "the values the table was created with"
-                        ),
-                    ),
-                    rejected=True,
-                )
-        delta = res.good.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-        if loaded == 0:
-            # Empty accepted delta (header-only file, or every bad row
-            # quarantined within maxerrors): nothing to merge, and the
-            # staging overwrite below would hold no part files — the
-            # read-back verification would then die on parquet schema
-            # inference instead of reporting a clean zero-row load.
-            # Short-circuit: no write, no swap, no migration (a legacy
-            # unbucketed table migrates on its next non-empty load).
-            extras["persisted_rows"] = 0
-            extras["buckets_touched"] = 0
-        elif table_existed and _is_bucketed(table_dir):
-            # Bucket-scoped merge: only partitions the delta hashes into
-            # are read, merged, and swapped. Everything else: untouched.
-            touched = sorted(
-                r[BUCKET_COL]
-                for r in delta.select(BUCKET_COL).distinct().collect()
-            )
-            perm = spark.read.parquet(table_dir).filter(
-                F.col(BUCKET_COL).isin(touched)
-            )
-            _refresh_incremental(perm)
-            merged = upsert(perm, delta, keys).persist()
-            staging = table_dir + "__staging"
-            # cluster by bucket before the partitioned write: the merge
-            # join shuffles on the MERGE KEYS, so without this every
-            # write task holds rows of many buckets and each bucket dir
-            # gets one file per task — small-file accretion that at
-            # scale turns scans into file-open storms. One bucket → one
-            # task → one file.
+    # the cached CSV scan is released on every way out — a failed
+    # staging write, read-back or swap included
+    try:
+        if quarantine_dir and res.bad_rows > 0:
             (
-                merged.repartition(max(len(touched), 1), F.col(BUCKET_COL))
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(staging)
+                res.quarantine.withColumn("source_file", F.lit(fname))
+                .write.mode("append")
+                .parquet(quarantine_dir)
             )
-            expected = merged.count()  # cached — no join re-run
-            persisted = _count_parquet(spark, staging)
-            merged.unpersist()
-            write_ok = persisted == expected
-            extras["persisted_rows"] = persisted
-            if write_ok:
-                extras["buckets_touched"] = _swap_bucket_dirs(staging, table_dir)
-                if layout is None:
-                    _write_layout(table_dir, keys, n_buckets)  # legacy adopt
-            else:
-                # NEVER install a staging write that lost rows: the old
-                # buckets are the only good copy, and aborting here is
-                # fully recoverable (idempotent merge + marker retry)
-                shutil.rmtree(staging, ignore_errors=True)
+        if not res.accepted:
+            return _finish(
+                IngestReport(
+                    file=fname,
+                    route=spec.table,
+                    bad_rows=res.bad_rows,
+                    status="rejected",
+                    detail=f"{res.bad_rows} bad rows > maxerrors={maxerrors}",
+                ),
+                rejected=True,
+            )
+
+        table_dir = os.path.join(warehouse_dir, spec.table)
+        # crashes interrupted mid-swap must be healed BEFORE the existence
+        # check and the merge's permanent-table scan below — otherwise this
+        # load would recreate the table from one delta (whole-table swap)
+        # or merge without a stranded bucket's rows (per-bucket swap)
+        _heal_unbucketed_swap(table_dir)
+        _heal_bucket_asides(table_dir)
+        # Per-file A2 gate, two halves:
+        #  - parse gate (the reference's maxerrors semantics): src rows
+        #    minus bad rows vs the good rows the canonical read produced
+        #    (all three from the read's one counting pass);
+        #  - write gate: the files THIS load physically wrote, read back
+        #    (parquet footers — no data scan), must hold the rows the plan
+        #    claimed. Comparing the plan against itself would be a
+        #    tautology; the read-back catches lost/partial writes, and
+        #    every count is bounded by the delta/touched buckets, never the
+        #    table.
+        loaded = res.good_rows
+        extras: dict = {}
+        write_ok = True
+
+        # Report maintenance ordering + crash recovery: the incremental
+        # refresh runs BEFORE the table swap (its retract state reads the
+        # pre-merge table) and carries a per-load marker, so the designed
+        # recovery — re-running the same file after a crash — converges:
+        # a crash before the refresh re-derives the same retract from the
+        # unchanged table; a crash after it (mid- or pre-swap) skips the
+        # already-applied refresh via the marker and the idempotent merge
+        # heals the table. The marker is a high-water guard for the
+        # immediate-retry case; re-running an OLD file after newer loads
+        # re-applies (use a bootstrap/recompute to repair — see below).
+        rdir = report_dir or table_dir + "__report"
+        # the marker id must distinguish a crash REPLAY of this physical
+        # file (same inode, same mtime — refresh already applied, skip)
+        # from a NEW drop that happens to reuse yesterday's filename and
+        # row counts (daily re-delivery with updated values — refresh must
+        # apply). Name+counts alone cannot tell those apart.
+        st = os.stat(file_path)
+        load_id = (
+            f"{fname}|{res.src_rows}|{res.bad_rows}|{st.st_size}|{st.st_mtime_ns}"
+        )
+        table_existed = os.path.isdir(table_dir)
+        # A missing report over a table WITH history (first enablement, or
+        # operational loss) cannot be folded incrementally — bootstrap by
+        # full recompute from the merged table after the swap instead.
+        bootstrap_report = (
+            report_spec is not None and table_existed and not os.path.isdir(rdir)
+        )
+
+        def _refresh_incremental(pre_merge: DataFrame | None) -> None:
+            if report_spec is None or bootstrap_report:
+                return
+            if last_applied_marker(rdir) == load_id:
+                return  # crash-recovery re-run: refresh already landed
+            retract = None
+            if pre_merge is not None:
+                replaced = pre_merge.join(
+                    res.good.select(*keys).distinct(), keys, "left_semi"
+                )
+                retract = aggregate_state(replaced, report_spec)
+            refresh_report(
+                spark,
+                rdir,
+                report_spec,
+                delta_state=aggregate_state(res.good, report_spec),
+                retract_state=retract,
+                marker_batch_id=load_id,
+            )
+
+        if keys is not None:
+            # the bucket function is part of the table's physical layout:
+            # honoring a DIFFERENT n_buckets on a later load would hash the
+            # delta into buckets the existing rows don't occupy — the merge
+            # would never see the old copy of a key and the table would end
+            # up with duplicate keys, silently. The layout file wins; a
+            # keys mismatch rejects the load through the normal path (audit
+            # row + on_reject + cache release), like every other failure.
+            layout = _read_layout(table_dir) if table_existed else None
+            if layout is not None:
+                if list(layout["keys"]) != list(keys):
+                    return _finish(
+                        IngestReport(
+                            file=fname,
+                            route=spec.table,
+                            bad_rows=res.bad_rows,
+                            status="rejected",
+                            detail=(
+                                f"table is bucketed on keys={layout['keys']}, "
+                                f"load requested keys={list(keys)}"
+                            ),
+                        ),
+                        rejected=True,
+                    )
+                n_buckets = int(layout["n_buckets"])
+            elif table_existed and _is_bucketed(table_dir):
+                # pre-layout table: the caller's n_buckets is a CLAIM, not a
+                # record. Validate it against the stored bucket values once
+                # (one scan — a one-time migration event) before adopting it
+                # into .layout.json; a wrong claim rejected here is a
+                # re-runnable error, a wrong claim adopted is permanent
+                # silent duplicate-key corruption.
+                mismatched = (
+                    spark.read.parquet(table_dir)
+                    .filter(_bucket_expr(keys, n_buckets) != F.col(BUCKET_COL))
+                    .limit(1)
+                    .count()
+                )
+                if mismatched:
+                    return _finish(
+                        IngestReport(
+                            file=fname,
+                            route=spec.table,
+                            bad_rows=res.bad_rows,
+                            status="rejected",
+                            detail=(
+                                f"existing bucket layout does not match "
+                                f"n_buckets={n_buckets}/keys={list(keys)}; pass "
+                                "the values the table was created with"
+                            ),
+                        ),
+                        rejected=True,
+                    )
+            delta = res.good.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
+            if loaded == 0:
+                # Empty accepted delta (header-only file, or every bad row
+                # quarantined within maxerrors): nothing to merge, and the
+                # staging overwrite below would hold no part files — the
+                # read-back verification would then die on parquet schema
+                # inference instead of reporting a clean zero-row load.
+                # Short-circuit: no write, no swap, no migration (a legacy
+                # unbucketed table migrates on its next non-empty load).
+                extras["persisted_rows"] = 0
                 extras["buckets_touched"] = 0
+            elif table_existed and _is_bucketed(table_dir):
+                # Bucket-scoped merge: only partitions the delta hashes into
+                # are read, merged, and swapped. Everything else: untouched.
+                touched = sorted(
+                    r[BUCKET_COL]
+                    for r in delta.select(BUCKET_COL).distinct().collect()
+                )
+                perm = spark.read.parquet(table_dir).filter(
+                    F.col(BUCKET_COL).isin(touched)
+                )
+                _refresh_incremental(perm)
+                merged = upsert(perm, delta, keys).persist()
+                staging = table_dir + "__staging"
+                # cluster by bucket before the partitioned write: the merge
+                # join shuffles on the MERGE KEYS, so without this every
+                # write task holds rows of many buckets and each bucket dir
+                # gets one file per task — small-file accretion that at
+                # scale turns scans into file-open storms. One bucket → one
+                # task → one file.
+                try:
+                    (
+                        merged.repartition(max(len(touched), 1), F.col(BUCKET_COL))
+                        .write.mode("overwrite")
+                        .partitionBy(BUCKET_COL)
+                        .parquet(staging)
+                    )
+                    expected = merged.count()  # cached — no join re-run
+                finally:
+                    merged.unpersist()
+                persisted = _count_parquet(spark, staging)
+                write_ok = persisted == expected
+                extras["persisted_rows"] = persisted
+                if write_ok:
+                    extras["buckets_touched"] = _swap_bucket_dirs(staging, table_dir)
+                    if layout is None:
+                        _write_layout(table_dir, keys, n_buckets)  # legacy adopt
+                else:
+                    # NEVER install a staging write that lost rows: the old
+                    # buckets are the only good copy, and aborting here is
+                    # fully recoverable (idempotent merge + marker retry)
+                    shutil.rmtree(staging, ignore_errors=True)
+                    extras["buckets_touched"] = 0
+            else:
+                if table_existed:
+                    # legacy unbucketed layout: one-time migration
+                    old = spark.read.parquet(table_dir).withColumn(
+                        BUCKET_COL, _bucket_expr(keys, n_buckets)
+                    )
+                    _refresh_incremental(old)
+                    delta = upsert(old, delta, keys)
+                else:
+                    _refresh_incremental(None)
+                staging = table_dir + "__staging"
+                migrated = table_existed
+                if migrated:
+                    delta = delta.persist()
+                try:
+                    (
+                        delta.repartition(n_buckets, F.col(BUCKET_COL))
+                        .write.mode("overwrite")
+                        .partitionBy(BUCKET_COL)
+                        .parquet(staging)
+                    )
+                    # fresh table: delta rows == loaded by construction (the
+                    # bucket column adds no rows) — only the migration merge
+                    # needs its own expected count
+                    expected = delta.count() if migrated else loaded
+                finally:
+                    if migrated:
+                        delta.unpersist()
+                persisted = _count_parquet(spark, staging)
+                write_ok = persisted == expected
+                extras["persisted_rows"] = persisted
+                if write_ok:
+                    extras["buckets_touched"] = _swap_bucket_dirs(staging, table_dir)
+                    _write_layout(table_dir, keys, n_buckets)
+                else:
+                    shutil.rmtree(staging, ignore_errors=True)
+                    extras["buckets_touched"] = 0
         else:
-            if table_existed:
-                # legacy unbucketed layout: one-time migration
-                old = spark.read.parquet(table_dir).withColumn(
-                    BUCKET_COL, _bucket_expr(keys, n_buckets)
-                )
-                _refresh_incremental(old)
-                delta = upsert(old, delta, keys)
-            else:
-                _refresh_incremental(None)
-            staging = table_dir + "__staging"
-            migrated = table_existed
-            if migrated:
-                delta = delta.persist()
-            (
-                delta.repartition(n_buckets, F.col(BUCKET_COL))
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(staging)
+            _refresh_incremental(None)
+            before_files = (
+                {f for f in os.listdir(table_dir) if f.endswith(".parquet")}
+                if table_existed
+                else set()
             )
-            # fresh table: delta rows == loaded by construction (the
-            # bucket column adds no rows) — only the migration merge
-            # needs its own expected count
-            expected = delta.count() if migrated else loaded
-            persisted = _count_parquet(spark, staging)
-            if migrated:
-                delta.unpersist()
-            write_ok = persisted == expected
+            res.good.write.mode(
+                "append" if table_existed else "overwrite"
+            ).parquet(table_dir)
+            new_files = [
+                os.path.join(table_dir, f)
+                for f in os.listdir(table_dir)
+                if f.endswith(".parquet") and f not in before_files
+            ]
+            persisted = (
+                spark.read.parquet(*new_files).count() if new_files else 0
+            )
+            write_ok = persisted == loaded
             extras["persisted_rows"] = persisted
-            if write_ok:
-                extras["buckets_touched"] = _swap_bucket_dirs(staging, table_dir)
-                _write_layout(table_dir, keys, n_buckets)
-            else:
-                shutil.rmtree(staging, ignore_errors=True)
-                extras["buckets_touched"] = 0
-    else:
-        _refresh_incremental(None)
-        before_files = (
-            {f for f in os.listdir(table_dir) if f.endswith(".parquet")}
-            if table_existed
-            else set()
-        )
-        res.good.write.mode(
-            "append" if table_existed else "overwrite"
-        ).parquet(table_dir)
-        new_files = [
-            os.path.join(table_dir, f)
-            for f in os.listdir(table_dir)
-            if f.endswith(".parquet") and f not in before_files
-        ]
-        persisted = (
-            spark.read.parquet(*new_files).count() if new_files else 0
-        )
-        write_ok = persisted == loaded
-        extras["persisted_rows"] = persisted
-        if not write_ok:
-            # roll the append back to the pre-load state — a partial
-            # write must not linger in the live table
-            if table_existed:
-                for f in new_files:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-            else:
-                shutil.rmtree(table_dir, ignore_errors=True)
+            if not write_ok:
+                # roll the append back to the pre-load state — a partial
+                # write must not linger in the live table
+                if table_existed:
+                    for f in new_files:
+                        try:
+                            os.remove(f)
+                        except OSError:
+                            pass
+                else:
+                    shutil.rmtree(table_dir, ignore_errors=True)
 
-    if bootstrap_report:
-        merged_facts = spark.read.parquet(table_dir)
-        if BUCKET_COL in merged_facts.columns:
-            merged_facts = merged_facts.drop(BUCKET_COL)
-        refresh_report(
-            spark,
-            rdir,
-            report_spec,
-            delta_state=aggregate_state(merged_facts, report_spec),
-            marker_batch_id=load_id,
-        )
+        if bootstrap_report:
+            merged_facts = spark.read.parquet(table_dir)
+            if BUCKET_COL in merged_facts.columns:
+                merged_facts = merged_facts.drop(BUCKET_COL)
+            refresh_report(
+                spark,
+                rdir,
+                report_spec,
+                delta_state=aggregate_state(merged_facts, report_spec),
+                marker_batch_id=load_id,
+            )
 
-    ok = validate_counts(res.src_rows - res.bad_rows, loaded, maxerrors) and write_ok
-    report = IngestReport(
-        file=fname,
-        route=spec.table,
-        loaded_rows=loaded,
-        bad_rows=res.bad_rows,
-        status="ok" if ok else "count_mismatch",
-        detail="" if write_ok else "persisted rows != staged rows",
-        extras=extras,
-    )
-    if backup_dir:
-        archive_mod.archive_file(file_path, backup_dir)
-    return _finish(report)
+        ok = (
+            validate_counts(res.src_rows - res.bad_rows, loaded, maxerrors)
+            and write_ok
+        )
+        report = IngestReport(
+            file=fname,
+            route=spec.table,
+            loaded_rows=loaded,
+            bad_rows=res.bad_rows,
+            status="ok" if ok else "count_mismatch",
+            detail="" if write_ok else "persisted rows != staged rows",
+            extras=extras,
+        )
+        if backup_dir:
+            archive_mod.archive_file(file_path, backup_dir)
+        return _finish(report)
+    finally:
+        res.release()
 
 
 def stranded_asides(table_dir: str) -> list[str]:

@@ -119,11 +119,12 @@ def refresh_report(
     """
     _recover_dir(report_dir)
     if os.path.isdir(report_dir):
-        base = spark.read.parquet(report_dir)
-        if retract_state is None:
-            retract_state = spark.createDataFrame([], base.schema)
         state = incremental_agg_merge(
-            base, retract_state, delta_state, list(spec.group_keys), spec.measures
+            spark.read.parquet(report_dir),
+            retract_state,
+            delta_state,
+            list(spec.group_keys),
+            spec.measures,
         )
     else:
         state = delta_state

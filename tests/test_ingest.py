@@ -8,15 +8,29 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
+from pyspark.sql.types import StructType
 
 from python_lambda_ecs_container_data_etl_aws_spark.catalog import load_table
 from python_lambda_ecs_container_data_etl_aws_spark.export import export_report_csv
 from python_lambda_ecs_container_data_etl_aws_spark.sources import archive, chunking, merge, registry
+from python_lambda_ecs_container_data_etl_aws_spark.sources.audit import (
+    LOG_SCHEMA,
+    expire_log,
+    load_ingest_log,
+    log_ingest,
+)
 from python_lambda_ecs_container_data_etl_aws_spark.sources.loader import (
     read_csv_canonical,
     validate_counts,
 )
+from python_lambda_ecs_container_data_etl_aws_spark.sources.pipeline import (
+    IngestReport,
+    ingest_file,
+)
+from python_lambda_ecs_container_data_etl_aws_spark.sources.report import ReportSpec, read_report
 from tests.conftest import SF_DIR
 
 HEADER = ",".join(registry.PRICEINDEX.canonical_columns)
@@ -293,3 +307,161 @@ def test_export_report_json_roundtrip(spark, tmp_path):
     assert len(rows) == 2
     back = spark.read.json(str(tmp_path / "rep_json_gz"))
     assert back.count() == 2
+
+
+# --------------------------------------------------------------------
+# The ingest → audit → report write path stays inside the JVM.
+
+REPORT_SPEC = ReportSpec(
+    group_keys=("GEO",),
+    sums=(("value_sum", "CAST(VALUE AS DECIMAL(18,4))"),),
+)
+
+
+def _price_row(dguid: str, value: str, geo: str = "Canada") -> str:
+    return f"2023-01-01,{geo},{dguid},food,u,1,f,2,v,c,{value},ok,,n,1"
+
+
+def _ingest_keyed(spark, path, wh, log_dir):
+    return ingest_file(
+        spark,
+        path,
+        wh,
+        keys=["DGUID"],
+        n_buckets=8,
+        log_dir=log_dir,
+        report_spec=REPORT_SPEC,
+    )
+
+
+def _bucketed_table_and_delta(spark, tmp_path):
+    """A 20-row bucketed priceindex table with a maintained report and
+    an audit log, and a keyed delta (3 updates that move GEO, 2
+    inserts) waiting to be ingested into it."""
+    wh, log_dir = str(tmp_path / "wh"), str(tmp_path / "log")
+    base = _write_csv(
+        tmp_path,
+        "PriceIndex_base.csv",
+        [HEADER] + [_price_row(f"D{i}", f"{i}.5") for i in range(20)],
+    )
+    assert _ingest_keyed(spark, base, wh, log_dir).status == "ok"
+    delta = _write_csv(
+        tmp_path,
+        "PriceIndex_delta.csv",
+        [HEADER]
+        + [_price_row(f"D{i}", "9.0", "Quebec") for i in (1, 2, 3)]
+        + [_price_row(f"N{i}", "1.0") for i in range(2)],
+    )
+    return wh, log_dir, delta
+
+
+def _jobs_so_far(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def test_keyed_delta_builds_no_relation_from_python_rows(spark, tmp_path, monkeypatch):
+    """Every relation on the ingest → audit → report path of an accepted
+    keyed delta is built JVM-side: ``createDataFrame`` over Python-local
+    rows starts a Python worker, which costs more than the one-row
+    audit append itself."""
+    wh, log_dir, delta = _bucketed_table_and_delta(spark, tmp_path)
+
+    def _local_rows(*args, **kwargs):
+        raise AssertionError("relation built from Python-local rows")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", _local_rows)
+    rep = _ingest_keyed(spark, delta, wh, log_dir)
+    monkeypatch.undo()
+
+    assert (rep.status, rep.loaded_rows, rep.bad_rows) == ("ok", 5, 0)
+    report = {
+        r.GEO: (r.n_rows, float(r.value_sum))
+        for r in read_report(spark, os.path.join(wh, "priceindex__report")).collect()
+    }
+    moved = sum(i + 0.5 for i in (1, 2, 3))
+    assert report == {
+        "Canada": (19, sum(i + 0.5 for i in range(20)) - moved + 2.0),
+        "Quebec": (3, 27.0),
+    }
+    log = load_ingest_log(spark, log_dir).collect()
+    assert sorted((r.file, r.loaded_rows, r.status) for r in log) == [
+        ("PriceIndex_base.csv", 20, "ok"),
+        ("PriceIndex_delta.csv", 5, "ok"),
+    ]
+
+
+def test_keyed_delta_job_count_is_pinned(spark, tmp_path):
+    """Spark jobs for one accepted keyed delta into an existing bucketed
+    table, with the audit log and the maintained report on: 25. It was
+    29 when the read counted source and bad rows with two actions and
+    the pipeline counted good rows with a third. A rise here is a new
+    eager action on the per-file path."""
+    wh, log_dir, delta = _bucketed_table_and_delta(spark, tmp_path)
+    before = _jobs_so_far(spark)
+    rep = _ingest_keyed(spark, delta, wh, log_dir)
+    jobs = _jobs_so_far(spark) - before
+    assert rep.status == "ok"
+    assert jobs == 25
+
+
+def test_audit_row_round_trips_quoted_non_ascii_file_name(spark, tmp_path):
+    """File names come from outside the program: quotes, commas and
+    non-ASCII characters land in the audit row verbatim, typed as
+    ``LOG_SCHEMA`` declares."""
+    log_dir = str(tmp_path / "log")
+    name = "Prix l'indice, \"été\" — Québec.csv"
+    log_ingest(
+        spark,
+        log_dir,
+        IngestReport(
+            file=name, route="priceindex", loaded_rows=7, bad_rows=2,
+            status="ok", detail="it's, fine",
+        ),
+        now_us=1_700_000_000_000_000,
+    )
+    log = load_ingest_log(spark, log_dir)
+    assert log.schema == StructType.fromDDL(LOG_SCHEMA)
+    assert [tuple(r) for r in log.collect()] == [
+        (
+            name, "priceindex", 7, 2, "ok", "it's, fine",
+            1_700_000_000_000_000, "2023-11-14",
+        )
+    ]
+
+
+def test_ingest_log_schema_is_declared_empty_or_not(spark, tmp_path):
+    """An empty log and a non-empty one read with the same schema:
+    ``LOG_SCHEMA``, with ``log_date`` a STRING — not the DATE partition
+    inference makes of a non-empty log's directory names."""
+    want = StructType.fromDDL(LOG_SCHEMA)
+    log_dir = str(tmp_path / "log")
+    assert load_ingest_log(spark, log_dir).schema == want  # absent path
+    log_ingest(
+        spark, log_dir, IngestReport(file="a.csv", route="t", loaded_rows=1),
+        now_us=1_700_000_000_000_000,
+    )
+    log = load_ingest_log(spark, log_dir)
+    assert log.schema == want
+    assert log.collect()[0].log_date == "2023-11-14"
+    expire_log(log_dir, keep_after="9999-01-01")
+    emptied = load_ingest_log(spark, log_dir)  # dir left, no day partitions
+    assert emptied.schema == want and emptied.count() == 0
+
+
+def test_failed_staging_write_releases_cached_relations(spark, tmp_path, monkeypatch):
+    """A staging write that raises mid-ingest must not strand the cached
+    CSV scan or the persisted merge result in the session."""
+    wh, log_dir, delta = _bucketed_table_and_delta(spark, tmp_path)
+    real_parquet = DataFrameWriter.parquet
+
+    def _parquet(self, path, *args, **kwargs):
+        if os.path.basename(path) == "priceindex__staging":
+            raise OSError("staging volume full")
+        return real_parquet(self, path, *args, **kwargs)
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(DataFrameWriter, "parquet", _parquet)
+    with pytest.raises(OSError, match="staging volume full"):
+        _ingest_keyed(spark, delta, wh, log_dir)
+    monkeypatch.undo()
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
