@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from . import swap
+
 if TYPE_CHECKING:  # pragma: no cover - import cycle guard (typing only)
     from .pipeline import IngestReport
 
@@ -46,9 +48,9 @@ def log_ingest(
     """Append one audit row for ``report``. ``now_us`` is injectable for
     deterministic tests; defaults to wall-clock."""
     # the write path is a maintenance entry point (single-maintainer
-    # contract), so it is the safe place to heal a crashed compaction
-    # swap — readers must not (see _heal_log)
-    _heal_log(log_dir)
+    # contract, sources/swap.py), so it is the safe place to heal a
+    # crashed compaction swap — readers must not
+    swap.heal_children(log_dir)
     ts = int(time.time_ns() // 1000) if now_us is None else int(now_us)
     day = _dt.datetime.fromtimestamp(ts / 1e6, tz=_dt.timezone.utc).date().isoformat()
     row = (
@@ -84,34 +86,6 @@ def _log_row(spark: SparkSession, values: tuple | None = None) -> DataFrame:
     )
 
 
-def _heal_log(log_dir: str) -> None:
-    """Recover any day partition stranded by a compaction crash (live
-    dir renamed aside, staging never renamed in). Partition discovery
-    skips the dot-prefixed aside, so without this an interrupted
-    compact_log silently removes a whole day from every status query
-    until the next maintenance pass heals it. Runs ONLY from the
-    maintenance entry points (log_ingest, compact_log, expire_log) —
-    never from readers: a status query healing mid-swap would rmtree
-    the maintainer's live staging or restore an aside it is about to
-    drop. Single-maintainer contract (same as compact_log: closed
-    days, no concurrent maintenance)."""
-    import os
-    import shutil
-
-    if not os.path.isdir(log_dir):
-        return
-    for entry in list(os.listdir(log_dir)):
-        path = os.path.join(log_dir, entry)
-        if entry.startswith(".log_date=") and entry.endswith("__old"):
-            live = os.path.join(log_dir, entry[1 : -len("__old")])
-            if not os.path.isdir(live):
-                os.rename(path, live)
-            else:
-                shutil.rmtree(path, ignore_errors=True)
-        elif entry.startswith(".log_date=") and entry.endswith("__staging"):
-            shutil.rmtree(path, ignore_errors=True)
-
-
 def load_ingest_log(spark: SparkSession, log_dir: str) -> DataFrame:
     """The audit table, ready for status queries (partition-pruned on
     log_date), always typed as ``LOG_SCHEMA`` — ``log_date`` stays a
@@ -124,30 +98,25 @@ def load_ingest_log(spark: SparkSession, log_dir: str) -> DataFrame:
     path, so remote (s3a/hdfs) logs are read normally.
 
     Readers do NOT heal crashed compaction swaps (that would race the
-    maintainer's in-flight swap — see _heal_log): a day stranded by a
-    compaction crash reads as ZERO rows for that day until the next
-    log_ingest / compact_log / expire_log heals it — so stranded
-    dot-prefixed day asides trigger a warning here, making the partial
-    read observable without mutating the log dir."""
+    maintainer's in-flight swap — see sources/swap.py): a day stranded
+    by a compaction crash reads as ZERO rows for that day until the
+    next log_ingest / compact_log / expire_log heals it — so stranded
+    day asides trigger a warning here, making the partial read
+    observable without mutating the log dir."""
     import os
     import warnings
 
     from pyspark.errors import AnalysisException
 
-    if os.path.isdir(log_dir):
-        stranded = sorted(
-            e
-            for e in os.listdir(log_dir)
-            if e.startswith(".log_date=") and e.endswith("__old")
+    stranded = swap.stranded_asides(log_dir)
+    if stranded:
+        warnings.warn(
+            f"ingest log has {len(stranded)} day partition(s) stranded "
+            f"by a crashed compaction ({stranded[0]}...); those days "
+            "read as zero rows until the next maintenance pass heals "
+            "them",
+            stacklevel=2,
         )
-        if stranded:
-            warnings.warn(
-                f"ingest log has {len(stranded)} day partition(s) stranded "
-                f"by a crashed compaction ({stranded[0]}...); those days "
-                "read as zero rows until the next maintenance pass heals "
-                "them",
-                stacklevel=2,
-            )
     try:
         return spark.read.schema(LOG_SCHEMA).parquet(log_dir)
     except AnalysisException:
@@ -180,8 +149,8 @@ def status_rollup(log: DataFrame) -> DataFrame:
 
 def compact_log(spark: SparkSession, log_dir: str, log_date: str) -> int:
     """Compact one closed ``log_date`` partition: N one-row appended
-    files → one file, atomically swapped in. The nightly small-file
-    maintenance the module docstring promises — every `ingest_file`
+    files → one file, installed by the crash-safe swap. The nightly
+    small-file maintenance the module docstring promises — every `ingest_file`
     appends one tiny parquet file per outcome, which is the right write
     path (no read-modify-write on the hot log) but leaves day
     partitions made of thousands of 1-row files. Returns the number of
@@ -195,13 +164,12 @@ def compact_log(spark: SparkSession, log_dir: str, log_date: str) -> int:
     import shutil
 
     part = os.path.join(log_dir, f"log_date={log_date}")
-    # both work dirs are DOT-prefixed so partition discovery never sees
-    # them — an un-prefixed leftover would parse as a malformed
-    # log_date value and break every later read
-    aside = os.path.join(log_dir, f".log_date={log_date}__old")
+    # staging is DOT-prefixed so partition discovery never sees it — an
+    # un-prefixed leftover would parse as a malformed log_date value and
+    # break every later read
     staging = os.path.join(log_dir, f".log_date={log_date}__staging")
     # heal crashes for EVERY day, not just this one
-    _heal_log(log_dir)
+    swap.heal_children(log_dir)
     if not os.path.isdir(part):
         return 0
     shutil.rmtree(staging, ignore_errors=True)
@@ -218,10 +186,7 @@ def compact_log(spark: SparkSession, log_dir: str, log_date: str) -> int:
             f"compact_log aborted: staging holds {persisted} rows for "
             f"log_date={log_date}, expected {n}; live partition untouched"
         )
-    shutil.rmtree(aside, ignore_errors=True)
-    os.rename(part, aside)
-    os.rename(staging, part)
-    shutil.rmtree(aside, ignore_errors=True)
+    swap.swap(staging, part)
     return n
 
 
@@ -236,7 +201,7 @@ def expire_log(log_dir: str, keep_after: str) -> list[str]:
     dropped = []
     if not os.path.isdir(log_dir):
         return dropped
-    _heal_log(log_dir)  # restore crashed swaps so retention sees them
+    swap.heal_children(log_dir)  # restore crashed swaps so retention sees them
     for entry in sorted(os.listdir(log_dir)):
         if not entry.startswith("log_date="):
             continue

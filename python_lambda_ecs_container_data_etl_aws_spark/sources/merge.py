@@ -5,8 +5,6 @@ insert; unmatched permanent rows persist.
 
 Plain-Parquet strategy: full-outer join + coalesce (delta side first),
 written by deterministic partition overwrite for idempotency (ST3).
-On Delta/Iceberg this is literally ``MERGE INTO`` — the API here is the
-seam where that upgrade lands.
 """
 
 from __future__ import annotations
@@ -75,31 +73,3 @@ def incremental_agg_merge(
         *[F.sum(m).alias(m) for m in measures]
     )
 
-
-def upsert_delta(spark, table_path: str, delta: DataFrame, keys: list[str]) -> None:
-    """The same upsert contract executed as a Delta Lake ``MERGE INTO``
-    — the documented upgrade seam (SURVEY §7): transactional, no
-    staging-dir swap, and conflict-safe under concurrent writers.
-    Matched rows take every delta column (delta wins, NULLs included,
-    same as :func:`upsert`); unmatched delta rows insert.
-
-    Requires the ``delta-spark`` package and a session built with the
-    Delta SQL extension; raises ``NotImplementedError`` when the
-    package is absent (this sandbox ships without it — the pytest that
-    proves plain/Delta parity is importorskip-gated and runs wherever
-    delta-spark exists)."""
-    try:
-        from delta.tables import DeltaTable  # type: ignore
-    except ImportError as exc:  # pragma: no cover - absent in sandbox
-        raise NotImplementedError(
-            "delta-spark is not installed; use upsert() on plain parquet"
-        ) from exc
-    dt = DeltaTable.forPath(spark, table_path)
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    (
-        dt.alias("t")
-        .merge(delta.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )

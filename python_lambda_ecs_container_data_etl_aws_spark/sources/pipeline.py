@@ -18,9 +18,9 @@ it can touch. The merge then
      are never scanned),
   2. upserts the delta into that bounded subset,
   3. writes the result to a staging dir and swaps each touched bucket
-     directory in with an atomic rename (crash mid-swap leaves every
-     bucket either fully old or fully new — never destroyed; at worst a
-     recoverable ``*__old`` dir lingers).
+     directory in through the crash-safe swap (sources/swap.py): a crash
+     mid-swap leaves every bucket either fully old or fully new, never
+     destroyed.
 Cost per arriving file is proportional to the delta's bucket fanout,
 NOT the table size — the property that keeps a 5 MiB file from
 rewriting a 100 TB table. On Delta/Iceberg steps 2-3 collapse into
@@ -43,11 +43,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import archive as archive_mod
-from . import registry
+from . import registry, swap
 from .audit import log_ingest
 from .loader import read_csv_canonical, validate_counts
 from .merge import upsert
 from .report import ReportSpec, aggregate_state, last_applied_marker, refresh_report
+from .swap import stranded_asides
 
 BUCKET_COL = "__bucket"
 
@@ -79,60 +80,14 @@ def _count_parquet(spark: SparkSession, path: str) -> int:
     return spark.read.parquet(path).count()
 
 
-def _heal_bucket_asides(table_dir: str) -> None:
-    """Recover buckets stranded by a crash inside the per-bucket swap
-    (bucket renamed aside, staged copy never renamed in): restore the
-    aside as the live bucket when the live dir is missing — deleting it
-    unconditionally would destroy the only surviving copy, since the
-    staged copy is overwritten by the next load's staging write. Runs
-    BEFORE any read of the permanent table (the merge's perm scan must
-    see the restored rows) and before every swap."""
-    if not os.path.isdir(table_dir):
-        return
-    for entry in list(os.listdir(table_dir)):
-        if entry.startswith(".") and entry.endswith("__old"):
-            live = os.path.join(table_dir, entry[1 : -len("__old")])
-            aside = os.path.join(table_dir, entry)
-            if not os.path.isdir(live):
-                os.rename(aside, live)
-            else:
-                shutil.rmtree(aside, ignore_errors=True)
-        elif entry.endswith(_LAYOUT_FILE + ".tmp"):
-            # a crash between writing and os.replace of the layout tmp
-            try:
-                os.remove(os.path.join(table_dir, entry))
-            except OSError:
-                pass
-
-
-def _swap_bucket_dirs(staging_dir: str, table_dir: str) -> int:
-    """Atomically move every ``__bucket=*`` dir from staging into the
-    table: rename old aside → rename new in → drop old. Each bucket
-    flips in one rename; a crash leaves buckets fully-old or fully-new.
-
-    The aside name is DOT-prefixed (``.__bucket=k__old``): Spark's file
-    index skips '.'/'_'-prefixed paths, so a crash-leftover aside dir is
-    invisible to partition discovery — an un-prefixed leftover would
-    parse as a malformed partition value and fail every later read."""
-    os.makedirs(table_dir, exist_ok=True)
-    # heal leftovers from any previously interrupted swap (all buckets,
-    # not just the ones this delta touches) — restore-or-scrub, never
-    # blind delete
-    _heal_bucket_asides(table_dir)
-    n = 0
-    for entry in sorted(os.listdir(staging_dir)):
-        if not entry.startswith(f"{BUCKET_COL}="):
-            continue
-        src = os.path.join(staging_dir, entry)
-        dst = os.path.join(table_dir, entry)
-        old = os.path.join(table_dir, "." + entry + "__old")
-        if os.path.isdir(dst):
-            os.rename(dst, old)
-        os.rename(src, dst)
-        shutil.rmtree(old, ignore_errors=True)
-        n += 1
-    shutil.rmtree(staging_dir, ignore_errors=True)
-    return n
+def _heal(table_dir: str) -> None:
+    """Crash recovery for a permanent table, run by its maintenance
+    entry points before anything reads or recreates it: the
+    whole-table aside of an unbucketed compaction, every bucket aside,
+    and the scratch of an interrupted compaction."""
+    swap.heal(table_dir)
+    swap.heal_children(table_dir)
+    shutil.rmtree(table_dir + "__compact", ignore_errors=True)
 
 
 def _is_bucketed(table_dir: str) -> bool:
@@ -159,31 +114,6 @@ def _write_layout(table_dir: str, keys: list[str], n_buckets: int) -> None:
     with open(tmp, "w") as fh:
         json.dump({"keys": list(keys), "n_buckets": int(n_buckets)}, fh)
     os.replace(tmp, os.path.join(table_dir, _LAYOUT_FILE))
-
-
-def _aside_dir(table_dir: str) -> str:
-    parent, base = os.path.split(os.path.abspath(table_dir))
-    return os.path.join(parent, "." + base + "__old")
-
-
-def _heal_unbucketed_swap(table_dir: str) -> None:
-    """Recover from a crash inside the whole-table compaction swap.
-
-    Crash window state: the live dir was renamed aside but staging was
-    never renamed in — the path is missing while ``.{table}__old``
-    holds every row. Restore the aside dir as the live table (the
-    interrupted compaction simply retries later) and scrub any stale
-    staging; if the swap completed (live dir present), scrub leftovers.
-    Without this, the next keyless ingest would see a missing table and
-    silently recreate it from one delta while the full history sat
-    forever in a hidden sibling."""
-    aside = _aside_dir(table_dir)
-    if os.path.isdir(aside):
-        if not os.path.isdir(table_dir):
-            os.rename(aside, table_dir)
-        else:
-            shutil.rmtree(aside, ignore_errors=True)
-    shutil.rmtree(table_dir + "__compact", ignore_errors=True)
 
 
 def ingest_file(
@@ -268,8 +198,7 @@ def ingest_file(
         # check and the merge's permanent-table scan below — otherwise this
         # load would recreate the table from one delta (whole-table swap)
         # or merge without a stranded bucket's rows (per-bucket swap)
-        _heal_unbucketed_swap(table_dir)
-        _heal_bucket_asides(table_dir)
+        _heal(table_dir)
         # Per-file A2 gate, two halves:
         #  - parse gate (the reference's maxerrors semantics): src rows
         #    minus bad rows vs the good rows the canonical read produced
@@ -341,6 +270,7 @@ def ingest_file(
             # keys mismatch rejects the load through the normal path (audit
             # row + on_reject + cache release), like every other failure.
             layout = _read_layout(table_dir) if table_existed else None
+            bucketed = table_existed and _is_bucketed(table_dir)
             if layout is not None:
                 if list(layout["keys"]) != list(keys):
                     return _finish(
@@ -357,7 +287,7 @@ def ingest_file(
                         rejected=True,
                     )
                 n_buckets = int(layout["n_buckets"])
-            elif table_existed and _is_bucketed(table_dir):
+            elif bucketed:
                 # pre-layout table: the caller's n_buckets is a CLAIM, not a
                 # record. Validate it against the stored bucket values once
                 # (one scan — a one-time migration event) before adopting it
@@ -396,18 +326,33 @@ def ingest_file(
                 # unbucketed table migrates on its next non-empty load).
                 extras["persisted_rows"] = 0
                 extras["buckets_touched"] = 0
-            elif table_existed and _is_bucketed(table_dir):
-                # Bucket-scoped merge: only partitions the delta hashes into
-                # are read, merged, and swapped. Everything else: untouched.
-                touched = sorted(
-                    r[BUCKET_COL]
-                    for r in delta.select(BUCKET_COL).distinct().collect()
-                )
-                perm = spark.read.parquet(table_dir).filter(
-                    F.col(BUCKET_COL).isin(touched)
-                )
+            else:
+                # One write path for every non-empty keyed load. Only the
+                # permanent-side relation and the partition count differ:
+                #  - bucketed table: just the buckets the delta hashes
+                #    into are read, merged and swapped; the rest stay
+                #    untouched;
+                #  - legacy unbucketed table: a one-time migration of
+                #    the whole table into n_buckets buckets;
+                #  - fresh table: the delta alone.
+                if bucketed:
+                    touched = sorted(
+                        r[BUCKET_COL]
+                        for r in delta.select(BUCKET_COL).distinct().collect()
+                    )
+                    perm = spark.read.parquet(table_dir).filter(
+                        F.col(BUCKET_COL).isin(touched)
+                    )
+                    n_parts = max(len(touched), 1)
+                elif table_existed:
+                    perm = spark.read.parquet(table_dir).withColumn(
+                        BUCKET_COL, _bucket_expr(keys, n_buckets)
+                    )
+                    n_parts = n_buckets
+                else:
+                    perm, n_parts = None, n_buckets
                 _refresh_incremental(perm)
-                merged = upsert(perm, delta, keys).persist()
+                merged = delta if perm is None else upsert(perm, delta, keys).persist()
                 staging = table_dir + "__staging"
                 # cluster by bucket before the partitioned write: the merge
                 # join shuffles on the MERGE KEYS, so without this every
@@ -417,62 +362,31 @@ def ingest_file(
                 # task → one file.
                 try:
                     (
-                        merged.repartition(max(len(touched), 1), F.col(BUCKET_COL))
+                        merged.repartition(n_parts, F.col(BUCKET_COL))
                         .write.mode("overwrite")
                         .partitionBy(BUCKET_COL)
                         .parquet(staging)
                     )
-                    expected = merged.count()  # cached — no join re-run
+                    # a fresh table's rows == loaded by construction (the
+                    # bucket column adds no rows); a merge counts its cached
+                    # result — no join re-run
+                    expected = loaded if perm is None else merged.count()
                 finally:
-                    merged.unpersist()
+                    if perm is not None:
+                        merged.unpersist()
                 persisted = _count_parquet(spark, staging)
                 write_ok = persisted == expected
                 extras["persisted_rows"] = persisted
                 if write_ok:
-                    extras["buckets_touched"] = _swap_bucket_dirs(staging, table_dir)
+                    extras["buckets_touched"] = swap.swap_children(
+                        staging, table_dir, f"{BUCKET_COL}="
+                    )
                     if layout is None:
-                        _write_layout(table_dir, keys, n_buckets)  # legacy adopt
+                        _write_layout(table_dir, keys, n_buckets)
                 else:
                     # NEVER install a staging write that lost rows: the old
                     # buckets are the only good copy, and aborting here is
                     # fully recoverable (idempotent merge + marker retry)
-                    shutil.rmtree(staging, ignore_errors=True)
-                    extras["buckets_touched"] = 0
-            else:
-                if table_existed:
-                    # legacy unbucketed layout: one-time migration
-                    old = spark.read.parquet(table_dir).withColumn(
-                        BUCKET_COL, _bucket_expr(keys, n_buckets)
-                    )
-                    _refresh_incremental(old)
-                    delta = upsert(old, delta, keys)
-                else:
-                    _refresh_incremental(None)
-                staging = table_dir + "__staging"
-                migrated = table_existed
-                if migrated:
-                    delta = delta.persist()
-                try:
-                    (
-                        delta.repartition(n_buckets, F.col(BUCKET_COL))
-                        .write.mode("overwrite")
-                        .partitionBy(BUCKET_COL)
-                        .parquet(staging)
-                    )
-                    # fresh table: delta rows == loaded by construction (the
-                    # bucket column adds no rows) — only the migration merge
-                    # needs its own expected count
-                    expected = delta.count() if migrated else loaded
-                finally:
-                    if migrated:
-                        delta.unpersist()
-                persisted = _count_parquet(spark, staging)
-                write_ok = persisted == expected
-                extras["persisted_rows"] = persisted
-                if write_ok:
-                    extras["buckets_touched"] = _swap_bucket_dirs(staging, table_dir)
-                    _write_layout(table_dir, keys, n_buckets)
-                else:
                     shutil.rmtree(staging, ignore_errors=True)
                     extras["buckets_touched"] = 0
         else:
@@ -539,23 +453,6 @@ def ingest_file(
         res.release()
 
 
-def stranded_asides(table_dir: str) -> list[str]:
-    """Mutation-free detection of crash-window swap leftovers: the
-    whole-table aside (sibling ``.<table>__old``) and any per-bucket
-    asides (dot-prefixed ``*__old`` entries inside the table dir).
-    A non-empty result means the live table is silently PARTIAL until
-    the next maintenance entry point heals it."""
-    out = []
-    parent_aside = _aside_dir(table_dir)
-    if os.path.isdir(parent_aside):
-        out.append(parent_aside)
-    if os.path.isdir(table_dir):
-        for entry in sorted(os.listdir(table_dir)):
-            if entry.startswith(".") and entry.endswith("__old"):
-                out.append(os.path.join(table_dir, entry))
-    return out
-
-
 def read_permanent(
     spark: SparkSession, warehouse_dir: str, table: str, strict: bool = False
 ) -> DataFrame:
@@ -605,25 +502,20 @@ def compact_table(
     read (partition pruning keeps every healthy bucket untouched — same
     contract as the merge itself); each is rewritten as one file per
     bucket (``repartition(n, bucket)`` maps a bucket to exactly one
-    task) and swapped in atomically via the same rename protocol as
-    ingest, so a crash mid-compaction never loses a bucket. Returns the
-    number of buckets compacted.
+    task) and swapped in through the same crash-safe swap as ingest
+    (sources/swap.py), so a crash mid-compaction never loses a bucket.
+    Returns the number of buckets compacted.
 
     Unbucketed tables (the keyless append path — one new file per
     appended load) compact as a whole: rewrite to ``max_files_per_bucket``
-    files in staging, then rename the live dir aside and the staging
-    dir in. A crash between those two renames leaves the table
-    recoverable in the aside dir; :func:`_heal_unbucketed_swap` (run on
-    entry here AND by ``ingest_file``) restores it before anything else
-    reads or recreates the path — so the swap is crash-SAFE (never
-    loses data), though not single-rename atomic like the per-bucket
-    protocol.
+    files in staging, then swap the whole table dir. A crash inside the
+    swap is healed on entry here AND by ``ingest_file`` before anything
+    else reads or recreates the path.
 
     The audit-log twin is :func:`audit.compact_log` (date-partitioned);
     this one owns the ingest pipeline's permanent tables.
     """
-    _heal_unbucketed_swap(table_dir)
-    _heal_bucket_asides(table_dir)
+    _heal(table_dir)
     if not os.path.isdir(table_dir):
         return 0
     if not _is_bucketed(table_dir):
@@ -649,11 +541,7 @@ def compact_table(
                 f"compact_table aborted: staging holds {persisted} rows, "
                 f"expected {expected}; live table left untouched"
             )
-        aside = _aside_dir(table_dir)
-        shutil.rmtree(aside, ignore_errors=True)
-        os.rename(table_dir, aside)
-        os.rename(staging, table_dir)
-        shutil.rmtree(aside, ignore_errors=True)
+        swap.swap(staging, table_dir)
         return 1
     todo: list[int] = []
     for entry in sorted(os.listdir(table_dir)):
@@ -689,4 +577,4 @@ def compact_table(
             f"compact_table aborted: staging holds {persisted} rows for "
             f"buckets {todo}, expected {expected}; live buckets untouched"
         )
-    return _swap_bucket_dirs(staging, table_dir)
+    return swap.swap_children(staging, table_dir, f"{BUCKET_COL}=")

@@ -12,20 +12,21 @@ delta: ``new = base − retract + delta`` per group
 (merge.incremental_agg_merge). Cost scales with the delta and the
 number of groups, never the fact table.
 
-The report table itself is |groups|-sized, so a full atomic rewrite of
-the report directory per refresh is the cheap part; the win is never
-re-scanning the facts.
+The report table itself is |groups|-sized, so a full rewrite of the
+report directory per refresh, installed by the crash-safe swap
+(sources/swap.py), is the cheap part; the win is never re-scanning the
+facts.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import swap
 from .merge import incremental_agg_merge
 
 
@@ -57,37 +58,6 @@ def aggregate_state(df: DataFrame, spec: ReportSpec) -> DataFrame:
     )
 
 
-def _aside_of(final: str) -> str:
-    parent, name = os.path.split(final.rstrip("/"))
-    return os.path.join(parent, f".{name}__old")
-
-
-def _recover_dir(final: str) -> None:
-    """Heal the one non-atomic window of :func:`_swap_dir`: a crash
-    between rename-aside and rename-in leaves ``final`` missing with
-    the old state in the aside — restore it. (A present ``final`` plus
-    a stale aside means the swap completed; the aside is droppable and
-    the next swap scrubs it.)"""
-    aside = _aside_of(final)
-    if not os.path.isdir(final) and os.path.isdir(aside):
-        os.rename(aside, final)
-
-
-def _swap_dir(staging: str, final: str) -> None:
-    """Swap ``staging`` in as ``final``: rename old aside → rename new
-    in → drop old (dot-prefixed aside, invisible to any reader that
-    lists the parent). Each rename is atomic; the one crash window
-    between them is healed by :func:`_recover_dir`, which every reader
-    and the next swap run first — so old-or-new, never destroyed."""
-    aside = _aside_of(final)
-    _recover_dir(final)
-    shutil.rmtree(aside, ignore_errors=True)
-    if os.path.isdir(final):
-        os.rename(final, aside)
-    os.rename(staging, final)
-    shutil.rmtree(aside, ignore_errors=True)
-
-
 def refresh_report(
     spark: SparkSession,
     report_dir: str,
@@ -117,7 +87,7 @@ def refresh_report(
     merged table in that case) — folding a delta into a missing base
     would silently diverge from the facts.
     """
-    _recover_dir(report_dir)
+    swap.heal(report_dir)
     if os.path.isdir(report_dir):
         state = incremental_agg_merge(
             spark.read.parquet(report_dir),
@@ -136,12 +106,12 @@ def refresh_report(
     if marker_batch_id is not None:
         with open(os.path.join(staging, "_last_batch"), "w") as fh:
             fh.write(str(marker_batch_id))
-    _swap_dir(staging, report_dir)
+    swap.swap(staging, report_dir)
 
 
 def last_applied_marker(report_dir: str) -> str | None:
     """The raw ``_last_batch`` marker inside the report dir, or None."""
-    _recover_dir(report_dir)
+    swap.heal(report_dir)
     marker = os.path.join(report_dir, "_last_batch")
     if os.path.isfile(marker):
         with open(marker) as fh:

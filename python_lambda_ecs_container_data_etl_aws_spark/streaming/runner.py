@@ -751,25 +751,25 @@ def source_cap_stream(
 
     Replay-safe by construction: the fold dedups by id before ranking,
     so re-folding an already-folded batch is a no-op; the kept table
-    (≤ cap × |sources| rows — state, not data) swaps atomically via the
-    report module's aside-dir rename protocol."""
+    (≤ cap × |sources| rows — state, not data) is installed by the
+    crash-safe swap (sources/swap.py)."""
     import os
     import shutil
 
     from pyspark.sql import Window
 
-    from ..sources.report import _recover_dir, _swap_dir
+    from ..sources import swap
 
     # heal a crashed swap at STREAM START, not only inside the sink: a
     # restart with no new input fires zero batches, and readers of the
     # kept table would otherwise see a missing path until data happens
     # to arrive (the swap contract is old-or-new, never destroyed)
-    _recover_dir(kept_dir)
+    swap.heal(kept_dir)
     src = file_stream(spark, landing_dir, schema, fmt)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # recovery precedes the empty-batch return for the same reason
-        _recover_dir(kept_dir)
+        swap.heal(kept_dir)
         if batch_df.isEmpty():
             return
         merged = batch_df
@@ -791,7 +791,7 @@ def source_cap_stream(
         staging = kept_dir.rstrip("/") + "__staging"
         shutil.rmtree(staging, ignore_errors=True)
         kept.coalesce(1).write.mode("overwrite").parquet(staging)
-        _swap_dir(staging, kept_dir)
+        swap.swap(staging, kept_dir)
 
     q = (
         src.writeStream.foreachBatch(sink)
@@ -800,70 +800,6 @@ def source_cap_stream(
         .start()
     )
     q.awaitTermination()
-
-
-def stateful_user_value_stats(events: DataFrame) -> DataFrame:
-    """Per-user running value statistics via transformWithStateInPandas
-    — the Spark 4 successor to applyInPandasWithState (StatefulProcessor
-    + typed state handles + RocksDB state store; timers and multiple
-    state variables come free when an operator needs them).
-
-    Emits (user_id, n_events, sum_value, max_value) per user per
-    micro-batch; the last emission carries the all-time stats. Requires
-    ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider (transformWithState's backing store) and
-    the ``protobuf`` package (the TWS driver worker's state-message
-    codec — absent in this sandbox, so the pytest importorskips; the
-    applyInPandasWithState twin `stateful_user_counts` runs
-    everywhere).
-    The processor class is defined inside this function so executors
-    unpickle a self-contained closure (repo-cwd-independent).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Stats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "stats", "n BIGINT, sum_value DOUBLE, max_value DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            # one state round trip: get() is already Optional
-            prev = self._state.get()
-            n, sv, mx = prev if prev is not None else (0, 0.0, None)
-            for pdf in rows:
-                n += len(pdf)
-                # null-skipping like F.sum/F.max — an all-null chunk
-                # must not poison the running stats with NaN
-                vals = pdf["value"].dropna()
-                if len(vals):
-                    sv += float(vals.sum())
-                    bmax = float(vals.max())
-                    mx = bmax if mx is None else max(mx, bmax)
-            self._state.update((n, sv, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [sv],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_Stats(),
-        outputStructType="user_id BIGINT, n_events BIGINT, sum_value DOUBLE, max_value DOUBLE",
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 def stateful_funnel(events: DataFrame, gap_us: int = 30 * 60 * 1_000_000) -> DataFrame:
@@ -1168,7 +1104,7 @@ def cdc_apply_stream(
     the buckets holding the batch's keys are read and rewritten —
     cost proportional to the batch, not the table (the same posture
     as the bucket-scoped ingest in sources/pipeline.py). Each bucket
-    swaps atomically via the report module's aside-dir protocol.
+    is installed by the crash-safe swap (sources/swap.py).
 
     Replay-safe by construction: the stored state keeps the latest
     event per key INCLUDING tombstones, so re-folding a replayed
@@ -1176,7 +1112,7 @@ def cdc_apply_stream(
     a late or duplicated OLD change can never resurrect a deleted key
     (the tombstone's higher sequence number always outranks it).
     Readers use :func:`read_cdc_table`, which heals crashed swaps and
-    hides tombstones.
+    hides tombstones — the one reader that heals, see its docstring.
 
     Consistency caveat: bucket swaps are individually atomic
     (old-or-new, never destroyed) but not jointly — all touched
@@ -1192,22 +1128,13 @@ def cdc_apply_stream(
 
     from pyspark.sql import Window
 
-    from ..sources.report import _recover_dir
+    from ..sources import swap
 
-    def _heal_all() -> None:
-        if not os.path.isdir(table_dir):
-            return
-        for e in os.listdir(table_dir):
-            if e.startswith(".bucket=") and e.endswith("__old"):
-                _recover_dir(os.path.join(table_dir, e[1 : -len("__old")]))
-
-    _heal_all()
+    swap.heal_children(table_dir)
     src = file_stream(spark, landing_dir, schema, fmt)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sources.report import _swap_dir
-
-        _heal_all()
+        swap.heal_children(table_dir)
         if batch_df.isEmpty():
             return
         batch = batch_df.withColumn(
@@ -1243,7 +1170,7 @@ def cdc_apply_stream(
             latest.coalesce(1).write.mode("overwrite").parquet(staging)
             staged.append((staging, bdir))
         for staging, bdir in staged:
-            _swap_dir(staging, bdir)
+            swap.swap(staging, bdir)
         batch.unpersist()
 
     q = (
@@ -1259,21 +1186,26 @@ def read_cdc_table(
     spark: SparkSession, table_dir: str, op_col: str = "op"
 ) -> DataFrame:
     """Current snapshot of a :func:`cdc_apply_stream` table: all
-    buckets, tombstones hidden. Heals crashed swaps first so a reader
-    never sees a missing bucket (old-or-new, never destroyed)."""
+    buckets, tombstones hidden. Reads only the live ``bucket=<int>``
+    dirs — never the ``bucket=K__staging`` output of a batch that
+    crashed before its swap, which would read every key of bucket K
+    twice.
+
+    The one reader that heals: it restores crashed bucket swaps first,
+    so it never sees a missing bucket (old-or-new, never destroyed).
+    Every other reader only warns (sources/swap.py); this one races a
+    running :func:`cdc_apply_stream`, so read between batches."""
     import os
+    import re
 
-    from ..sources.report import _recover_dir
+    from ..sources import swap
 
-    if os.path.isdir(table_dir):
-        for e in os.listdir(table_dir):
-            if e.startswith(".bucket=") and e.endswith("__old"):
-                _recover_dir(os.path.join(table_dir, e[1 : -len("__old")]))
+    swap.heal_children(table_dir)
     dirs = (
         [
             os.path.join(table_dir, e)
             for e in os.listdir(table_dir)
-            if e.startswith("bucket=")
+            if re.fullmatch(r"bucket=-?\d+", e)
         ]
         if os.path.isdir(table_dir)
         else []

@@ -225,35 +225,6 @@ def test_db_init_script_executes_against_catalog(spark, tmp_path):
     assert spark.sql("SELECT k2 FROM init_t2").collect()[0].k2 == 2
 
 
-def test_upsert_delta_seam(spark, tmp_path):
-    """The Delta MERGE INTO backend behind the same upsert contract:
-    full parity with the plain-parquet path where delta-spark exists;
-    a clean NotImplementedError where it doesn't (this sandbox)."""
-    from python_lambda_ecs_container_data_etl_aws_spark.sources.merge import (
-        upsert,
-        upsert_delta,
-    )
-
-    perm = spark.createDataFrame([(1, "a"), (2, "b")], "k INT, v STRING")
-    delta = spark.createDataFrame([(2, None), (3, "c")], "k INT, v STRING")
-    try:
-        import delta as _delta  # noqa: F401
-    except ImportError:
-        import pytest as _pytest
-
-        with _pytest.raises(NotImplementedError):
-            upsert_delta(spark, str(tmp_path / "t"), delta, ["k"])
-        return
-    path = str(tmp_path / "t")
-    perm.write.format("delta").save(path)
-    upsert_delta(spark, path, delta, ["k"])
-    got = sorted((r.k, r.v) for r in spark.read.format("delta").load(path).collect())
-    want = sorted(
-        (r.k, r.v) for r in upsert(perm, delta, ["k"]).collect()
-    )
-    assert got == want  # delta wins incl. NULLs; unmatched insert
-
-
 def test_cli_list_and_unknown_query(capsys):
     """The CLI lists the full catalog and suggests near-matches for
     typos without touching Spark."""

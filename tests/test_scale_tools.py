@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from python_lambda_ecs_container_data_etl_aws_spark.catalog import load_table
@@ -708,8 +709,10 @@ def test_compact_table_crash_mid_swap_is_healed(spark, tmp_path):
     compact_table OR ingest_file must restore the table instead of
     losing it / recreating it from one delta."""
     from python_lambda_ecs_container_data_etl_aws_spark.sources.pipeline import (
-        _aside_dir,
         compact_table,
+    )
+    from python_lambda_ecs_container_data_etl_aws_spark.sources.swap import (
+        aside as _aside_dir,
     )
 
     land = tmp_path / "landing"
@@ -1214,6 +1217,75 @@ def test_whole_table_stranded_aside_detected(spark, tmp_path):
     with _pt.warns(UserWarning, match="stranded swap aside"):
         read_permanent(spark, wh, "priceindex")
     assert os.path.isdir(aside)
+
+
+def _put(path, text):
+    os.makedirs(path)
+    with open(os.path.join(path, "part"), "w") as fh:
+        fh.write(text)
+
+
+def _got(path):
+    with open(os.path.join(path, "part")) as fh:
+        return fh.read()
+
+
+@pytest.mark.parametrize("child", [False, True], ids=["whole_dir", "partition_child"])
+@pytest.mark.parametrize(
+    "window", ["before_rename_aside", "between_renames", "before_aside_dropped"]
+)
+def test_swap_heal_leaves_old_or_new_never_lost(tmp_path, window, child):
+    """A crash in each window of the swap protocol — before the live dir
+    is renamed aside, between the two renames, after staging is renamed
+    in but before the aside is dropped — heals to the old or the new
+    data, never neither, and leaves no aside behind. A partition child
+    heals through its parent and leaves its siblings alone."""
+    from python_lambda_ecs_container_data_etl_aws_spark.sources import swap
+
+    parent = str(tmp_path / "t")
+    live = os.path.join(parent, "__bucket=0") if child else parent
+    staging = str(tmp_path / "staging")
+    if child:
+        _put(os.path.join(parent, "__bucket=1"), "sibling")
+    _put(live, "old")
+    _put(staging, "new")
+    if window != "before_rename_aside":
+        os.rename(live, swap.aside(live))
+    if window == "before_aside_dropped":
+        os.rename(staging, live)
+
+    if child:
+        swap.heal_children(parent)
+    else:
+        swap.heal(live)
+
+    assert _got(live) == ("new" if window == "before_aside_dropped" else "old")
+    assert swap.stranded_asides(parent) == []
+    if child:
+        assert _got(os.path.join(parent, "__bucket=1")) == "sibling"
+    # the retried swap installs the new data
+    if os.path.isdir(staging):
+        swap.swap(staging, live)
+    assert _got(live) == "new"
+    assert swap.stranded_asides(parent) == [] and not os.path.isdir(staging)
+
+
+def test_swap_protocol_has_one_implementation():
+    """The aside name and the renames live in sources/swap.py alone, so
+    the crash-safe swap cannot fork into per-module copies again."""
+    import python_lambda_ecs_container_data_etl_aws_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    holders = set()
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path, encoding="utf-8") as fh:
+                    text = fh.read()
+                if "__old" in text or "os.rename" in text:
+                    holders.add(os.path.relpath(path, root))
+    assert holders == {os.path.join("sources", "swap.py")}
 
 
 def test_synth_sf_replication_invariants(tmp_path):

@@ -458,72 +458,6 @@ def test_segment_dedup_ingest_stream_matches_q70_semantics(spark, tmp_path):
     assert drain()[21] == (1, 1, segE)
 
 
-def test_transform_with_state_user_value_stats(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 stateful API): final
-    per-user stats must equal the batch aggregation (null values
-    skipped like F.sum/F.max), with state accumulating across
-    triggers in the RocksDB store. The TWS driver worker needs
-    protobuf (not shipped in this sandbox) — skipped where absent,
-    same policy as the Delta seam."""
-    pytest.importorskip("google.protobuf.descriptor")
-    land = tmp_path / "tws_land"
-    land.mkdir()
-    batches = [
-        [(1, 2.0), (2, 3.0), (1, None)],
-        [(1, 5.0), (3, 1.0)],
-        [(2, None), (2, 7.0), (1, 0.5)],
-    ]
-    schema = "user_id BIGINT, value DOUBLE"
-    # flat appended files: the file stream source does not recurse into
-    # per-batch subdirectories; appended part files arrive oldest-first
-    for rows in batches:
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(land))
-    e = spark.createDataFrame([r for b in batches for r in b], schema)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = runner.file_stream(
-            spark, str(land), schema, fmt="parquet", max_files_per_trigger=1
-        )
-        stats = runner.stateful_user_value_stats(stream)
-        runner.run_stream_to_memory(
-            stats, "user_stats_tws", str(tmp_path / "ck_tws"), output_mode="update"
-        )
-        emitted = spark.table("user_stats_tws").collect()
-        final = {}
-        for r in emitted:
-            cur = final.get(r.user_id)
-            if cur is None or r.n_events > cur[0]:
-                final[r.user_id] = (r.n_events, r.sum_value, r.max_value)
-        batch = {
-            r.user_id: (r.n, r.s, r.m)
-            for r in e.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("value").cast("double").alias("s"),
-                F.max("value").cast("double").alias("m"),
-            )
-            .collect()
-        }
-        assert set(final) == set(batch)
-        for u, (n, s_, m) in final.items():
-            bn, bs, bm = batch[u]
-            assert n == bn and abs(s_ - bs) < 1e-9 and m == bm, u
-        # state really accumulated across triggers
-        assert any(len([r for r in emitted if r.user_id == u]) > 1 for u in final)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_stateful_funnel_agrees_with_batch_q67(spark, tmp_path):
     """The streaming funnel's drained emissions must reproduce the
     batch q67 per-day (n_views, n_conv) exactly, with views resolved
@@ -1131,6 +1065,33 @@ def test_cdc_apply_stream_recovers_crashed_bucket_swap(spark, tmp_path):
     os.rename(bdir, os.path.join(table, ".bucket=1__old"))
     runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
     assert os.path.isdir(bdir)
+
+
+def test_read_cdc_table_skips_staging_left_by_crashed_batch(spark, tmp_path):
+    """A crash between staging bucket K and swapping it in leaves
+    bucket=K__staging next to the live bucket=K. The reader must take
+    only the live bucket dirs: every key exactly once, not twice
+    until the checkpoint replays the batch."""
+    import shutil
+
+    landing = str(tmp_path / "cdc_landing")
+    table = str(tmp_path / "cdc_table")
+    ck = str(tmp_path / "ck_cdc")
+
+    _cdc_arrive(spark, landing, [(1, 100, 0, "I"), (9, 900, 0, "I"), (2, 200, 0, "I")])
+    runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
+    # keys 1 and 9 share bucket 1 (k % 8): its staged copy was written,
+    # the swap never ran
+    shutil.copytree(
+        os.path.join(table, "bucket=1"), os.path.join(table, "bucket=1__staging")
+    )
+    per_key = {
+        r.k: r.n
+        for r in runner.read_cdc_table(spark, table).groupBy("k").count()
+        .withColumnRenamed("count", "n")
+        .collect()
+    }
+    assert per_key == {1: 1, 2: 1, 9: 1}
 
 
 def test_cdc_apply_stream_rewrites_only_touched_buckets(spark, tmp_path):
