@@ -16,13 +16,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from .session import configure
 
@@ -40,17 +33,6 @@ TABLE_NAMES = [
 ]
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-_EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts_us", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -81,45 +63,27 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     is pinned UTC, so the NTZ cast is interpretation-free). Epoch
     integers sidestep every timezone/format hazard in cross-engine
     comparison, and the normalization is a zero-shuffle projection the
-    scan absorbs.
+    scan absorbs. A file Spark cannot read (TIMESTAMP(NANOS) on a
+    session where nanosAsLong could not be set) raises; it is never
+    loaded through the driver instead.
     """
     configure(spark)
-    try:
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ts_type = df.schema["ts"].dataType.simpleString()
-        if ts_type == "bigint":
-            ts_us = F.expr("ts div 1000")  # nanosAsLong: truncate nanos→micros
-        else:
-            # timestamp_ntz under a UTC session tz casts instant-preserving;
-            # timestamp (ltz) is already an instant.
-            ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-        return df.select(
-            "event_id",
-            ts_us.alias("ts_us"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-    except Exception:
-        # Fallback for sessions where the confs cannot be set: arrow-side
-        # conversion. Fine at test scale; at production scale the landing
-        # data would be written with micros in the first place.
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(f"{sf_dir}/events.parquet")
-        ts = tbl.column("ts")
-        unit = ts.type.unit if pa.types.is_timestamp(ts.type) else "ns"
-        div = {"s": 1, "ms": 1, "us": 1, "ns": 1000}[unit]
-        mul = {"s": 1_000_000, "ms": 1_000, "us": 1, "ns": 1}[unit]
-        import pyarrow.compute as pc
-
-        ts_us = pc.divide(pc.multiply(ts.cast(pa.int64()), mul), div)
-        pdf = tbl.to_pandas()
-        pdf["ts_us"] = ts_us.to_pandas().astype("int64")
-        pdf = pdf[["event_id", "ts_us", "user_id", "event_type", "value", "props"]]
-        return spark.createDataFrame(pdf, schema=_EVENTS_SCHEMA)
+    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ts_type = df.schema["ts"].dataType.simpleString()
+    if ts_type == "bigint":
+        ts_us = F.expr("ts div 1000")  # nanosAsLong: truncate nanos→micros
+    else:
+        # timestamp_ntz under a UTC session tz casts instant-preserving;
+        # timestamp (ltz) is already an instant.
+        ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    return df.select(
+        "event_id",
+        ts_us.alias("ts_us"),
+        "user_id",
+        "event_type",
+        "value",
+        "props",
+    )
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -93,6 +93,7 @@ def _row_group_count(files: list[str]) -> int | None:
     upper bound on non-empty scan tasks), or None when any file is
     not local parquet (decision falls through to pass-through)."""
     try:
+        import pyarrow as pa
         import pyarrow.parquet as pq
     except ImportError:  # pragma: no cover - pyarrow ships with pyspark
         return None
@@ -105,7 +106,7 @@ def _row_group_count(files: list[str]) -> int | None:
             total += pq.ParquetFile(
                 unquote(parsed.path) or uri
             ).metadata.num_row_groups
-        except Exception:
+        except (OSError, pa.ArrowInvalid):
             return None
     return total
 

@@ -236,7 +236,8 @@ def banded_buckets(sig: DataFrame, num_bands: int = 16) -> DataFrame:
         "struct({b} AS band, xxhash64({cols}) AS bucket)".format(
             b=bnd,
             cols=", ".join(
-                hcols[bnd * rows_per_band : (bnd + 1) * rows_per_band]
+                "`{}`".format(c.replace("`", "``"))
+                for c in hcols[bnd * rows_per_band : (bnd + 1) * rows_per_band]
             ),
         )
         for bnd in range(num_bands)

@@ -13,7 +13,9 @@ posture, even when testing on local[*].
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Runtime SQL confs that queries in this package rely on. They are
@@ -76,10 +78,11 @@ def configure(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Non-settable at runtime in this deployment — keep going;
-            # individual loaders have fallbacks (see catalog.load_events).
-            pass
+        except AnalysisException as e:
+            # a deployment that locks this conf: keep going, say which
+            if not (e.getCondition() or "").startswith("CANNOT_MODIFY"):
+                raise
+            warnings.warn(f"cannot set {k} on this session ({e.getCondition()})")
     return spark
 
 

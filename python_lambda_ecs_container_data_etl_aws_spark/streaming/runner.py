@@ -23,10 +23,12 @@ closed windows agree.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 
@@ -235,23 +237,61 @@ def stateful_user_counts(events: DataFrame) -> DataFrame:
     )
 
 
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> list[dict]:
+    """Run ``writer``'s query over everything its source holds now
+    (availableNow, checkpointed) and wait for it. Returns the query's
+    ``recentProgress``: one dict per micro-batch with its input rows
+    and durations, so a run explains itself without the Spark UI.
+    ``numInputRows`` counts every scan of the source: a sink that reads
+    its batch twice (an ``isEmpty()`` check, then a write) counts each
+    row twice."""
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q.recentProgress
+
+
+def _other_batches(root: str, batch_id: int) -> list[str]:
+    """Every ``batch=*`` dir under ``root`` except ``batch_id``'s own.
+
+    The replay rule of the per-batch sinks: a crash after a batch's
+    writes but before its checkpoint commit re-runs the same batch id,
+    so a probe of "the corpus so far" must not see the crashed
+    attempt's own rows; they are re-derived and overwritten instead."""
+    if not os.path.isdir(root):
+        return []
+    return [
+        os.path.join(root, e)
+        for e in os.listdir(root)
+        if e.startswith("batch=") and e != f"batch={batch_id}"
+    ]
+
+
+def _write_batch(df: DataFrame, root: str, batch_id: int) -> None:
+    """Overwrite ``root/batch=<batch_id>`` with ``df``, so a replayed
+    batch replaces its own dir instead of double-appending. A zero-row
+    ``df`` still writes one schema-only part file, which later
+    :func:`_other_batches` probes read back as 0 rows."""
+    df.write.mode("overwrite").parquet(os.path.join(root, f"batch={batch_id}"))
+
+
 def run_stream_to_memory(
     stream_df: DataFrame,
     query_name: str,
     checkpoint_dir: str,
     output_mode: str = "append",
-) -> None:
-    """Drain a stream with availableNow into an in-memory sink
+) -> list[dict]:
+    """Drain a stream (:func:`_drain`) into an in-memory sink
     (test/verification harness; production uses parquet/Delta sinks)."""
-    q = (
+    return _drain(
         stream_df.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def ingest_stream(
@@ -263,10 +303,17 @@ def ingest_stream(
     fmt: str = "csv",
     transform: Callable[[DataFrame], DataFrame] | None = None,
     on_batch_complete: Callable[[DataFrame, int], None] | None = None,
-) -> None:
+) -> list[dict]:
     """Landing-dir → (transform) → parquet sink, exactly-once, with a
-    foreachBatch completion hook (ST6). Runs availableNow (trigger-once
-    batch-of-the-stream); a production deployment runs it continuously.
+    foreachBatch completion hook (ST6). Runs trigger-once
+    (batch-of-the-stream, :func:`_drain`) and returns its per-batch
+    progress; a production deployment runs it continuously.
+
+    With :func:`refresh_report_once` as the hook this is the streaming
+    twin of the maintained report (sources/report.py): the
+    load→rebuild-report loop (`2.2:376-398`) folding each batch into the
+    report, never rescanning the facts. (The fact append shares the
+    standard parquet-sink caveat: a replayed batch appends again.)
     """
     src = file_stream(spark, landing_dir, schema, fmt)
     if transform is not None:
@@ -277,53 +324,7 @@ def ingest_stream(
         if on_batch_complete is not None:
             on_batch_complete(batch_df, batch_id)
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def report_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    schema: StructType,
-    out_dir: str,
-    checkpoint_dir: str,
-    report_spec,
-    report_dir: str,
-    fmt: str = "csv",
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-) -> None:
-    """Streaming twin of the maintained report (sources/report.py): the
-    load→rebuild-report loop (`2.2:376-398`) as a continuous pipeline.
-    Each micro-batch appends its facts to ``out_dir`` and folds its
-    aggregate state into the report — the report is always |batch| work
-    behind the stream, never a fact-table rescan.
-
-    ``foreachBatch`` re-delivers a batch after a crash (at-least-once),
-    so the refresh is guarded by a persisted batch-id high-water mark:
-    a replayed batch id is a no-op for the report, keeping the
-    maintained state effectively-once. (The fact append shares the
-    standard parquet-sink caveat; on Delta both writes join one txn.)
-    """
-    src = file_stream(spark, landing_dir, schema, fmt)
-    if transform is not None:
-        src = transform(src)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-        refresh_report_once(spark, report_dir, report_spec, batch_df, batch_id)
-
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def refresh_report_once(
@@ -367,7 +368,7 @@ def dedup_ingest_stream(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-) -> None:
+) -> list[dict]:
     """Continuous corpus curation: each arriving micro-batch of
     documents is near-dup-deduped AGAINST THE CORPUS SO FAR (plus
     within itself) before its survivors are appended — the streaming
@@ -381,7 +382,9 @@ def dedup_ingest_stream(
     Exactly-once without a transaction log: each batch writes its
     survivors (docs AND their index rows) to ``batch=<batch_id>``
     subdirs with overwrite — a crash-replayed batch overwrites its own
-    directories instead of double-appending.
+    directories instead of double-appending — and the index probe reads
+    every index batch dir EXCEPT this batch's own (the segment stream's
+    replay rule), so a replay never pairs its docs with themselves.
 
     Per-batch cost scales with the batch: the corpus is never
     re-shingled — its LSH index (shingle arrays + band buckets,
@@ -397,8 +400,6 @@ def dedup_ingest_stream(
     batch — rebuild it with ``lsh_index_of`` over the corpus before
     resuming the stream.
     """
-    import os
-
     from ..operators.dedup import (
         _jaccard_verify,
         candidate_pairs_from_bands,
@@ -407,28 +408,24 @@ def dedup_ingest_stream(
     )
 
     index_dir = corpus_dir.rstrip("/") + "__index"
+    sh_dir = os.path.join(index_dir, "sh")
+    bands_dir = os.path.join(index_dir, "bands")
     src = file_stream(spark, landing_dir, schema, fmt)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
-            # an empty arriving file must be a no-op: writing a zero-row
-            # batch dir would leave part-file-less dirs that fail parquet
-            # schema inference on the next batch's corpus/index read
-            # (the streaming twin of the ingest empty-delta guard)
+            # an empty arriving file has nothing to dedup: skip the
+            # batch's jobs and dirs (the streaming twin of the ingest
+            # empty-delta guard)
             return
         batch = batch_df.persist()
         bsh, bb = lsh_index_of(batch, text_col, id_col)
         bsh, bb = bsh.persist(), bb.persist()
-        # gate on BOTH index relations: bands is written first and sh
-        # last, so sh present → bands present; a crash between the two
-        # writes leaves only bands, which the replay safely overwrites
-        has_index = os.path.isdir(os.path.join(index_dir, "sh")) and os.path.isdir(
-            os.path.join(index_dir, "bands")
-        )
-        if has_index:
-            ish = spark.read.parquet(os.path.join(index_dir, "sh")).drop("batch")
-            ib = spark.read.parquet(os.path.join(index_dir, "bands")).drop("batch")
-            pairs = neardup_pairs_vs_index(ish, ib, bsh, bb, threshold)
+        ish, ib = _other_batches(sh_dir, batch_id), _other_batches(bands_dir, batch_id)
+        if ish and ib:
+            pairs = neardup_pairs_vs_index(
+                spark.read.parquet(*ish), spark.read.parquet(*ib), bsh, bb, threshold
+            )
         else:
             pairs = _jaccard_verify(candidate_pairs_from_bands(bb), bsh).filter(
                 F.col("jaccard") >= threshold
@@ -464,30 +461,18 @@ def dedup_ingest_stream(
         survivors = batch.join(
             drop, F.col(id_col) == F.col("drop_id"), "left_anti"
         ).persist()
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(corpus_dir, f"batch={batch_id}")
-        )
+        _write_batch(survivors, corpus_dir, batch_id)
         # append the survivors' index rows — the corpus is never
         # re-shingled; replay overwrites the same batch dirs
         surv_ids = survivors.select(F.col(id_col).alias("id"))
-        bb.join(surv_ids, "id", "left_semi").write.mode("overwrite").parquet(
-            os.path.join(index_dir, "bands", f"batch={batch_id}")
-        )
-        bsh.join(surv_ids, "id", "left_semi").write.mode("overwrite").parquet(
-            os.path.join(index_dir, "sh", f"batch={batch_id}")
-        )
+        _write_batch(bb.join(surv_ids, "id", "left_semi"), bands_dir, batch_id)
+        _write_batch(bsh.join(surv_ids, "id", "left_semi"), sh_dir, batch_id)
         survivors.unpersist()
         bsh.unpersist()
         bb.unpersist()
         batch.unpersist()
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def segment_dedup_ingest_stream(
@@ -500,7 +485,7 @@ def segment_dedup_ingest_stream(
     text_col: str = "text",
     id_col: str = "doc_id",
     seg_tokens: int = 8,
-) -> None:
+) -> list[dict]:
     """Streaming twin of q70's incremental segment dedup (the C4-style
     line-dedup run continuously): each arriving micro-batch's documents
     are cut into ``seg_tokens``-token segments; a segment already in
@@ -526,8 +511,6 @@ def segment_dedup_ingest_stream(
     ``xxhash64(seg_text)`` bucketed by hash range and probe on the
     hash (collision risk bounded, same trade the reference's
     count-validation makes)."""
-    import os
-
     from pyspark.sql import Window
 
     index_dir = corpus_dir.rstrip("/") + "__segindex"
@@ -535,7 +518,7 @@ def segment_dedup_ingest_stream(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
-            return  # same empty-batch no-op contract as dedup_ingest_stream
+            return  # same empty-batch no-op as dedup_ingest_stream
         seg = (
             batch_df.select(
                 F.col(id_col), F.split(F.col(text_col), " ").alias("toks")
@@ -569,22 +552,9 @@ def segment_dedup_ingest_stream(
         # exact q70 shape (one seg_text-keyed window, one hash join)
         w = Window.partitionBy("seg_text").orderBy(id_col, "seg_idx")
         seg = seg.withColumn("rn", F.row_number().over(w))
-        # crash-replay idempotence: a crash AFTER this batch's index
-        # write but BEFORE the checkpoint commit re-runs the same
-        # batch_id — reading the index wholesale would then see the
-        # crashed attempt's own segments and mark the ENTIRE batch
-        # already-in-corpus, overwriting it with empty docs. Probe only
-        # the OTHER batches' index dirs; this batch's own rows are
-        # re-derived and overwritten below either way.
-        other_batches = (
-            [
-                os.path.join(index_dir, e)
-                for e in os.listdir(index_dir)
-                if e.startswith("batch=") and e != f"batch={batch_id}"
-            ]
-            if os.path.isdir(index_dir)
-            else []
-        )
+        # probe the OTHER batches' index dirs only: a replay that saw its
+        # own crashed attempt's segments would gut the whole batch
+        other_batches = _other_batches(index_dir, batch_id)
         if other_batches:
             idx = (
                 spark.read.parquet(*other_batches).select("seg_text").distinct()
@@ -608,25 +578,13 @@ def segment_dedup_ingest_stream(
                 " ",
             ).alias("clean_text"),
         )
-        cleaned.write.mode("overwrite").parquet(
-            os.path.join(corpus_dir, f"batch={batch_id}")
-        )
-        (
-            seg.filter(keep)
-            .select("seg_text")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(index_dir, f"batch={batch_id}"))
+        _write_batch(cleaned, corpus_dir, batch_id)
+        _write_batch(
+            seg.filter(keep).select("seg_text").distinct(), index_dir, batch_id
         )
         seg.unpersist()
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def exact_dedup_ingest_stream(
@@ -638,7 +596,7 @@ def exact_dedup_ingest_stream(
     fmt: str = "parquet",
     text_col: str = "text",
     id_col: str = "doc_id",
-) -> None:
+) -> list[dict]:
     """Continuous NORMALIZED-exact dedup ingest (the q79 rule run as a
     stream): each arriving micro-batch keeps, per normalized text
     (lower + strip non-alnum + collapse spaces + trim), the lowest-id
@@ -651,8 +609,6 @@ def exact_dedup_ingest_stream(
     excludes this batch's own dir so a crash-after-index-write replay
     re-derives the same survivors (same idempotence contract as the
     segment stream)."""
-    import os
-
     from pyspark.sql import Window
 
     from ..operators.curate import norm_group_key, normalize_text
@@ -676,15 +632,7 @@ def exact_dedup_ingest_stream(
         ).withColumn("__empty", nrm == F.lit(""))
         w = Window.partitionBy("__gk").orderBy(id_col)
         batch = batch.withColumn("__rn", F.row_number().over(w))
-        others = (
-            [
-                os.path.join(index_dir, e)
-                for e in os.listdir(index_dir)
-                if e.startswith("batch=") and e != f"batch={batch_id}"
-            ]
-            if os.path.isdir(index_dir)
-            else []
-        )
+        others = _other_batches(index_dir, batch_id)
         if others:
             # on-disk index column stays "__nmd5" (the stored values
             # are raw md5 hashes — pre-refactor indexes remain valid)
@@ -701,33 +649,21 @@ def exact_dedup_ingest_stream(
         survivors = batch.filter(
             (F.col("__rn") == 1) & F.col("__seen").isNull()
         ).persist()
-        survivors.drop("__gk", "__rn", "__seen", "__empty").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(corpus_dir, f"batch={batch_id}"))
+        _write_batch(
+            survivors.drop("__gk", "__rn", "__seen", "__empty"), corpus_dir, batch_id
+        )
         # empty-norm (per-doc 'E'-keyed) groups never enter the index
-        # (see comment above); a batch of ONLY empty-norm docs writes
-        # no index dir at all — a zero-row dir would fail parquet
-        # schema inference on every later probe (and a crashed
-        # attempt's stale dir is removed so replay converges)
-        import shutil
-
-        idx_rows = survivors.filter(~F.col("__empty")).select(
-            F.col("__gk").alias("__nmd5")
-        ).distinct()
-        idx_path = os.path.join(index_dir, f"batch={batch_id}")
-        if idx_rows.isEmpty():
-            shutil.rmtree(idx_path, ignore_errors=True)
-        else:
-            idx_rows.write.mode("overwrite").parquet(idx_path)
+        # (see comment above)
+        _write_batch(
+            survivors.filter(~F.col("__empty"))
+            .select(F.col("__gk").alias("__nmd5"))
+            .distinct(),
+            index_dir,
+            batch_id,
+        )
         survivors.unpersist()
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def source_cap_stream(
@@ -741,7 +677,7 @@ def source_cap_stream(
     text_col: str = "text",
     source_col: str = "source",
     cap: int = 10,
-) -> None:
+) -> list[dict]:
     """Incremental per-source best-K cap (the q72 rule as a stream):
     the kept table always holds, per source, the top ``cap`` docs by
     (token count desc, id asc) over EVERYTHING seen so far. Each batch
@@ -753,23 +689,18 @@ def source_cap_stream(
     so re-folding an already-folded batch is a no-op; the kept table
     (≤ cap × |sources| rows — state, not data) is installed by the
     crash-safe swap (sources/swap.py)."""
-    import os
-    import shutil
-
     from pyspark.sql import Window
 
     from ..sources import swap
 
-    # heal a crashed swap at STREAM START, not only inside the sink: a
-    # restart with no new input fires zero batches, and readers of the
-    # kept table would otherwise see a missing path until data happens
-    # to arrive (the swap contract is old-or-new, never destroyed)
+    # heal a crashed swap at STREAM START: a restart with no new input
+    # fires zero batches, and readers of the kept table would otherwise
+    # see a missing path until data happens to arrive. Within the run a
+    # failed swap raises out of the sink and ends the query.
     swap.heal(kept_dir)
     src = file_stream(spark, landing_dir, schema, fmt)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # recovery precedes the empty-batch return for the same reason
-        swap.heal(kept_dir)
         if batch_df.isEmpty():
             return
         merged = batch_df
@@ -789,17 +720,10 @@ def source_cap_stream(
             .drop("__rn", "__dup")
         )
         staging = kept_dir.rstrip("/") + "__staging"
-        shutil.rmtree(staging, ignore_errors=True)
         kept.coalesce(1).write.mode("overwrite").parquet(staging)
         swap.swap(staging, kept_dir)
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def stateful_funnel(events: DataFrame, gap_us: int = 30 * 60 * 1_000_000) -> DataFrame:
@@ -915,7 +839,7 @@ def boilerplate_lines_ingest_stream(
     id_col: str = "doc_id",
     line_tokens: int = 10,
     min_docs: int = 3,
-) -> None:
+) -> list[dict]:
     """Continuous boilerplate-line removal (the q81 CCNet rule as a
     stream): split each arriving doc into fixed ``line_tokens``-token
     lines, and drop every line whose document frequency — across ALL
@@ -933,9 +857,6 @@ def boilerplate_lines_ingest_stream(
     and index; the df probe excludes this batch's own index dir, so a
     crash-after-index-write replay re-derives the same output (same
     idempotence contract as the exact-dedup tier)."""
-    import os
-    import shutil
-
     index_dir = corpus_dir.rstrip("/") + "__linedf"
     src = file_stream(spark, landing_dir, schema, fmt)
 
@@ -969,15 +890,7 @@ def boilerplate_lines_ingest_stream(
             F.countDistinct(id_col).cast("bigint").alias("ndocs")
         )
         # cumulative history EXCLUDING this batch's own dir (replay safety)
-        others = (
-            [
-                os.path.join(index_dir, e)
-                for e in os.listdir(index_dir)
-                if e.startswith("batch=") and e != f"batch={batch_id}"
-            ]
-            if os.path.isdir(index_dir)
-            else []
-        )
+        others = _other_batches(index_dir, batch_id)
         if others:
             hist = (
                 spark.read.parquet(*others)
@@ -1021,23 +934,11 @@ def boilerplate_lines_ingest_stream(
             )
             .select(*out_cols)
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(corpus_dir, f"batch={batch_id}")
-        )
-        idx_path = os.path.join(index_dir, f"batch={batch_id}")
-        if batch_df_counts.isEmpty():
-            shutil.rmtree(idx_path, ignore_errors=True)
-        else:
-            batch_df_counts.write.mode("overwrite").parquet(idx_path)
+        _write_batch(out, corpus_dir, batch_id)
+        _write_batch(batch_df_counts, index_dir, batch_id)
         lines.unpersist()
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def stream_stream_interval_join(
@@ -1093,7 +994,7 @@ def cdc_apply_stream(
     seq_col: str = "seq",
     op_col: str = "op",
     n_buckets: int = 8,
-) -> None:
+) -> list[dict]:
     """Continuous CDC apply with deletes — the q96 contract run as a
     stream: after every micro-batch the maintained table equals
     "latest (seq desc, op-tiebreak) event per key wins; tombstones
@@ -1123,9 +1024,6 @@ def cdc_apply_stream(
     others not. "After every micro-batch the table equals ..." holds
     for quiescent reads after the batch commits, eventually under
     crash-replay."""
-    import os
-    import shutil
-
     from pyspark.sql import Window
 
     from ..sources import swap
@@ -1134,7 +1032,6 @@ def cdc_apply_stream(
     src = file_stream(spark, landing_dir, schema, fmt)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        swap.heal_children(table_dir)
         if batch_df.isEmpty():
             return
         batch = batch_df.withColumn(
@@ -1166,20 +1063,13 @@ def cdc_apply_stream(
                 .drop("__rn")
             )
             staging = bdir + "__staging"
-            shutil.rmtree(staging, ignore_errors=True)
             latest.coalesce(1).write.mode("overwrite").parquet(staging)
             staged.append((staging, bdir))
         for staging, bdir in staged:
             swap.swap(staging, bdir)
         batch.unpersist()
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def read_cdc_table(
@@ -1195,7 +1085,6 @@ def read_cdc_table(
     so it never sees a missing bucket (old-or-new, never destroyed).
     Every other reader only warns (sources/swap.py); this one races a
     running :func:`cdc_apply_stream`, so read between batches."""
-    import os
     import re
 
     from ..sources import swap
@@ -1260,7 +1149,7 @@ def abtest_monitor_stream(
     user_col: str = "user_id",
     type_col: str = "event_type",
     conv_type: str = "purchase",
-) -> None:
+) -> list[dict]:
     """Continuously-maintained A/B experiment readout — q161's
     streaming twin. Each micro-batch folds its events into two
     persisted first-seen indexes (users ever SEEN, users ever
@@ -1280,24 +1169,12 @@ def abtest_monitor_stream(
     anti-join of the BATCH's users against the seen set; the delta
     write is two rows.
     """
-    import os
-    import shutil
-
     from ..plans.evalsuite import _md5i_spark
 
     src = file_stream(spark, landing_dir, schema, fmt)
     users_dir = os.path.join(state_dir, "seen_users")
     conv_dir = os.path.join(state_dir, "converted_users")
     delta_dir = os.path.join(state_dir, "arm_deltas")
-
-    def _others(d: str, batch_id: int) -> list[str]:
-        if not os.path.isdir(d):
-            return []
-        return [
-            os.path.join(d, e)
-            for e in os.listdir(d)
-            if e.startswith("batch=") and e != f"batch={batch_id}"
-        ]
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1311,13 +1188,13 @@ def abtest_monitor_stream(
             )
             .persist()
         )
-        seen = _others(users_dir, batch_id)
+        seen = _other_batches(users_dir, batch_id)
         new_users = (
             b.join(spark.read.parquet(*seen), "user_id", "anti")
             if seen
             else b
         )
-        conv = _others(conv_dir, batch_id)
+        conv = _other_batches(conv_dir, batch_id)
         purchasers = b.filter(F.col("has_conv") == 1)
         new_convs = (
             purchasers.join(spark.read.parquet(*conv), "user_id", "anti")
@@ -1341,28 +1218,13 @@ def abtest_monitor_stream(
         )
         # stage order: deltas + indexes are all batch=<id> overwrites,
         # so any crash point replays to the same state
-        deltas.write.mode("overwrite").parquet(
-            os.path.join(delta_dir, f"batch={batch_id}")
-        )
-        for df, d in ((new_users, users_dir), (new_convs, conv_dir)):
-            path = os.path.join(d, f"batch={batch_id}")
-            rows = df.select("user_id")
-            if rows.isEmpty():
-                # a zero-row dir would break parquet schema inference
-                # on later probes; a stale crashed dir must also go
-                shutil.rmtree(path, ignore_errors=True)
-            else:
-                rows.write.mode("overwrite").parquet(path)
+        _write_batch(deltas, delta_dir, batch_id)
+        _write_batch(new_users.select("user_id"), users_dir, batch_id)
+        _write_batch(new_convs.select("user_id"), conv_dir, batch_id)
         deltas.unpersist()
         b.unpersist()
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
 
 def read_abtest_readout(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1370,8 +1232,6 @@ def read_abtest_readout(spark: SparkSession, state_dir: str) -> DataFrame:
     row. The delta relation is |batches| x 2 rows — the fold is a
     scalar conditional aggregate, and the projection is imported from
     the batch query so both emit identical columns and arithmetic."""
-    import os
-
     from ..plans.business import abtest_readout_from_counts
 
     deltas = spark.read.parquet(os.path.join(state_dir, "arm_deltas"))

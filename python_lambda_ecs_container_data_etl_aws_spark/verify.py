@@ -45,7 +45,7 @@ def duck_connect(sf_dir: str):
         # IOExceptions)
         spill = tempfile.mkdtemp(prefix="duckdb_spill_")
         con.execute(f"SET temp_directory='{spill}'")
-    except Exception:
+    except duckdb.Error:
         pass
     for t in TABLE_NAMES:
         con.execute(

@@ -92,6 +92,38 @@ def test_lsh_candidates_far_fewer_than_all_pairs(spark, docs):
     assert n_cand < n_docs * (n_docs - 1) / 2 * 0.2  # prunes >80% of pairs
 
 
+def test_banded_buckets_quotes_signature_column_names(spark, docs):
+    """banded_buckets builds its SQL from the signature's h* column
+    names: names that are not plain identifiers must be quoted, and
+    ordinary h0..hN names must band exactly as the Column API would."""
+    sig = dedup.minhash_signatures(dedup.shingles(docs), num_hashes=8)
+    hcols = [f"h{i}" for i in range(8)]
+    want = {
+        (r.id, r.band, r.bucket)
+        for r in sig.select(
+            "id",
+            F.explode(
+                F.array(
+                    *(
+                        F.struct(
+                            F.lit(b).alias("band"),
+                            F.xxhash64(*hcols[2 * b : 2 * b + 2]).alias("bucket"),
+                        )
+                        for b in range(4)
+                    )
+                )
+            ).alias("bb"),
+        )
+        .select("id", "bb.band", "bb.bucket")
+        .collect()
+    }
+    got = {tuple(r) for r in dedup.banded_buckets(sig, num_bands=4).collect()}
+    assert got == want
+    odd = sig.toDF("id", "h 0", "h-1", "h`2", *hcols[3:])
+    got_odd = {tuple(r) for r in dedup.banded_buckets(odd, num_bands=4).collect()}
+    assert got_odd == want
+
+
 def test_simhash_finds_planted_pairs(spark, docs):
     exact = _exact_pairs(docs, threshold=0.8)  # the tight planted pairs
     # calibration under the md5-derived 60-bit hash: planted pairs land

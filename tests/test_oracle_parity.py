@@ -179,6 +179,47 @@ def test_catalog_runs_on_empty_tables(spark, tmp_path):
     assert not crashes, crashes
 
 
+def test_load_events_fails_loudly_on_unreadable_file(spark, tmp_path, monkeypatch):
+    """An events file Spark cannot read must raise, not fall back to a
+    whole-table load through the driver: with nanosAsLong unset, a
+    TIMESTAMP(NANOS) ``ts`` is PARQUET_TYPE_ILLEGAL to Spark."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import SparkSession
+
+    from python_lambda_ecs_container_data_etl_aws_spark import catalog
+
+    sf = tmp_path / "sf_nanos"
+    sf.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1], pa.int64()),
+                "ts": pa.array([1_700_000_000_123_456_789], pa.timestamp("ns")),
+                "user_id": pa.array([7], pa.int64()),
+                "event_type": ["view"],
+                "value": [1.5],
+                "props": ["{}"],
+            }
+        ),
+        str(sf / "events.parquet"),
+    )
+    driver_loads = []
+    monkeypatch.setattr(catalog, "configure", lambda s: s)
+    monkeypatch.setattr(
+        SparkSession, "createDataFrame", lambda *a, **k: driver_loads.append(a)
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            catalog.load_events(spark, str(sf))
+    finally:
+        spark.conf.set(key, old)
+    assert driver_loads == []
+
+
 def test_source_cardinality_contract():
     """q86's Spark side enumerates the new-corpus sources src10-src19
     explicitly (an In() list pushes to the parquet scan; the oracle's

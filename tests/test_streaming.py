@@ -260,6 +260,23 @@ def test_ingest_stream_exactly_once_and_completion_hook(spark, event_batches, tm
     assert spark.read.parquet(out).count() == expected
 
 
+def test_ingest_stream_returns_per_batch_progress(spark, tmp_path):
+    """The drain's progress explains the run: summed over the returned
+    micro-batches, numInputRows equals the rows landed."""
+    landing = str(tmp_path / "pr_landing")
+    rows = [(i, None, i % 5, "view") for i in range(30)]
+    for part in (rows[:12], rows[12:]):
+        spark.createDataFrame(part, EVENT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(landing)
+    progress = runner.ingest_stream(
+        spark, landing, EVENT_SCHEMA, str(tmp_path / "pr_out"),
+        str(tmp_path / "pr_ck"), fmt="parquet",
+    )
+    assert progress
+    assert sum(p["numInputRows"] for p in progress) == len(rows)
+
+
 def test_stream_sessions_agree_with_batch_gap_logic(spark, event_batches, tmp_path):
     """q34's streaming twin: closed session windows (session_window +
     watermark) must agree with the batch LAG+cumulative-SUM session
@@ -332,7 +349,15 @@ def test_report_stream_maintains_aggregates_and_replay_guard(spark, event_batche
             for r in read_report(spark, rdir).collect()
         }
 
-    runner.report_stream(spark, landing, EVENT_SCHEMA, out, ck, spec, rdir, fmt="parquet")
+    def drain():
+        runner.ingest_stream(
+            spark, landing, EVENT_SCHEMA, out, ck, fmt="parquet",
+            on_batch_complete=lambda df, bid: runner.refresh_report_once(
+                spark, rdir, spec, df, bid
+            ),
+        )
+
+    drain()
     got = snapshot()
     want = {
         r.event_type: (r.n_rows, int(r.sum_user))
@@ -341,7 +366,7 @@ def test_report_stream_maintains_aggregates_and_replay_guard(spark, event_batche
     assert got == want and got
 
     # restart, no new files → unchanged (checkpoint + marker)
-    runner.report_stream(spark, landing, EVENT_SCHEMA, out, ck, spec, rdir, fmt="parquet")
+    drain()
     assert snapshot() == got
 
     # crash-replay simulation: re-deliver an already-applied batch id
@@ -395,6 +420,55 @@ def test_dedup_ingest_stream_curates_corpus_across_batches(spark, tmp_path):
     # corpus is never re-shingled on later batches
     idx = spark.read.parquet(corpus + "__index/sh")
     assert {r.id for r in idx.select("id").collect()} == {1, 2, 12}
+
+
+def test_dedup_ingest_stream_replay_after_index_write_is_idempotent(
+    spark, tmp_path
+):
+    """A crash after a batch's corpus and index writes but before its
+    checkpoint commit re-runs the same batch id. The index probe reads
+    only the other batches' dirs, so the replay re-derives the same
+    survivors: corpus and index are unchanged."""
+    from pyspark.sql.types import LongType, StringType
+
+    doc_schema = StructType(
+        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    )
+    landing = str(tmp_path / "drp_landing")
+    corpus = str(tmp_path / "drp_corpus")
+    ck = str(tmp_path / "ck_drp")
+    dup_text = "alpha beta gamma delta epsilon zeta eta theta"
+
+    def arrive(rows):
+        spark.createDataFrame(rows, doc_schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(landing)
+
+    def snapshot():
+        return (
+            {tuple(r) for r in spark.read.parquet(corpus).collect()},
+            {
+                (r.id, tuple(r.sh))
+                for r in spark.read.parquet(corpus + "__index/sh").collect()
+            },
+            {tuple(r) for r in spark.read.parquet(corpus + "__index/bands").collect()},
+        )
+
+    def drain():
+        return runner.dedup_ingest_stream(spark, landing, doc_schema, corpus, ck)
+
+    arrive([(1, dup_text), (2, "one two three four five six seven eight")])
+    drain()
+    arrive([(11, dup_text), (12, "crimson harbor lantern whisper meadow orbit")])
+    drain()
+    before = snapshot()
+    assert {r[0] for r in before[0]} == {1, 2, 12}
+    # the crash: batch 1 wrote everything, its commit (and the commit's
+    # checksum sidecar) never landed
+    for f in ("1", ".1.crc"):
+        os.remove(os.path.join(ck, "commits", f))
+    assert [p["batchId"] for p in drain() if p["numInputRows"]] == [1]
+    assert snapshot() == before
 
 
 def test_segment_dedup_ingest_stream_matches_q70_semantics(spark, tmp_path):
@@ -1368,3 +1442,61 @@ def test_abtest_monitor_replay_does_not_double_count(
     runner.abtest_monitor_stream(spark, land2, EVENT_SCHEMA, state, ck)
     after = runner.read_abtest_readout(spark, state).collect()
     assert after == before
+
+
+def test_zero_row_batch_dir_reads_back_as_empty(spark, tmp_path):
+    """The premise that lets the sinks write every batch dir, even an
+    empty one: a zero-row overwrite leaves a schema-only part file, so
+    a later probe over the other batches reads 0 rows with the right
+    schema (for a filtered scan and for a post-shuffle distinct)."""
+    src = str(tmp_path / "zr_src")
+    spark.range(100).select((F.col("id") % 7).alias("k")).write.parquet(src)
+    none = spark.read.parquet(src).filter(F.col("k") < 0)
+    root = str(tmp_path / "zr_index")
+    runner._write_batch(none, root, 0)
+    runner._write_batch(none.distinct(), root, 1)
+    others = runner._other_batches(root, 2)
+    assert sorted(os.path.basename(d) for d in others) == ["batch=0", "batch=1"]
+    assert runner._other_batches(root, 1) == [os.path.join(root, "batch=0")]
+    probe = spark.read.parquet(*others)
+    assert probe.schema.names == ["k"]
+    assert probe.count() == 0
+
+
+def test_streaming_runner_makes_each_replay_decision_once():
+    """The drain and the per-batch directory rule live in one helper
+    each, so the streaming sinks cannot fork them again: availableNow
+    and awaitTermination appear only in _drain, ``batch={`` only in
+    _write_batch/_other_batches; no sink heals or deletes a dir, and an
+    isEmpty() test only returns early, never guards a batch-dir write."""
+    import ast
+
+    with open(runner.__file__, encoding="utf-8") as fh:
+        text = fh.read()
+    tree = ast.parse(text)
+    owner = {}
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            for ln in range(node.lineno, node.end_lineno + 1):
+                owner[ln] = node.name
+    allowed = {
+        "availableNow": {"_drain"},
+        "awaitTermination": {"_drain"},
+        "batch={": {"_write_batch", "_other_batches"},
+    }
+    for token, fns in allowed.items():
+        holders = {
+            owner.get(i) for i, line in enumerate(text.splitlines(), 1) if token in line
+        }
+        assert holders and holders <= fns, (token, holders)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef) and node.name == "sink":
+            called = {
+                c.func.attr
+                for c in ast.walk(node)
+                if isinstance(c, ast.Call) and isinstance(c.func, ast.Attribute)
+            }
+            assert not called & {"heal", "heal_children", "rmtree"}, called
+        if isinstance(node, ast.If) and "isEmpty" in ast.unparse(node.test):
+            assert [type(b) for b in node.body] == [ast.Return], ast.unparse(node)
+            assert not node.orelse
