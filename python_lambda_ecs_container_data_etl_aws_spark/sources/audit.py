@@ -135,7 +135,11 @@ def load_ingest_log(spark: SparkSession, log_dir: str) -> DataFrame:
 
 def status_rollup(log: DataFrame) -> DataFrame:
     """Loads per (log_date, status): the reference's post-load probe
-    (`2.2:389` "check log_for_loading for today's status")."""
+    (`2.2:389` "check log_for_loading for today's status").
+
+    The rollup has one row per day and status, so it is sorted as one
+    coalesced partition: a global sort over many partitions would first
+    run a range-sampling job to pick its bounds."""
     return (
         log.groupBy("log_date", "status")
         .agg(
@@ -143,6 +147,7 @@ def status_rollup(log: DataFrame) -> DataFrame:
             F.sum("loaded_rows").cast("bigint").alias("total_rows"),
             F.sum("bad_rows").cast("bigint").alias("total_bad"),
         )
+        .coalesce(1)
         .orderBy("log_date", "status")
     )
 

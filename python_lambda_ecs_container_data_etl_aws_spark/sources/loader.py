@@ -14,7 +14,9 @@ Reference contract being re-expressed (cited, not copied):
 Spark shape: one PERMISSIVE read with a corrupt-record column; good
 rows are re-projected to canonical order (missing columns become
 typed NULLs, extras are dropped); bad rows go to quarantine. Source,
-bad and good row counts come from one aggregate over the cached scan.
+bad and good row counts come from one aggregate over the cached scan,
+and so does, for a keyed load, the set of buckets the good rows hash
+into.
 The count-compare commit gate is :func:`validate_counts`.
 """
 
@@ -24,7 +26,7 @@ import os
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.sql.types import StringType, StructField, StructType
@@ -43,6 +45,7 @@ class IngestResult:
     good_rows: int
     accepted: bool
     raw: DataFrame | None = None  # the cached scan; release() when done
+    buckets: list[int] | None = None  # distinct ``bucket`` values of good rows
 
     def release(self) -> None:
         """Drop the cached raw relation (call after the last action
@@ -59,6 +62,7 @@ def read_csv_canonical(
     sep: str = ",",
     encoding: str = "UTF-8",
     maxerrors: int = 5,
+    bucket: Column | None = None,
 ) -> IngestResult:
     """Read a CSV into the canonical column order, quarantining bad rows.
 
@@ -66,6 +70,10 @@ def read_csv_canonical(
     land in ``_corrupt_record``. Canonical projection tolerates column
     reordering and extra columns; missing canonical columns surface as
     NULL (schema drift is observable, not fatal).
+
+    ``bucket`` (internal to the ingest pipeline) is an expression over
+    the canonical columns; its distinct values over the good rows come
+    back sorted in ``buckets``, from the same counting aggregate.
     """
     # Pass 1: header only → the file's own column order. Pass 2: full
     # read with an explicit all-string schema + corrupt-record column —
@@ -104,23 +112,24 @@ def read_csv_canonical(
         .withColumn("__src_version", F.lit(stamp))
     ).cache()
     have = set(file_cols)
-    bad = raw.filter(F.col(CORRUPT_COL).isNotNull()).select(
-        F.col(CORRUPT_COL).alias("raw_line")
-    )
-    good = raw.filter(F.col(CORRUPT_COL).isNull()).drop("__src_version")
-    projected = good.select(
-        *[
-            F.col(c) if c in have else F.lit(None).cast("string").alias(c)
-            for c in spec.canonical_columns
-        ]
-    )
+    is_good = F.col(CORRUPT_COL).isNull()
+    bad = raw.filter(~is_good).select(F.col(CORRUPT_COL).alias("raw_line"))
+    good = raw.filter(is_good).drop("__src_version")
+    canonical = [
+        F.col(c) if c in have else F.lit(None).cast("string").alias(c)
+        for c in spec.canonical_columns
+    ]
+    projected = good.select(*canonical)
     # one aggregate over the cached scan (its first action fills the
-    # cache) yields every count the gates need
-    counts = raw.agg(
+    # cache) yields every count the gates need, and the bucket set
+    aggs = [
         F.count(F.lit(1)).alias("src"),
         F.count(F.col(CORRUPT_COL)).alias("bad"),
-        F.count(F.when(F.col(CORRUPT_COL).isNull(), 1)).alias("good"),
-    ).first()
+        F.count(F.when(is_good, 1)).alias("good"),
+    ]
+    if bucket is not None:
+        aggs.append(F.collect_set(F.when(is_good, bucket)).alias("buckets"))
+    counts = raw.select(CORRUPT_COL, *canonical).agg(*aggs).first()
     return IngestResult(
         good=projected,
         quarantine=bad,
@@ -129,6 +138,7 @@ def read_csv_canonical(
         good_rows=counts["good"],
         accepted=counts["bad"] <= maxerrors,
         raw=raw,
+        buckets=None if bucket is None else sorted(counts["buckets"]),
     )
 
 

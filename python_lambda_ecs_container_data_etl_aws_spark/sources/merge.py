@@ -3,38 +3,69 @@ contract (`2.2 loading-lambda-for-mysql.py:209-217`, SP call
 `2.2:306-316`): on key collision the delta wins; unmatched delta rows
 insert; unmatched permanent rows persist.
 
-Plain-Parquet strategy: full-outer join + coalesce (delta side first),
-written by deterministic partition overwrite for idempotency (ST3).
+Plain-Parquet strategy: one union of the permanent rows and the delta,
+and one window over the keys that marks every permanent row whose key a
+delta row shares (:func:`mark_replaced`). The merged table is the delta
+plus the unmarked permanent rows; the marked rows are exactly what the
+merge replaces, which is the maintained report's retraction. Delta rows
+are kept verbatim, so a matched key holds exactly the delta's rows, and
+a key with a NULL part never matches, as in an equi-join. Written by
+deterministic partition overwrite for idempotency (ST3).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+FROM_DELTA = "__from_delta"
+REPLACED = "__replaced"
+
+
+def mark_replaced(
+    perm: DataFrame,
+    delta: DataFrame,
+    keys: list[str],
+    cluster: str | None = None,
+    n_parts: int | None = None,
+) -> DataFrame:
+    """``perm`` and ``delta`` as one relation: perm's columns, plus
+    ``FROM_DELTA`` (the row's side) and ``REPLACED`` (a perm row whose
+    key a delta row shares). Delta must carry perm's columns.
+
+    With ``cluster``, the union is repartitioned into ``n_parts`` on
+    that column first and the window runs within it, so the one shuffle
+    also clusters the result by ``cluster`` (the ingest bucket column):
+    each value lands in one task."""
+    both = perm.withColumn(FROM_DELTA, F.lit(False)).unionByName(
+        delta.select(*perm.columns).withColumn(FROM_DELTA, F.lit(True))
+    )
+    if cluster is not None:
+        both = both.repartition(n_parts, F.col(cluster))
+    by_key = Window.partitionBy(*([cluster] if cluster else []), *keys)
+    key_set = F.lit(True)
+    for k in keys:
+        key_set = key_set & F.col(k).isNotNull()
+    return both.withColumn(
+        REPLACED,
+        ~F.col(FROM_DELTA) & key_set & F.max(F.col(FROM_DELTA)).over(by_key),
+    )
+
+
+def merged_rows(marked: DataFrame) -> DataFrame:
+    """The upsert result of a :func:`mark_replaced` relation."""
+    return marked.filter(~F.col(REPLACED)).drop(FROM_DELTA, REPLACED)
+
+
+def replaced_rows(marked: DataFrame) -> DataFrame:
+    """The perm rows a :func:`mark_replaced` relation's delta replaces."""
+    return marked.filter(F.col(REPLACED)).drop(FROM_DELTA, REPLACED)
 
 
 def upsert(perm: DataFrame, delta: DataFrame, keys: list[str]) -> DataFrame:
     """Merge ``delta`` into ``perm`` on ``keys``; delta wins. Columns =
     perm's columns (delta must carry them all)."""
-    p, d = perm.alias("p"), delta.alias("d")
-    cond = None
-    for k in keys:
-        c = F.col(f"p.{k}") == F.col(f"d.{k}")
-        cond = c if cond is None else (cond & c)
-    out_cols = []
-    for c in perm.columns:
-        if c in keys:
-            out_cols.append(F.coalesce(F.col(f"d.{c}"), F.col(f"p.{c}")).alias(c))
-        else:
-            # delta wins whenever the delta row exists (matched on key),
-            # even if its value is NULL — key-presence flag, not value
-            # coalesce, decides.
-            out_cols.append(
-                F.when(F.col(f"d.{keys[0]}").isNotNull(), F.col(f"d.{c}"))
-                .otherwise(F.col(f"p.{c}"))
-                .alias(c)
-            )
-    return p.join(d, cond, "full_outer").select(*out_cols)
+    return merged_rows(mark_replaced(perm, delta, keys))
 
 
 def incremental_agg_merge(

@@ -13,14 +13,21 @@ Scale design — the permanent table is hash-bucket partitioned:
 
 ``__bucket = pmod(xxhash64(keys), n_buckets)`` is derivable from the
 merge keys alone, so an arriving delta knows exactly which partitions
-it can touch. The merge then
+it can touch; the CSV read's counting aggregate returns that set. The
+merge then
   1. reads ONLY those partitions (partition pruning — untouched buckets
-     are never scanned),
-  2. upserts the delta into that bounded subset,
-  3. writes the result to a staging dir and swaps each touched bucket
-     directory in through the crash-safe swap (sources/swap.py): a crash
-     mid-swap leaves every bucket either fully old or fully new, never
-     destroyed.
+     are never scanned), with the schema the table's ``.layout.json``
+     records, so no schema-inference job runs (sources/recorded.py);
+  2. unions them with the delta, shuffles once on the bucket column and
+     marks, over a window on (bucket, keys), every permanent row the
+     delta replaces (merge.mark_replaced). That one persisted pass
+     feeds both the report's retraction (the marked rows) and the
+     merged buckets (the delta plus the unmarked rows) — no join;
+  3. writes the merged buckets to a staging dir, one file per bucket
+     (the window already holds each bucket in one task), and swaps each
+     touched bucket directory in through the crash-safe swap
+     (sources/swap.py): a crash mid-swap leaves every bucket either
+     fully old or fully new, never destroyed.
 Cost per arriving file is proportional to the delta's bucket fanout,
 NOT the table size — the property that keeps a 5 MiB file from
 rewriting a 100 TB table. On Delta/Iceberg steps 2-3 collapse into
@@ -39,15 +46,22 @@ import warnings
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import archive as archive_mod
-from . import registry, swap
+from . import recorded, registry, swap
 from .audit import log_ingest
 from .loader import read_csv_canonical, validate_counts
-from .merge import upsert
-from .report import ReportSpec, aggregate_state, last_applied_marker, refresh_report
+from .merge import mark_replaced, merged_rows, replaced_rows
+from .report import (
+    ReportSpec,
+    aggregate_state,
+    contributions,
+    last_applied_marker,
+    refresh_report,
+)
 from .swap import stranded_asides
 
 BUCKET_COL = "__bucket"
@@ -73,11 +87,15 @@ def _bucket_expr(keys: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
 
-def _count_parquet(spark: SparkSession, path: str) -> int:
-    """Row count of a written dir — parquet footers only, no data scan.
-    The single seam every 'never install a failed write' read-back gate
-    goes through (ingest staging, compaction staging)."""
-    return spark.read.parquet(path).count()
+def _count_parquet(
+    spark: SparkSession, path: str | list[str], schema: StructType
+) -> int:
+    """Row count of a written dir (or files), read with the schema of the
+    frame just written — parquet footers only, no data scan, no
+    inference. The single seam every 'never install a failed write'
+    read-back gate goes through (ingest staging, keyless append,
+    compaction staging)."""
+    return recorded.read(spark, path, schema).count()
 
 
 def _heal(table_dir: str) -> None:
@@ -107,13 +125,70 @@ def _read_layout(table_dir: str) -> dict | None:
         return json.load(fh)
 
 
-def _write_layout(table_dir: str, keys: list[str], n_buckets: int) -> None:
+def _write_layout(
+    table_dir: str, keys: list[str], n_buckets: int, schema: StructType
+) -> None:
     import json
 
     tmp = os.path.join(table_dir, "." + _LAYOUT_FILE + ".tmp")
     with open(tmp, "w") as fh:
-        json.dump({"keys": list(keys), "n_buckets": int(n_buckets)}, fh)
+        json.dump(
+            {
+                "keys": list(keys),
+                "n_buckets": int(n_buckets),
+                "schema": schema.jsonValue(),
+            },
+            fh,
+        )
     os.replace(tmp, os.path.join(table_dir, _LAYOUT_FILE))
+
+
+def _table_schema(layout: dict | None) -> StructType | None:
+    """The schema a layout records; None for a table without one (keyless,
+    or bucketed before schemas were recorded), which reads inferred."""
+    if layout is None or "schema" not in layout:
+        return None
+    return StructType.fromJson(layout["schema"])
+
+
+def _stage_merge(
+    perm: DataFrame | None,
+    delta: DataFrame,
+    keys: list[str],
+    n_parts: int,
+    staging: str,
+    refresh: Callable[[DataFrame | None], None],
+) -> tuple[StructType, int]:
+    """Upsert ``delta`` into ``perm`` (None for a fresh table) and write
+    the result to ``staging``, partitioned by bucket, one file per
+    bucket. ``refresh`` first gets the perm rows the delta replaces.
+    Returns the written schema and row count, the count observed on
+    the write itself.
+
+    The marked relation feeds the retraction and the write, so it is
+    persisted: the touched buckets are scanned and shuffled once. This
+    function owns it and releases it on every way out."""
+    if perm is None:
+        refresh(None)
+        # one bucket -> one task -> one file: no small-file accretion
+        return _observed_write(delta.repartition(n_parts, F.col(BUCKET_COL)), staging)
+    marked = mark_replaced(perm, delta, keys, BUCKET_COL, n_parts).persist()
+    try:
+        refresh(replaced_rows(marked))
+        return _observed_write(merged_rows(marked), staging)
+    finally:
+        marked.unpersist()
+
+
+def _observed_write(rows: DataFrame, staging: str) -> tuple[StructType, int]:
+    obs = Observation("staged")
+    (
+        rows.observe(obs, F.count(F.lit(1)).alias("rows"))
+        .write.mode("overwrite")
+        .partitionBy(BUCKET_COL)
+        .parquet(staging)
+    )
+    return rows.schema, int(obs.get["rows"])
 
 
 def ingest_file(
@@ -146,9 +221,10 @@ def ingest_file(
     ``report_spec``/``report_dir`` maintain an incremental report table
     alongside the load — the reference's load→rebuild-report loop
     (`2.2:376-398`) with the rebuild made delta-scoped
-    (report.refresh_report): the retraction state is aggregated from
-    exactly the rows the merge replaces, the delta state from this
-    file's rows, and the fact table is never re-scanned.
+    (report.refresh_report): the retraction is exactly the rows the
+    merge marks as replaced, the delta is this file's rows, both fold
+    into the report's one aggregate as row-level contributions, and the
+    fact table is never re-scanned.
     """
 
     def _finish(report: IngestReport, rejected: bool = False) -> IngestReport:
@@ -171,7 +247,20 @@ def ingest_file(
             rejected=route == registry.ROUTE_QUARANTINE,
         )
 
-    res = read_csv_canonical(spark, file_path, spec, maxerrors=maxerrors)
+    table_dir = os.path.join(warehouse_dir, spec.table)
+    # the bucket function is part of the table's physical layout: a
+    # recorded layout fixes it before the read, so the read's counting
+    # aggregate can also return the buckets the delta touches
+    layout = _read_layout(table_dir) if keys is not None else None
+    if layout is not None:
+        n_buckets = int(layout["n_buckets"])
+    res = read_csv_canonical(
+        spark,
+        file_path,
+        spec,
+        maxerrors=maxerrors,
+        bucket=None if keys is None else _bucket_expr(keys, n_buckets),
+    )
     # the cached CSV scan is released on every way out — a failed
     # staging write, read-back or swap included
     try:
@@ -193,7 +282,6 @@ def ingest_file(
                 rejected=True,
             )
 
-        table_dir = os.path.join(warehouse_dir, spec.table)
         # crashes interrupted mid-swap must be healed BEFORE the existence
         # check and the merge's permanent-table scan below — otherwise this
         # load would recreate the table from one delta (whole-table swap)
@@ -204,11 +292,11 @@ def ingest_file(
         #    minus bad rows vs the good rows the canonical read produced
         #    (all three from the read's one counting pass);
         #  - write gate: the files THIS load physically wrote, read back
-        #    (parquet footers — no data scan), must hold the rows the plan
-        #    claimed. Comparing the plan against itself would be a
-        #    tautology; the read-back catches lost/partial writes, and
-        #    every count is bounded by the delta/touched buckets, never the
-        #    table.
+        #    (parquet footers — no data scan), must hold the rows the
+        #    write observed itself emitting. Comparing the plan against
+        #    itself would be a tautology; the read-back catches
+        #    lost/partial writes, and every count is bounded by the
+        #    delta/touched buckets, never the table.
         loaded = res.good_rows
         extras: dict = {}
         write_ok = True
@@ -241,35 +329,38 @@ def ingest_file(
             report_spec is not None and table_existed and not os.path.isdir(rdir)
         )
 
-        def _refresh_incremental(pre_merge: DataFrame | None) -> None:
+        def _refresh_incremental(replaced: DataFrame | None) -> None:
             if report_spec is None or bootstrap_report:
                 return
             if last_applied_marker(rdir) == load_id:
                 return  # crash-recovery re-run: refresh already landed
-            retract = None
-            if pre_merge is not None:
-                replaced = pre_merge.join(
-                    res.good.select(*keys).distinct(), keys, "left_semi"
+            # (last_applied_marker healed rdir.) An existing report folds
+            # row-level contributions in its one aggregate; a first-ever
+            # report is the delta's aggregate state.
+            if os.path.isdir(rdir):
+                delta_state = contributions(res.good, report_spec)
+                retract = (
+                    None if replaced is None else contributions(replaced, report_spec)
                 )
-                retract = aggregate_state(replaced, report_spec)
+            else:
+                delta_state, retract = aggregate_state(res.good, report_spec), None
             refresh_report(
                 spark,
                 rdir,
                 report_spec,
-                delta_state=aggregate_state(res.good, report_spec),
+                delta_state=delta_state,
                 retract_state=retract,
                 marker_batch_id=load_id,
             )
 
         if keys is not None:
-            # the bucket function is part of the table's physical layout:
-            # honoring a DIFFERENT n_buckets on a later load would hash the
+            # Honoring a DIFFERENT n_buckets on a later load would hash the
             # delta into buckets the existing rows don't occupy — the merge
             # would never see the old copy of a key and the table would end
-            # up with duplicate keys, silently. The layout file wins; a
-            # keys mismatch rejects the load through the normal path (audit
-            # row + on_reject + cache release), like every other failure.
-            layout = _read_layout(table_dir) if table_existed else None
+            # up with duplicate keys, silently. The layout file wins (its
+            # n_buckets was adopted before the read); a keys mismatch
+            # rejects the load through the normal path (audit row +
+            # on_reject + cache release), like every other failure.
             bucketed = table_existed and _is_bucketed(table_dir)
             if layout is not None:
                 if list(layout["keys"]) != list(keys):
@@ -286,7 +377,6 @@ def ingest_file(
                         ),
                         rejected=True,
                     )
-                n_buckets = int(layout["n_buckets"])
             elif bucketed:
                 # pre-layout table: the caller's n_buckets is a CLAIM, not a
                 # record. Validate it against the stored bucket values once
@@ -295,7 +385,7 @@ def ingest_file(
                 # re-runnable error, a wrong claim adopted is permanent
                 # silent duplicate-key corruption.
                 mismatched = (
-                    spark.read.parquet(table_dir)
+                    recorded.read(spark, table_dir, None)
                     .filter(_bucket_expr(keys, n_buckets) != F.col(BUCKET_COL))
                     .limit(1)
                     .count()
@@ -336,53 +426,30 @@ def ingest_file(
                 #    the whole table into n_buckets buckets;
                 #  - fresh table: the delta alone.
                 if bucketed:
-                    touched = sorted(
-                        r[BUCKET_COL]
-                        for r in delta.select(BUCKET_COL).distinct().collect()
-                    )
-                    perm = spark.read.parquet(table_dir).filter(
-                        F.col(BUCKET_COL).isin(touched)
-                    )
-                    n_parts = max(len(touched), 1)
+                    perm = recorded.read(
+                        spark, table_dir, _table_schema(layout)
+                    ).filter(F.col(BUCKET_COL).isin(res.buckets))
+                    n_parts = len(res.buckets)
                 elif table_existed:
-                    perm = spark.read.parquet(table_dir).withColumn(
+                    perm = recorded.read(spark, table_dir, None).withColumn(
                         BUCKET_COL, _bucket_expr(keys, n_buckets)
                     )
                     n_parts = n_buckets
                 else:
                     perm, n_parts = None, n_buckets
-                _refresh_incremental(perm)
-                merged = delta if perm is None else upsert(perm, delta, keys).persist()
                 staging = table_dir + "__staging"
-                # cluster by bucket before the partitioned write: the merge
-                # join shuffles on the MERGE KEYS, so without this every
-                # write task holds rows of many buckets and each bucket dir
-                # gets one file per task — small-file accretion that at
-                # scale turns scans into file-open storms. One bucket → one
-                # task → one file.
-                try:
-                    (
-                        merged.repartition(n_parts, F.col(BUCKET_COL))
-                        .write.mode("overwrite")
-                        .partitionBy(BUCKET_COL)
-                        .parquet(staging)
-                    )
-                    # a fresh table's rows == loaded by construction (the
-                    # bucket column adds no rows); a merge counts its cached
-                    # result — no join re-run
-                    expected = loaded if perm is None else merged.count()
-                finally:
-                    if perm is not None:
-                        merged.unpersist()
-                persisted = _count_parquet(spark, staging)
+                schema, expected = _stage_merge(
+                    perm, delta, keys, n_parts, staging, _refresh_incremental
+                )
+                persisted = _count_parquet(spark, staging, schema)
                 write_ok = persisted == expected
                 extras["persisted_rows"] = persisted
                 if write_ok:
                     extras["buckets_touched"] = swap.swap_children(
                         staging, table_dir, f"{BUCKET_COL}="
                     )
-                    if layout is None:
-                        _write_layout(table_dir, keys, n_buckets)
+                    if _table_schema(layout) is None:
+                        _write_layout(table_dir, keys, n_buckets, schema)
                 else:
                     # NEVER install a staging write that lost rows: the old
                     # buckets are the only good copy, and aborting here is
@@ -405,7 +472,7 @@ def ingest_file(
                 if f.endswith(".parquet") and f not in before_files
             ]
             persisted = (
-                spark.read.parquet(*new_files).count() if new_files else 0
+                _count_parquet(spark, new_files, res.good.schema) if new_files else 0
             )
             write_ok = persisted == loaded
             extras["persisted_rows"] = persisted
@@ -422,7 +489,9 @@ def ingest_file(
                     shutil.rmtree(table_dir, ignore_errors=True)
 
         if bootstrap_report:
-            merged_facts = spark.read.parquet(table_dir)
+            merged_facts = recorded.read(
+                spark, table_dir, _table_schema(_read_layout(table_dir))
+            )
             if BUCKET_COL in merged_facts.columns:
                 merged_facts = merged_facts.drop(BUCKET_COL)
             refresh_report(
@@ -483,7 +552,7 @@ def read_permanent(
         if strict:
             raise RuntimeError(msg)
         warnings.warn(msg, stacklevel=2)
-    df = spark.read.parquet(table_dir)
+    df = recorded.read(spark, table_dir, _table_schema(_read_layout(table_dir)))
     return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
 
@@ -518,12 +587,13 @@ def compact_table(
     _heal(table_dir)
     if not os.path.isdir(table_dir):
         return 0
+    schema = _table_schema(_read_layout(table_dir))
     if not _is_bucketed(table_dir):
         n_files = sum(1 for f in os.listdir(table_dir) if f.endswith(".parquet"))
         if n_files <= max_files_per_bucket:
             return 0
         staging = table_dir + "__compact"
-        src = spark.read.parquet(table_dir)
+        src = recorded.read(spark, table_dir, schema)
         expected = src.count()
         src.repartition(max_files_per_bucket).write.mode("overwrite").parquet(
             staging
@@ -533,7 +603,7 @@ def compact_table(
         # row before the live dir is replaced — a silently short write
         # must never displace good data.
         persisted = (
-            _count_parquet(spark, staging) if expected else 0
+            _count_parquet(spark, staging, src.schema) if expected else 0
         )
         if persisted != expected:
             shutil.rmtree(staging, ignore_errors=True)
@@ -556,7 +626,7 @@ def compact_table(
             todo.append(int(entry.split("=", 1)[1]))
     if not todo:
         return 0
-    oversized = spark.read.parquet(table_dir).filter(
+    oversized = recorded.read(spark, table_dir, schema).filter(
         F.col(BUCKET_COL).isin(todo)
     )
     expected = oversized.count()
@@ -570,7 +640,7 @@ def compact_table(
     # read-back gate before the per-bucket swap, mirroring ingest_file:
     # count the staged rows for the touched buckets (footer-only scan)
     # against the pre-compaction count and abort on mismatch
-    persisted = _count_parquet(spark, staging) if expected else 0
+    persisted = _count_parquet(spark, staging, oversized.schema) if expected else 0
     if persisted != expected:
         shutil.rmtree(staging, ignore_errors=True)
         raise RuntimeError(

@@ -10,12 +10,16 @@ load (`2.2 loading-lambda-for-mysql.py:376-398`, logged to
 aggregates of (a) the rows the merge replaced and (b) the arriving
 delta: ``new = base − retract + delta`` per group
 (merge.incremental_agg_merge). Cost scales with the delta and the
-number of groups, never the fact table.
+number of groups, never the fact table. The retraction and the delta
+can be passed as row-level :func:`contributions`, so the refresh's one
+aggregate folds them together with the base.
 
 The report table itself is |groups|-sized, so a full rewrite of the
 report directory per refresh, installed by the crash-safe swap
 (sources/swap.py), is the cheap part; the win is never re-scanning the
-facts.
+facts. Each refresh records the state's schema in the report dir
+(sources/recorded.py), so reading the report launches no
+schema-inference job.
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import swap
+from . import recorded, swap
 from .merge import incremental_agg_merge
 
 
@@ -58,6 +62,17 @@ def aggregate_state(df: DataFrame, spec: ReportSpec) -> DataFrame:
     )
 
 
+def contributions(df: DataFrame, spec: ReportSpec) -> DataFrame:
+    """Each row of ``df`` as its own additive state: ``n_rows`` = 1 plus
+    each ``sums`` expression, not yet aggregated. Folding these into an
+    existing report costs no aggregate of its own."""
+    return df.select(
+        *[F.col(k) for k in spec.group_keys],
+        F.lit(1).cast("bigint").alias("n_rows"),
+        *[F.expr(expr).alias(name) for name, expr in spec.sums],
+    )
+
+
 def refresh_report(
     spark: SparkSession,
     report_dir: str,
@@ -74,10 +89,16 @@ def refresh_report(
     lazily — pipeline.ingest_file refreshes before its bucket swap),
     or materialize the retract first.
 
+    Both states may be aggregated (:func:`aggregate_state`) or
+    row-level (:func:`contributions`) when ``report_dir`` exists; a
+    first-ever report takes ``delta_state`` as it is, so it must be
+    aggregated then.
+
     ``marker_batch_id`` (replay guard — a streaming batch id or a
-    pipeline load id) is written into the staging dir as ``_last_batch``
-    BEFORE the swap — underscore-prefixed so parquet readers skip it —
-    making state and marker flip in the same atomic rename (see
+    pipeline load id) is written into the staging dir as ``_last_batch``,
+    next to the state's recorded ``_schema``, BEFORE the swap —
+    underscore-prefixed so parquet readers skip them — making state,
+    schema and marker flip in the same atomic rename (see
     streaming.runner.refresh_report_once / pipeline.ingest_file).
 
     A MISSING ``report_dir`` is treated as a first-ever bootstrap: the
@@ -90,7 +111,7 @@ def refresh_report(
     swap.heal(report_dir)
     if os.path.isdir(report_dir):
         state = incremental_agg_merge(
-            spark.read.parquet(report_dir),
+            read_report(spark, report_dir),
             retract_state,
             delta_state,
             list(spec.group_keys),
@@ -103,6 +124,7 @@ def refresh_report(
     state = state.filter(F.col("n_rows") > 0)
     staging = report_dir.rstrip("/") + "__staging"
     state.coalesce(1).write.mode("overwrite").parquet(staging)
+    recorded.write_schema(staging, state.schema)
     if marker_batch_id is not None:
         with open(os.path.join(staging, "_last_batch"), "w") as fh:
             fh.write(str(marker_batch_id))
@@ -130,4 +152,6 @@ def last_applied_batch(report_dir: str) -> int:
 
 
 def read_report(spark: SparkSession, report_dir: str) -> DataFrame:
-    return spark.read.parquet(report_dir)
+    """The report with its recorded schema (inferred for a report
+    written before schemas were recorded)."""
+    return recorded.read(spark, report_dir, recorded.load_schema(report_dir))

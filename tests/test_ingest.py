@@ -6,6 +6,7 @@ idempotence, archive moves, report export."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import SparkSession
@@ -29,6 +30,7 @@ from python_lambda_ecs_container_data_etl_aws_spark.sources.loader import (
 from python_lambda_ecs_container_data_etl_aws_spark.sources.pipeline import (
     IngestReport,
     ingest_file,
+    read_permanent,
 )
 from python_lambda_ecs_container_data_etl_aws_spark.sources.report import ReportSpec, read_report
 from tests.conftest import SF_DIR
@@ -126,6 +128,24 @@ def test_upsert_semantics_and_idempotence(spark):
     # idempotent: applying the same delta again changes nothing
     again = {r.k: (r.s, r.v) for r in merge.upsert(out, delta, ["k"]).collect()}
     assert again == rows
+
+    # composite keys: a key with a NULL part matches nothing, so its
+    # delta row inserts verbatim (its first key NULL included) and its
+    # perm row stays; a key held twice on the perm side is replaced by
+    # exactly the delta's one row
+    schema = "k1 int, k2 string, v string"
+    perm2 = spark.createDataFrame(
+        [(1, "a", "p1"), (2, "b", "p2"), (2, "b", "p2dup"), (None, "z", "pnull")],
+        schema,
+    )
+    delta2 = spark.createDataFrame(
+        [(None, "z", "dnull"), (2, "b", "d2"), (3, None, "d3")], schema
+    )
+    got = Counter(tuple(r) for r in merge.upsert(perm2, delta2, ["k1", "k2"]).collect())
+    assert got == Counter(
+        [(1, "a", "p1"), (2, "b", "d2"), (None, "z", "pnull"),
+         (None, "z", "dnull"), (3, None, "d3")]
+    )
 
 
 def test_archive_move(tmp_path):
@@ -363,16 +383,78 @@ def test_keyed_delta_builds_no_relation_from_python_rows(spark, tmp_path, monkey
 
 def test_keyed_delta_job_count_is_pinned(spark, tmp_path):
     """Spark jobs for one accepted keyed delta into an existing bucketed
-    table, with the audit log and the maintained report on: 25. It was
-    29 when the read counted source and bad rows with two actions and
-    the pipeline counted good rows with a third. A rise here is a new
-    eager action on the per-file path."""
+    table, with the audit log and the maintained report on: 12. It was
+    25 while the permanent table, the staging read-back and the report
+    were read with schema inference, the touched buckets came from a
+    ``distinct().collect()``, the merge was a full-outer join with a
+    second semi-join for the retraction, and the write gate counted a
+    persisted merge (29 before that, when the read counted with three
+    actions). A rise here is a new eager action on the per-file path."""
     wh, log_dir, delta = _bucketed_table_and_delta(spark, tmp_path)
     before = _jobs_so_far(spark)
     rep = _ingest_keyed(spark, delta, wh, log_dir)
     jobs = _jobs_so_far(spark) - before
     assert rep.status == "ok"
-    assert jobs == 25
+    assert jobs == 12
+
+
+def test_recorded_schema_reads_launch_no_job(spark, tmp_path):
+    """The permanent table and the report record their schemas when
+    written, so building a read of either launches no Spark job (the
+    8-bucket table stays under Spark's parallel-listing threshold)."""
+    wh, _, _ = _bucketed_table_and_delta(spark, tmp_path)
+    before = _jobs_so_far(spark)
+    report = read_report(spark, os.path.join(wh, "priceindex__report"))
+    table = read_permanent(spark, wh, "priceindex")
+    assert _jobs_so_far(spark) == before
+    assert report.columns == ["GEO", "n_rows", "value_sum"]
+    assert table.columns == list(registry.PRICEINDEX.canonical_columns)
+    assert table.count() == 20 and report.count() == 1
+
+
+def test_layout_without_schema_loads_and_then_records_it(spark, tmp_path):
+    """A bucketed table whose ``.layout.json`` predates recorded schemas
+    reads inferred once; its next load lands correctly and records the
+    schema."""
+    import json
+
+    wh, log_dir, delta = _bucketed_table_and_delta(spark, tmp_path)
+    path = os.path.join(wh, "priceindex", ".layout.json")
+    with open(path) as fh:
+        layout = json.load(fh)
+    recorded = layout.pop("schema")
+    with open(path, "w") as fh:
+        json.dump(layout, fh)
+
+    assert _ingest_keyed(spark, delta, wh, log_dir).status == "ok"
+    with open(path) as fh:
+        assert json.load(fh)["schema"] == recorded
+    rows = {r.DGUID: (r.GEO, r.VALUE) for r in read_permanent(spark, wh, "priceindex").collect()}
+    assert len(rows) == 22
+    assert rows["D2"] == ("Quebec", "9.0") and rows["N1"] == ("Canada", "1.0")
+    assert rows["D4"] == ("Canada", "4.5")
+
+
+def test_report_files_disagreeing_with_recorded_schema_raise(spark, tmp_path):
+    """A report dir whose files disagree with its ``_schema`` raises
+    rather than reading retyped values: Spark alone would widen the
+    file's DECIMAL(28,4) to a recorded DECIMAL(38,4), and read a renamed
+    column as NULLs."""
+    from pyspark.sql.types import DecimalType, StructField
+
+    from python_lambda_ecs_container_data_etl_aws_spark.sources import recorded
+
+    wh, _, _ = _bucketed_table_and_delta(spark, tmp_path)
+    rdir = os.path.join(wh, "priceindex__report")
+    schema = recorded.load_schema(rdir)
+    assert schema["value_sum"].dataType == DecimalType(28, 4)
+    for fields in (
+        [f if f.name != "value_sum" else StructField(f.name, DecimalType(38, 4)) for f in schema],
+        [f if f.name != "n_rows" else StructField("n_loads", f.dataType) for f in schema],
+    ):
+        recorded.write_schema(rdir, StructType(fields))
+        with pytest.raises(ValueError, match="schema recorded"):
+            read_report(spark, rdir)
 
 
 def test_audit_row_round_trips_quoted_non_ascii_file_name(spark, tmp_path):

@@ -3,7 +3,7 @@ merge idempotence under hypothesis-generated inputs."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from python_lambda_ecs_container_data_etl_aws_spark.sources import chunking, registry
@@ -75,18 +75,26 @@ def test_upsert_algebra(perm_keys, delta_keys, spark):
         max_size=12,
         unique_by=lambda t: t[0],
     ),
+    dup=st.none() | st.tuples(st.integers(0, 3), st.integers(-50, 50)),
 )
+@example(perm_rows=[(1, 0, 5), (2, 1, 3)], delta_rows=[(1, 2, 7)], dup=(3, 4))
 @settings(max_examples=8, deadline=None)
-def test_incremental_merge_equals_recompute_over_upsert(perm_rows, delta_rows, spark):
+def test_incremental_merge_equals_recompute_over_upsert(
+    perm_rows, delta_rows, dup, spark
+):
     """∀ perm, delta: maintaining the report incrementally
     (base − replaced + delta) equals recomputing it from the merged
     table — the invariant the ingest-wired maintained report relies on,
-    including rows that change group under the upsert."""
+    including rows that change group under the upsert, and a key the
+    perm side holds twice (``dup``: a second copy of the first perm
+    key with its own group and value)."""
     from pyspark.sql import functions as F
 
     from python_lambda_ecs_container_data_etl_aws_spark.sources import merge
 
     schema = "k int, g int, v bigint"
+    if dup is not None and perm_rows:
+        perm_rows = [*perm_rows, (perm_rows[0][0], *dup)]
     perm = spark.createDataFrame(perm_rows or [(None,) * 3], schema).filter(
         "k is not null"
     )

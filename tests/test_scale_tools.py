@@ -1008,7 +1008,7 @@ def test_compact_table_aborts_swap_on_short_staging_write(spark, tmp_path, monke
 
     real = pl._count_parquet
     monkeypatch.setattr(
-        pl, "_count_parquet", lambda spark_, path: real(spark_, path) - 1
+        pl, "_count_parquet", lambda spark_, path, schema: real(spark_, path, schema) - 1
     )
     with _pt.raises(RuntimeError, match="compact_table aborted"):
         pl.compact_table(spark, table_dir)
@@ -1033,7 +1033,7 @@ def test_compact_table_aborts_swap_on_short_staging_write(spark, tmp_path, monke
         ingest_file(spark, str(f), wh2)  # keyless append
     t2 = os.path.join(wh2, "priceindex")
     monkeypatch.setattr(
-        pl, "_count_parquet", lambda spark_, path: real(spark_, path) - 1
+        pl, "_count_parquet", lambda spark_, path, schema: real(spark_, path, schema) - 1
     )
     with _pt.raises(RuntimeError, match="compact_table aborted"):
         pl.compact_table(spark, t2)
@@ -1286,6 +1286,66 @@ def test_swap_protocol_has_one_implementation():
                 if "__old" in text or "os.rename" in text:
                     holders.add(os.path.relpath(path, root))
     assert holders == {os.path.join("sources", "swap.py")}
+
+
+def test_package_tables_have_one_reader_and_one_persist_owner():
+    """Every parquet read in sources/pipeline.py and sources/report.py
+    goes through sources/recorded.read, the one reader that passes a
+    recorded schema (and infers only for a table that records none).
+    pipeline.py persists one relation, the marked merge, in the one
+    function that owns it and releases it in ``finally``, and collects
+    no ``distinct()`` set."""
+    import ast
+
+    import python_lambda_ecs_container_data_etl_aws_spark.sources as src
+
+    root = os.path.dirname(src.__file__)
+
+    def calls(name):
+        with open(os.path.join(root, name), encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    if isinstance(node, ast.Call) and isinstance(
+                        node.func, ast.Attribute
+                    ):
+                        yield fn.name, node
+
+    def parquet_reads(name):
+        return {
+            fn
+            for fn, c in calls(name)
+            if c.func.attr == "parquet" and ".read" in ast.unparse(c.func.value)
+        }
+
+    assert parquet_reads("pipeline.py") == set()
+    assert parquet_reads("report.py") == set()
+    assert parquet_reads("recorded.py") == {"read"}
+
+    persists = [
+        fn for fn, c in calls("pipeline.py") if c.func.attr in ("persist", "cache")
+    ]
+    assert persists == ["_stage_merge"]
+    with open(os.path.join(root, "pipeline.py"), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    owner = next(
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.FunctionDef) and n.name == "_stage_merge"
+    )
+    assert any(
+        isinstance(n, ast.Try)
+        and "unpersist" in ast.unparse(ast.Module(body=n.finalbody, type_ignores=[]))
+        for n in ast.walk(owner)
+    )
+    assert not [
+        fn
+        for fn, c in calls("pipeline.py")
+        if c.func.attr == "collect"
+        and isinstance(c.func.value, ast.Call)
+        and isinstance(c.func.value.func, ast.Attribute)
+        and c.func.value.func.attr == "distinct"
+    ]
 
 
 def test_synth_sf_replication_invariants(tmp_path):
