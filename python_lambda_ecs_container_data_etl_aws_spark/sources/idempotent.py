@@ -11,7 +11,7 @@ this becomes replaceWhere / overwritePartitions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_partitioned_idempotent(
@@ -38,7 +38,3 @@ def write_partitioned_idempotent(
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

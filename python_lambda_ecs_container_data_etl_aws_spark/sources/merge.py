@@ -11,15 +11,35 @@ merge replaces, which is the maintained report's retraction. Delta rows
 are kept verbatim, so a matched key holds exactly the delta's rows, and
 a key with a NULL part never matches, as in an equi-join. Written by
 deterministic partition overwrite for idempotency (ST3).
+The change-log rule, :func:`latest_per_key`, shares that union.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 FROM_DELTA = "__from_delta"
 REPLACED = "__replaced"
+
+
+def _union(
+    perm: DataFrame | None,
+    delta: DataFrame,
+    cluster: str | None,
+    n_parts: int | None,
+) -> DataFrame:
+    """``perm`` (None: a new table) ∪ ``delta``, ``FROM_DELTA`` marking
+    each row's side. With ``cluster``, one shuffle into ``n_parts`` on it
+    puts each value in one task, where a window on (cluster, keys) runs."""
+    both = delta.withColumn(FROM_DELTA, F.lit(True))
+    if perm is not None:
+        both = perm.withColumn(FROM_DELTA, F.lit(False)).unionByName(
+            both.select(*perm.columns, FROM_DELTA)
+        )
+    if cluster is not None:
+        both = both.repartition(n_parts, F.col(cluster))
+    return both
 
 
 def mark_replaced(
@@ -29,26 +49,37 @@ def mark_replaced(
     cluster: str | None = None,
     n_parts: int | None = None,
 ) -> DataFrame:
-    """``perm`` and ``delta`` as one relation: perm's columns, plus
-    ``FROM_DELTA`` (the row's side) and ``REPLACED`` (a perm row whose
-    key a delta row shares). Delta must carry perm's columns.
-
-    With ``cluster``, the union is repartitioned into ``n_parts`` on
-    that column first and the window runs within it, so the one shuffle
-    also clusters the result by ``cluster`` (the ingest bucket column):
-    each value lands in one task."""
-    both = perm.withColumn(FROM_DELTA, F.lit(False)).unionByName(
-        delta.select(*perm.columns).withColumn(FROM_DELTA, F.lit(True))
-    )
-    if cluster is not None:
-        both = both.repartition(n_parts, F.col(cluster))
+    """``perm`` and ``delta`` as one relation (:func:`_union`): perm's
+    columns, plus ``FROM_DELTA`` and ``REPLACED`` (a perm row whose key
+    a delta row shares)."""
     by_key = Window.partitionBy(*([cluster] if cluster else []), *keys)
     key_set = F.lit(True)
     for k in keys:
         key_set = key_set & F.col(k).isNotNull()
-    return both.withColumn(
+    return _union(perm, delta, cluster, n_parts).withColumn(
         REPLACED,
         ~F.col(FROM_DELTA) & key_set & F.max(F.col(FROM_DELTA)).over(by_key),
+    )
+
+
+def latest_per_key(
+    perm: DataFrame | None,
+    delta: DataFrame,
+    keys: list[str],
+    order: list[Column],
+    cluster: str | None = None,
+    n_parts: int | None = None,
+) -> DataFrame:
+    """The change-log rule: of ``perm`` ∪ ``delta`` (:func:`_union`),
+    the first row per key under ``order`` wins. A tombstone is a row
+    like any other, so it stays and outranks older changes."""
+    by_key = Window.partitionBy(*([cluster] if cluster else []), *keys)
+    rn = F.row_number().over(by_key.orderBy(*order))
+    return (
+        _union(perm, delta, cluster, n_parts)
+        .withColumn("__rn", rn)
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", FROM_DELTA)
     )
 
 

@@ -33,6 +33,9 @@ NOT the table size — the property that keeps a 5 MiB file from
 rewriting a 100 TB table. On Delta/Iceberg steps 2-3 collapse into
 ``MERGE INTO`` behind this same function signature (SURVEY §7).
 
+Steps 1-3 are :func:`_upsert_buckets`; the streaming CDC apply writes
+through it too, with its own per-key rule.
+
 The A2 count gate (`2.2:300-308`) validates the rows THIS file
 delivered (src − bad vs rows staged), never the cumulative table —
 comparing a 2-row delta against a billion-row table is meaningless.
@@ -40,13 +43,14 @@ comparing a 2-row delta against a billion-row table is meaningless.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import warnings
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -54,7 +58,7 @@ from . import archive as archive_mod
 from . import recorded, registry, swap
 from .audit import log_ingest
 from .loader import read_csv_canonical, validate_counts
-from .merge import mark_replaced, merged_rows, replaced_rows
+from .merge import latest_per_key, mark_replaced, merged_rows, replaced_rows
 from .report import (
     ReportSpec,
     aggregate_state,
@@ -116,8 +120,6 @@ _LAYOUT_FILE = ".layout.json"
 
 
 def _read_layout(table_dir: str) -> dict | None:
-    import json
-
     path = os.path.join(table_dir, _LAYOUT_FILE)
     if not os.path.isfile(path):
         return None
@@ -128,8 +130,6 @@ def _read_layout(table_dir: str) -> dict | None:
 def _write_layout(
     table_dir: str, keys: list[str], n_buckets: int, schema: StructType
 ) -> None:
-    import json
-
     tmp = os.path.join(table_dir, "." + _LAYOUT_FILE + ".tmp")
     with open(tmp, "w") as fh:
         json.dump(
@@ -157,17 +157,24 @@ def _stage_merge(
     keys: list[str],
     n_parts: int,
     staging: str,
-    refresh: Callable[[DataFrame | None], None],
+    refresh: Callable[[DataFrame | None], None] | None,
+    order: list[Column] | None,
 ) -> tuple[StructType, int]:
-    """Upsert ``delta`` into ``perm`` (None for a fresh table) and write
+    """Merge ``delta`` into ``perm`` (None for a fresh table) and write
     the result to ``staging``, partitioned by bucket, one file per
-    bucket. ``refresh`` first gets the perm rows the delta replaces.
-    Returns the written schema and row count, the count observed on
-    the write itself.
+    bucket. Returns the written schema and row count, the count
+    observed on the write itself.
 
-    The marked relation feeds the retraction and the write, so it is
-    persisted: the touched buckets are scanned and shuffled once. This
-    function owns it and releases it on every way out."""
+    With ``order``, the first row per key under it wins
+    (merge.latest_per_key). Without, the delta replaces the key
+    (merge.mark_replaced) and ``refresh`` first gets the perm rows it
+    replaces. That marked relation feeds the retraction and the write,
+    so it is persisted: the touched buckets are scanned and shuffled
+    once. This function owns it and releases it on every way out."""
+    if order is not None:
+        return _observed_write(
+            latest_per_key(perm, delta, keys, order, BUCKET_COL, n_parts), staging
+        )
     if perm is None:
         refresh(None)
         # one bucket -> one task -> one file: no small-file accretion
@@ -180,15 +187,94 @@ def _stage_merge(
         marked.unpersist()
 
 
-def _observed_write(rows: DataFrame, staging: str) -> tuple[StructType, int]:
+def _observed_write(
+    rows: DataFrame, staging: str, by: tuple[str, ...] = (BUCKET_COL,)
+) -> tuple[StructType, int]:
     obs = Observation("staged")
     (
         rows.observe(obs, F.count(F.lit(1)).alias("rows"))
         .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
+        .partitionBy(*by)
         .parquet(staging)
     )
     return rows.schema, int(obs.get["rows"])
+
+
+def _layout_conflict(
+    spark: SparkSession,
+    table_dir: str,
+    layout: dict | None,
+    keys: list[str],
+    n_buckets: int,
+) -> str | None:
+    """Why bucketing ``keys`` into ``n_buckets`` would corrupt the table
+    (another bucket function hashes a key away from its old rows, so it
+    is silently held twice), or None. Callers adopt a recorded
+    ``n_buckets``; without a layout it is a claim, checked against the
+    stored buckets (one scan) before a write records it."""
+    if layout is not None:
+        if list(layout["keys"]) != list(keys):
+            return (
+                f"table is bucketed on keys={layout['keys']}, "
+                f"load requested keys={list(keys)}"
+            )
+    elif os.path.isdir(table_dir) and _is_bucketed(table_dir):
+        bad = recorded.read(spark, table_dir, None).filter(
+            _bucket_expr(keys, n_buckets) != F.col(BUCKET_COL)
+        )
+        if bad.limit(1).count():
+            return (
+                f"existing bucket layout does not match n_buckets={n_buckets}/"
+                f"keys={list(keys)}; pass the values the table was created with"
+            )
+    return None
+
+
+def _upsert_buckets(
+    spark: SparkSession,
+    table_dir: str,
+    rows: DataFrame,
+    keys: list[str],
+    n_buckets: int,
+    touched: list[int],
+    refresh: Callable[[DataFrame | None], None] | None = None,
+    order: list[Column] | None = None,
+) -> tuple[int, int, int]:
+    """Merge ``rows`` into the bucketed table at ``table_dir`` — the one
+    maintainer of bucketed tables (ingest_file, the CDC stream).
+    ``touched`` are the buckets ``rows`` hash into; ``refresh``/``order``
+    pick the per-key rule (_stage_merge). Only the touched buckets are
+    read (a legacy unbucketed table migrates whole); the merge is
+    staged, and swapped in only if its read-back holds every row
+    written. Returns (rows read back, rows written, buckets swapped)."""
+    layout = _read_layout(table_dir)
+    schema = _table_schema(layout)
+    delta = rows.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
+    if os.path.isdir(table_dir) and _is_bucketed(table_dir):
+        perm = recorded.read(spark, table_dir, schema).filter(
+            F.col(BUCKET_COL).isin(touched)
+        )
+        n_parts = len(touched)
+    elif os.path.isdir(table_dir):
+        perm = recorded.read(spark, table_dir, None).withColumn(
+            BUCKET_COL, _bucket_expr(keys, n_buckets)
+        )
+        n_parts = n_buckets
+    else:
+        perm, n_parts = None, n_buckets
+    staging = table_dir + "__staging"
+    written, expected = _stage_merge(
+        perm, delta, keys, n_parts, staging, refresh, order
+    )
+    persisted = _count_parquet(spark, staging, written)
+    if persisted != expected:
+        # never install a short write: the old buckets are the good copy
+        shutil.rmtree(staging, ignore_errors=True)
+        return persisted, expected, 0
+    swapped = swap.swap_children(staging, table_dir, f"{BUCKET_COL}=")
+    if schema is None:
+        _write_layout(table_dir, keys, n_buckets, written)
+    return persisted, expected, swapped
 
 
 def ingest_file(
@@ -264,6 +350,19 @@ def ingest_file(
     # the cached CSV scan is released on every way out — a failed
     # staging write, read-back or swap included
     try:
+
+        def _reject(detail: str) -> IngestReport:
+            return _finish(
+                IngestReport(
+                    file=fname,
+                    route=spec.table,
+                    bad_rows=res.bad_rows,
+                    status="rejected",
+                    detail=detail,
+                ),
+                rejected=True,
+            )
+
         if quarantine_dir and res.bad_rows > 0:
             (
                 res.quarantine.withColumn("source_file", F.lit(fname))
@@ -271,16 +370,7 @@ def ingest_file(
                 .parquet(quarantine_dir)
             )
         if not res.accepted:
-            return _finish(
-                IngestReport(
-                    file=fname,
-                    route=spec.table,
-                    bad_rows=res.bad_rows,
-                    status="rejected",
-                    detail=f"{res.bad_rows} bad rows > maxerrors={maxerrors}",
-                ),
-                rejected=True,
-            )
+            return _reject(f"{res.bad_rows} bad rows > maxerrors={maxerrors}")
 
         # crashes interrupted mid-swap must be healed BEFORE the existence
         # check and the merge's permanent-table scan below — otherwise this
@@ -354,62 +444,16 @@ def ingest_file(
             )
 
         if keys is not None:
-            # Honoring a DIFFERENT n_buckets on a later load would hash the
-            # delta into buckets the existing rows don't occupy — the merge
-            # would never see the old copy of a key and the table would end
-            # up with duplicate keys, silently. The layout file wins (its
-            # n_buckets was adopted before the read); a keys mismatch
-            # rejects the load through the normal path (audit row +
-            # on_reject + cache release), like every other failure.
-            bucketed = table_existed and _is_bucketed(table_dir)
-            if layout is not None:
-                if list(layout["keys"]) != list(keys):
-                    return _finish(
-                        IngestReport(
-                            file=fname,
-                            route=spec.table,
-                            bad_rows=res.bad_rows,
-                            status="rejected",
-                            detail=(
-                                f"table is bucketed on keys={layout['keys']}, "
-                                f"load requested keys={list(keys)}"
-                            ),
-                        ),
-                        rejected=True,
-                    )
-            elif bucketed:
-                # pre-layout table: the caller's n_buckets is a CLAIM, not a
-                # record. Validate it against the stored bucket values once
-                # (one scan — a one-time migration event) before adopting it
-                # into .layout.json; a wrong claim rejected here is a
-                # re-runnable error, a wrong claim adopted is permanent
-                # silent duplicate-key corruption.
-                mismatched = (
-                    recorded.read(spark, table_dir, None)
-                    .filter(_bucket_expr(keys, n_buckets) != F.col(BUCKET_COL))
-                    .limit(1)
-                    .count()
-                )
-                if mismatched:
-                    return _finish(
-                        IngestReport(
-                            file=fname,
-                            route=spec.table,
-                            bad_rows=res.bad_rows,
-                            status="rejected",
-                            detail=(
-                                f"existing bucket layout does not match "
-                                f"n_buckets={n_buckets}/keys={list(keys)}; pass "
-                                "the values the table was created with"
-                            ),
-                        ),
-                        rejected=True,
-                    )
-            delta = res.good.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
+            # a keys or bucket-count conflict rejects the load through the
+            # normal path (audit row + on_reject + cache release), like
+            # every other failure
+            conflict = _layout_conflict(spark, table_dir, layout, keys, n_buckets)
+            if conflict is not None:
+                return _reject(conflict)
             if loaded == 0:
                 # Empty accepted delta (header-only file, or every bad row
                 # quarantined within maxerrors): nothing to merge, and the
-                # staging overwrite below would hold no part files — the
+                # staging overwrite would hold no part files — the
                 # read-back verification would then die on parquet schema
                 # inference instead of reporting a clean zero-row load.
                 # Short-circuit: no write, no swap, no migration (a legacy
@@ -417,45 +461,12 @@ def ingest_file(
                 extras["persisted_rows"] = 0
                 extras["buckets_touched"] = 0
             else:
-                # One write path for every non-empty keyed load. Only the
-                # permanent-side relation and the partition count differ:
-                #  - bucketed table: just the buckets the delta hashes
-                #    into are read, merged and swapped; the rest stay
-                #    untouched;
-                #  - legacy unbucketed table: a one-time migration of
-                #    the whole table into n_buckets buckets;
-                #  - fresh table: the delta alone.
-                if bucketed:
-                    perm = recorded.read(
-                        spark, table_dir, _table_schema(layout)
-                    ).filter(F.col(BUCKET_COL).isin(res.buckets))
-                    n_parts = len(res.buckets)
-                elif table_existed:
-                    perm = recorded.read(spark, table_dir, None).withColumn(
-                        BUCKET_COL, _bucket_expr(keys, n_buckets)
-                    )
-                    n_parts = n_buckets
-                else:
-                    perm, n_parts = None, n_buckets
-                staging = table_dir + "__staging"
-                schema, expected = _stage_merge(
-                    perm, delta, keys, n_parts, staging, _refresh_incremental
+                persisted, expected, extras["buckets_touched"] = _upsert_buckets(
+                    spark, table_dir, res.good, keys, n_buckets, res.buckets,
+                    refresh=_refresh_incremental,
                 )
-                persisted = _count_parquet(spark, staging, schema)
                 write_ok = persisted == expected
                 extras["persisted_rows"] = persisted
-                if write_ok:
-                    extras["buckets_touched"] = swap.swap_children(
-                        staging, table_dir, f"{BUCKET_COL}="
-                    )
-                    if _table_schema(layout) is None:
-                        _write_layout(table_dir, keys, n_buckets, schema)
-                else:
-                    # NEVER install a staging write that lost rows: the old
-                    # buckets are the only good copy, and aborting here is
-                    # fully recoverable (idempotent merge + marker retry)
-                    shutil.rmtree(staging, ignore_errors=True)
-                    extras["buckets_touched"] = 0
         else:
             _refresh_incremental(None)
             before_files = (
@@ -527,20 +538,15 @@ def read_permanent(
 ) -> DataFrame:
     """The permanent table without the internal layout column.
 
-    Readers never mutate the table dir: healing an interrupted swap
-    from here would race the single maintainer's own mid-flight swap
-    (rmtree its live staging, or restore an aside it is about to drop).
-    Crash recovery runs only from the maintenance entry points —
-    ``ingest_file``, ``compact_table`` — so a read landing inside the
-    crash window of a *whole-table* swap fails loudly on the missing
-    path (and heals on the next ingest/compaction); a crashed
-    *per-bucket* swap reads the surviving buckets (asides are
-    dot-prefixed, invisible to partition discovery) until healed.
-
-    That crash window is OBSERVABLE here without mutating anything:
-    stranded aside dirs trigger a warning (default) so a caller knows
-    the result may be missing a bucket, or a ``RuntimeError`` under
-    ``strict=True`` for jobs that must not consume partial tables."""
+    Readers never mutate the table dir: healing here would race the
+    single maintainer's own mid-flight swap. Only the maintenance entry
+    points (``ingest_file``, ``compact_table``, ``cdc_apply_stream``)
+    heal, so a read inside the crash window of a whole-table swap fails
+    on the missing path, and one after a crashed per-bucket swap reads
+    the surviving buckets (asides are dot-prefixed, invisible to
+    partition discovery). Stranded asides warn (default), or raise a
+    ``RuntimeError`` under ``strict=True`` for jobs that must not
+    consume partial tables."""
     table_dir = os.path.join(warehouse_dir, table)
     asides = stranded_asides(table_dir)
     if asides:
@@ -587,64 +593,42 @@ def compact_table(
     _heal(table_dir)
     if not os.path.isdir(table_dir):
         return 0
+
+    def oversized(d: str) -> bool:
+        n_files = sum(f.endswith(".parquet") for f in os.listdir(d))
+        return n_files > max_files_per_bucket
+
     schema = _table_schema(_read_layout(table_dir))
-    if not _is_bucketed(table_dir):
-        n_files = sum(1 for f in os.listdir(table_dir) if f.endswith(".parquet"))
-        if n_files <= max_files_per_bucket:
-            return 0
-        staging = table_dir + "__compact"
-        src = recorded.read(spark, table_dir, schema)
-        expected = src.count()
-        src.repartition(max_files_per_bucket).write.mode("overwrite").parquet(
-            staging
-        )
-        # Same "never install a failed write" gate as ingest_file: the
-        # read-back (parquet footers only) must hold every pre-compaction
-        # row before the live dir is replaced — a silently short write
-        # must never displace good data.
-        persisted = (
-            _count_parquet(spark, staging, src.schema) if expected else 0
-        )
-        if persisted != expected:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise RuntimeError(
-                f"compact_table aborted: staging holds {persisted} rows, "
-                f"expected {expected}; live table left untouched"
-            )
-        swap.swap(staging, table_dir)
-        return 1
-    todo: list[int] = []
-    for entry in sorted(os.listdir(table_dir)):
-        if not entry.startswith(f"{BUCKET_COL}="):
-            continue
-        n_files = sum(
-            1
-            for f in os.listdir(os.path.join(table_dir, entry))
-            if f.endswith(".parquet")
-        )
-        if n_files > max_files_per_bucket:
-            todo.append(int(entry.split("=", 1)[1]))
-    if not todo:
-        return 0
-    oversized = recorded.read(spark, table_dir, schema).filter(
-        F.col(BUCKET_COL).isin(todo)
-    )
-    expected = oversized.count()
     staging = table_dir + "__compact"
-    (
-        oversized.repartition(len(todo), F.col(BUCKET_COL))
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(staging)
-    )
-    # read-back gate before the per-bucket swap, mirroring ingest_file:
-    # count the staged rows for the touched buckets (footer-only scan)
-    # against the pre-compaction count and abort on mismatch
-    persisted = _count_parquet(spark, staging, oversized.schema) if expected else 0
+    bucketed = _is_bucketed(table_dir)
+    if not bucketed:
+        if not oversized(table_dir):
+            return 0
+        rows = recorded.read(spark, table_dir, schema)
+        rows, by = rows.repartition(max_files_per_bucket), ()
+    else:
+        todo = [
+            int(e.split("=", 1)[1])
+            for e in sorted(os.listdir(table_dir))
+            if e.startswith(f"{BUCKET_COL}=") and oversized(os.path.join(table_dir, e))
+        ]
+        if not todo:
+            return 0
+        rows = recorded.read(spark, table_dir, schema).filter(
+            F.col(BUCKET_COL).isin(todo)
+        )
+        rows, by = rows.repartition(len(todo), F.col(BUCKET_COL)), (BUCKET_COL,)
+    written, expected = _observed_write(rows, staging, by)
+    # the read-back gate of _upsert_buckets: a silently short write must
+    # never displace good data
+    persisted = _count_parquet(spark, staging, written)
     if persisted != expected:
         shutil.rmtree(staging, ignore_errors=True)
         raise RuntimeError(
-            f"compact_table aborted: staging holds {persisted} rows for "
-            f"buckets {todo}, expected {expected}; live buckets untouched"
+            f"compact_table aborted: staging holds {persisted} rows, "
+            f"expected {expected}; live table left untouched"
         )
-    return swap.swap_children(staging, table_dir, f"{BUCKET_COL}=")
+    if bucketed:
+        return swap.swap_children(staging, table_dir, f"{BUCKET_COL}=")
+    swap.swap(staging, table_dir)
+    return 1

@@ -1,12 +1,13 @@
 """Recorded schemas — the one reader of the directories the package
-writes and reads back: the bucketed permanent table, its staging
-read-back, and the maintained report.
+writes and reads back — the bucketed tables, their staging read-back,
+and the tables rewritten whole (:func:`replace`): the maintained
+report and the streaming kept table.
 
 Spark infers a parquet directory's schema with a job that reads file
 footers. The writer already knows the schema, so it records it: a
-bucketed table in its ``.layout.json`` (pipeline), a report in a
-``_schema`` file inside the report dir, which flips with the report's
-swap (report). A read that passes the recorded schema launches no job.
+bucketed table in its ``.layout.json`` (pipeline), a table rewritten
+whole in a ``_schema`` file that flips with the table's swap. A read
+that passes the recorded schema launches no job.
 A directory with no record (a table written before schemas were
 recorded) is read once with inference.
 
@@ -25,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from . import swap
+
 SCHEMA_FILE = "_schema"
 
 
@@ -33,6 +36,19 @@ def write_schema(dir_path: str, schema: StructType) -> None:
     readers skip it)."""
     with open(os.path.join(dir_path, SCHEMA_FILE), "w") as fh:
         fh.write(schema.json())
+
+
+def replace(rows: DataFrame, path: str, files: dict[str, str] | None = None) -> None:
+    """Replace the small table at ``path`` with ``rows``, one file: data,
+    recorded schema and ``files`` (name -> text, '_'-prefixed) are
+    staged together and flip in one crash-safe swap (sources/swap.py)."""
+    staging = path.rstrip("/") + "__staging"
+    rows.coalesce(1).write.mode("overwrite").parquet(staging)
+    write_schema(staging, rows.schema)
+    for name, text in (files or {}).items():
+        with open(os.path.join(staging, name), "w") as fh:
+            fh.write(text)
+    swap.swap(staging, path)
 
 
 def load_schema(dir_path: str) -> StructType | None:

@@ -122,13 +122,11 @@ def refresh_report(
     # groups whose every row was replaced away retract to n_rows = 0 —
     # they have no surviving facts and leave the report
     state = state.filter(F.col("n_rows") > 0)
-    staging = report_dir.rstrip("/") + "__staging"
-    state.coalesce(1).write.mode("overwrite").parquet(staging)
-    recorded.write_schema(staging, state.schema)
-    if marker_batch_id is not None:
-        with open(os.path.join(staging, "_last_batch"), "w") as fh:
-            fh.write(str(marker_batch_id))
-    swap.swap(staging, report_dir)
+    recorded.replace(
+        state,
+        report_dir,
+        {} if marker_batch_id is None else {"_last_batch": str(marker_batch_id)},
+    )
 
 
 def last_applied_marker(report_dir: str) -> str | None:

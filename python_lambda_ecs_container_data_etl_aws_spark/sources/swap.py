@@ -2,9 +2,10 @@
 the reference's transactional temp→permanent move (`2.2
 loading-lambda-for-mysql.py:267-316`, where MySQL makes the step
 atomic). Every table the package rewrites in place goes through it:
-ingest buckets and compaction (pipeline), the maintained report
-(report), audit-log day compaction (audit), and the streaming kept and
-CDC tables (streaming.runner).
+the buckets of ingest and of the streaming CDC apply, and compaction
+(pipeline), the tables rewritten whole — the maintained report and the
+streaming kept table (recorded.replace) — and audit-log day compaction
+(audit).
 
 Protocol: write a staging dir, rename the live dir aside to the
 dot-prefixed sibling ``.<name>__old``, rename staging in, drop the
@@ -21,9 +22,9 @@ because Spark's file index skips '.'/'_'-prefixed paths: a leftover is
 invisible to partition discovery, where an un-prefixed one would parse
 as a malformed partition value and fail every later read.
 
-Single maintainer: only a table's maintenance entry points heal it.
-A reader healing mid-swap would restore an aside the maintainer is
-about to replace, so readers list leftovers with
+Single maintainer: only a table's maintenance entry points heal it,
+with no exception. A reader healing mid-swap would restore an aside
+the maintainer is about to replace, so readers list leftovers with
 :func:`stranded_asides` and warn instead.
 """
 

@@ -687,11 +687,12 @@ def source_cap_stream(
 
     Replay-safe by construction: the fold dedups by id before ranking,
     so re-folding an already-folded batch is a no-op; the kept table
-    (≤ cap × |sources| rows — state, not data) is installed by the
-    crash-safe swap (sources/swap.py)."""
+    (≤ cap × |sources| rows — state, not data) is replaced whole with
+    its schema recorded (sources/recorded.py), through the crash-safe
+    swap, so reading it back launches no schema-inference job."""
     from pyspark.sql import Window
 
-    from ..sources import swap
+    from ..sources import recorded, swap
 
     # heal a crashed swap at STREAM START: a restart with no new input
     # fires zero batches, and readers of the kept table would otherwise
@@ -705,7 +706,7 @@ def source_cap_stream(
             return
         merged = batch_df
         if os.path.isdir(kept_dir):
-            state = spark.read.parquet(kept_dir)
+            state = recorded.read(spark, kept_dir, recorded.load_schema(kept_dir))
             merged = state.unionByName(batch_df)
         # replay fold: same doc may sit in state AND the batch
         wid = Window.partitionBy(id_col).orderBy(id_col)
@@ -719,9 +720,7 @@ def source_cap_stream(
             .filter(F.col("__rn") <= cap)
             .drop("__rn", "__dup")
         )
-        staging = kept_dir.rstrip("/") + "__staging"
-        kept.coalesce(1).write.mode("overwrite").parquet(staging)
-        swap.swap(staging, kept_dir)
+        recorded.replace(kept, kept_dir)
 
     return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
@@ -1001,73 +1000,59 @@ def cdc_apply_stream(
     suppress the key" over everything applied so far. The reference's
     loading Lambda applies CSV deltas to MySQL row-by-row
     (2.2 loading-lambda-for-mysql.py:209-217, 306-316); here each
-    batch folds set-wise into a key-bucketed parquet table and ONLY
-    the buckets holding the batch's keys are read and rewritten —
-    cost proportional to the batch, not the table (the same posture
-    as the bucket-scoped ingest in sources/pipeline.py). Each bucket
-    is installed by the crash-safe swap (sources/swap.py).
+    batch folds through ingest's bucket-scoped write
+    (``pipeline._upsert_buckets``) with the change-log rule
+    (merge.latest_per_key), so cost is proportional to the batch. A
+    recorded ``n_buckets`` wins over the argument; another ``key_col``
+    or a dir without a layout raises (rebuild it by replaying the
+    landing dir into a new dir with a fresh checkpoint). A batch whose
+    staging reads back short raises, so its checkpoint does not commit
+    and the next run replays it.
 
     Replay-safe by construction: the stored state keeps the latest
     event per key INCLUDING tombstones, so re-folding a replayed
     batch collapses to identical rows in the latest-wins window, and
     a late or duplicated OLD change can never resurrect a deleted key
     (the tombstone's higher sequence number always outranks it).
-    Readers use :func:`read_cdc_table`, which heals crashed swaps and
-    hides tombstones — the one reader that heals, see its docstring.
+    Readers use :func:`read_cdc_table`, which hides tombstones.
 
     Consistency caveat: bucket swaps are individually atomic
-    (old-or-new, never destroyed) but not jointly — all touched
-    buckets are STAGED first and then swapped in one rename-only
-    pass, so the cross-bucket tear window is a few renames wide, yet
-    a reader racing those renames (or a crash between them, until the
-    checkpoint replays the batch) can see some buckets folded and
+    (old-or-new, never destroyed) but not jointly — every touched
+    bucket is staged first and then swapped in one rename-only pass,
+    so a reader racing those renames (or a crash between them, until
+    the checkpoint replays the batch) can see some buckets folded and
     others not. "After every micro-batch the table equals ..." holds
     for quiescent reads after the batch commits, eventually under
     crash-replay."""
-    from pyspark.sql import Window
+    from ..sources import pipeline
 
-    from ..sources import swap
-
-    swap.heal_children(table_dir)
+    # heal at STREAM START: a restart with no new input fires no batch
+    pipeline._heal(table_dir)
+    layout = pipeline._read_layout(table_dir)
+    if layout is not None:
+        n_buckets = int(layout["n_buckets"])
+    elif os.path.isdir(table_dir) and not pipeline._is_bucketed(table_dir):
+        raise ValueError(f"{table_dir} has no bucket layout to apply changes to")
+    conflict = pipeline._layout_conflict(spark, table_dir, layout, [key_col], n_buckets)
+    if conflict is not None:
+        raise ValueError(f"{table_dir}: {conflict}")
+    bucket = pipeline._bucket_expr([key_col], n_buckets)
+    order = [F.col(seq_col).desc(), F.col(op_col)]
     src = file_stream(spark, landing_dir, schema, fmt)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.withColumn(
-            "__bucket", (F.col(key_col) % n_buckets).cast("int")
-        ).persist()
         # bounded collect: at most n_buckets values
-        touched = sorted(
-            r["__bucket"]
-            for r in batch.select("__bucket").distinct().collect()
+        touched = batch_df.agg(F.collect_set(bucket)).first()[0]
+        if not touched:
+            return
+        persisted, expected, _ = pipeline._upsert_buckets(
+            spark, table_dir, batch_df, [key_col], n_buckets, touched, order=order
         )
-        w = Window.partitionBy(key_col).orderBy(
-            F.col(seq_col).desc(), F.col(op_col)
-        )
-        # Two-phase apply: stage EVERY touched bucket first (the
-        # expensive Spark writes), then swap them in one tight
-        # rename-only pass. A concurrent read_cdc_table can still
-        # observe a torn cross-bucket snapshot, but the tear window
-        # shrinks from the whole batch's compute time to a few
-        # consecutive directory renames.
-        staged = []
-        for b in touched:
-            bdir = os.path.join(table_dir, f"bucket={b}")
-            merged = batch.filter(F.col("__bucket") == b).drop("__bucket")
-            if os.path.isdir(bdir):
-                merged = spark.read.parquet(bdir).unionByName(merged)
-            latest = (
-                merged.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
+        if persisted != expected:
+            raise RuntimeError(
+                f"CDC batch {batch_id}: staging read back {persisted} of "
+                f"{expected} rows; nothing swapped, the batch replays"
             )
-            staging = bdir + "__staging"
-            latest.coalesce(1).write.mode("overwrite").parquet(staging)
-            staged.append((staging, bdir))
-        for staging, bdir in staged:
-            swap.swap(staging, bdir)
-        batch.unpersist()
 
     return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
@@ -1075,33 +1060,18 @@ def cdc_apply_stream(
 def read_cdc_table(
     spark: SparkSession, table_dir: str, op_col: str = "op"
 ) -> DataFrame:
-    """Current snapshot of a :func:`cdc_apply_stream` table: all
-    buckets, tombstones hidden. Reads only the live ``bucket=<int>``
-    dirs — never the ``bucket=K__staging`` output of a batch that
-    crashed before its swap, which would read every key of bucket K
-    twice.
+    """Current snapshot of a :func:`cdc_apply_stream` table, tombstones
+    hidden: ``pipeline.read_permanent`` (recorded schema, no bucket
+    column) plus the tombstone filter. Like every reader it changes
+    nothing on disk: a bucket stranded by a crashed swap makes it warn
+    (the rows of that bucket are missing) until the next stream start
+    heals it."""
+    from ..sources import pipeline
 
-    The one reader that heals: it restores crashed bucket swaps first,
-    so it never sees a missing bucket (old-or-new, never destroyed).
-    Every other reader only warns (sources/swap.py); this one races a
-    running :func:`cdc_apply_stream`, so read between batches."""
-    import re
-
-    from ..sources import swap
-
-    swap.heal_children(table_dir)
-    dirs = (
-        [
-            os.path.join(table_dir, e)
-            for e in os.listdir(table_dir)
-            if re.fullmatch(r"bucket=-?\d+", e)
-        ]
-        if os.path.isdir(table_dir)
-        else []
+    warehouse_dir, table = os.path.split(os.path.normpath(table_dir))
+    return pipeline.read_permanent(spark, warehouse_dir, table).filter(
+        F.col(op_col) != "D"
     )
-    if not dirs:
-        raise FileNotFoundError(f"no CDC table buckets under {table_dir}")
-    return spark.read.parquet(*dirs).filter(F.col(op_col) != "D")
 
 
 def stream_stream_left_outer_join(

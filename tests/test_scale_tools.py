@@ -1294,7 +1294,8 @@ def test_package_tables_have_one_reader_and_one_persist_owner():
     recorded schema (and infers only for a table that records none).
     pipeline.py persists one relation, the marked merge, in the one
     function that owns it and releases it in ``finally``, and collects
-    no ``distinct()`` set."""
+    no ``distinct()`` set. The bucket directory name is spelled in
+    pipeline.py alone, so no other module lays out or lists buckets."""
     import ast
 
     import python_lambda_ecs_container_data_etl_aws_spark.sources as src
@@ -1346,6 +1347,19 @@ def test_package_tables_have_one_reader_and_one_persist_owner():
         and isinstance(c.func.value.func, ast.Attribute)
         and c.func.value.func.attr == "distinct"
     ]
+
+    import python_lambda_ecs_container_data_etl_aws_spark as pkg
+
+    pkg_root = os.path.dirname(pkg.__file__)
+    spellers = set()
+    for dirpath, _, files in os.walk(pkg_root):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path, encoding="utf-8") as fh:
+                    if "__bucket=" in fh.read():
+                        spellers.add(os.path.relpath(path, pkg_root))
+    assert spellers == {os.path.join("sources", "pipeline.py")}
 
 
 def test_synth_sf_replication_invariants(tmp_path):

@@ -16,6 +16,7 @@ from pyspark.sql.types import (
 )
 
 from python_lambda_ecs_container_data_etl_aws_spark.catalog import load_table
+from python_lambda_ecs_container_data_etl_aws_spark.sources import pipeline as pl
 from python_lambda_ecs_container_data_etl_aws_spark.streaming import runner
 from tests.conftest import SF_DIR
 
@@ -1038,10 +1039,20 @@ CDC_SCHEMA = StructType(
 )
 
 
-def _cdc_arrive(spark, landing, rows):
-    spark.createDataFrame(rows, CDC_SCHEMA).coalesce(1).write.mode(
+def _cdc_arrive(spark, landing, rows, schema=CDC_SCHEMA):
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
         "append"
     ).parquet(landing)
+
+
+def _cdc_bucket(spark, table, k, n_buckets=8):
+    """The live bucket dir of BIGINT key ``k`` in a CDC table."""
+    b = (
+        spark.createDataFrame([(k,)], "k BIGINT")
+        .select(pl._bucket_expr(["k"], n_buckets))
+        .first()[0]
+    )
+    return os.path.join(table, f"{pl.BUCKET_COL}={b}")
 
 
 def test_cdc_apply_stream_equals_batch_query(spark, tmp_path):
@@ -1118,34 +1129,39 @@ def test_cdc_apply_stream_tombstone_blocks_replayed_old_change(spark, tmp_path):
 
 
 def test_cdc_apply_stream_recovers_crashed_bucket_swap(spark, tmp_path):
-    """A crash between the two swap renames leaves a bucket aside-only;
-    both the reader and the next stream start must heal it."""
+    """A crash between the two swap renames leaves a bucket aside-only.
+    The reader only warns and leaves the aside in place (the table's
+    one maintainer heals it); the next stream start restores it."""
+    from python_lambda_ecs_container_data_etl_aws_spark.sources import swap
+
     landing = str(tmp_path / "cdc_landing")
     table = str(tmp_path / "cdc_table")
     ck = str(tmp_path / "ck_cdc")
 
     _cdc_arrive(spark, landing, [(1, 100, 0, "I"), (9, 900, 0, "I")])
     runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
-    # keys 1 and 9 land in the same bucket (1 % 8); simulate the crash
-    bdir = os.path.join(table, "bucket=1")
-    os.rename(bdir, os.path.join(table, ".bucket=1__old"))
+    # simulate the crash on key 1's bucket
+    bdir = _cdc_bucket(spark, table, 1)
+    os.rename(bdir, swap.aside(bdir))
 
-    # reader heals
+    # the reader warns, misses the stranded bucket and heals nothing
+    with pytest.warns(UserWarning, match="stranded swap aside"):
+        got = {(r.k, r.qp) for r in runner.read_cdc_table(spark, table).collect()}
+    assert (1, 100) not in got and got <= {(9, 900)}
+    assert not os.path.isdir(bdir) and os.path.isdir(swap.aside(bdir))
+
+    # stream start heals (no new data: zero batches fire)
+    runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
+    assert os.path.isdir(bdir) and not os.path.isdir(swap.aside(bdir))
     got = {(r.k, r.qp) for r in runner.read_cdc_table(spark, table).collect()}
     assert got == {(1, 100), (9, 900)}
-    assert os.path.isdir(bdir)
-
-    # stream start heals too (no new data: zero batches fire)
-    os.rename(bdir, os.path.join(table, ".bucket=1__old"))
-    runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
-    assert os.path.isdir(bdir)
 
 
 def test_read_cdc_table_skips_staging_left_by_crashed_batch(spark, tmp_path):
     """A crash between staging bucket K and swapping it in leaves
-    bucket=K__staging next to the live bucket=K. The reader must take
-    only the live bucket dirs: every key exactly once, not twice
-    until the checkpoint replays the batch."""
+    ``<table>__staging/__bucket=K`` next to the live table. The reader
+    must take only the live bucket dirs: every key exactly once, not
+    twice until the checkpoint replays the batch."""
     import shutil
 
     landing = str(tmp_path / "cdc_landing")
@@ -1154,10 +1170,10 @@ def test_read_cdc_table_skips_staging_left_by_crashed_batch(spark, tmp_path):
 
     _cdc_arrive(spark, landing, [(1, 100, 0, "I"), (9, 900, 0, "I"), (2, 200, 0, "I")])
     runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
-    # keys 1 and 9 share bucket 1 (k % 8): its staged copy was written,
-    # the swap never ran
+    # key 1's bucket: its staged copy was written, the swap never ran
+    bdir = _cdc_bucket(spark, table, 1)
     shutil.copytree(
-        os.path.join(table, "bucket=1"), os.path.join(table, "bucket=1__staging")
+        bdir, os.path.join(table + "__staging", os.path.basename(bdir))
     )
     per_key = {
         r.k: r.n
@@ -1184,17 +1200,18 @@ def test_cdc_apply_stream_rewrites_only_touched_buckets(spark, tmp_path):
         # granularity) identify the rewritten buckets
         out = {}
         for e in sorted(os.listdir(table)):
-            if e.startswith("bucket="):
+            if e.startswith(f"{pl.BUCKET_COL}="):
                 d = os.path.join(table, e)
                 out[e] = frozenset(os.listdir(d))
         return out
 
     before = files()
-    _cdc_arrive(spark, landing, [(3, 999, 1, "U")])  # bucket=3 only
+    assert len(before) >= 2
+    _cdc_arrive(spark, landing, [(3, 999, 1, "U")])  # key 3's bucket only
     runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
     after = files()
     changed = {b for b in after if after[b] != before.get(b)}
-    assert changed == {"bucket=3"}
+    assert changed == {os.path.basename(_cdc_bucket(spark, table, 3))}
     got = {(r.k, r.qp) for r in runner.read_cdc_table(spark, table).collect()}
     assert (3, 999) in got and len(got) == 8
 
@@ -1290,17 +1307,19 @@ def test_cdc_apply_stream_fresh_checkpoint_replay_is_idempotent(spark, tmp_path)
     import pyspark.sql.functions as SF
 
     raw = spark.read.parquet(*[
-        os.path.join(table, e) for e in os.listdir(table) if e.startswith("bucket=")
+        os.path.join(table, e)
+        for e in os.listdir(table)
+        if e.startswith(f"{pl.BUCKET_COL}=")
     ])
     assert raw.filter((SF.col("k") == 2) & (SF.col("op") == "D")).count() == 1
 
 
 def test_cdc_apply_stream_cleans_stale_staging_leftovers(spark, tmp_path):
-    """A crash between STAGING a bucket and swapping it (the round-5
-    two-phase apply) leaves a bucket=K__staging directory behind. On
-    replay the sink must discard the stale staging output (the batch
-    re-runs from the checkpoint) and converge to the correct state,
-    and the table directory must hold no staging/aside residue."""
+    """A crash between STAGING a bucket and swapping it (the two-phase
+    apply) leaves ``<table>__staging/__bucket=K`` behind. On replay the
+    sink must discard the stale staging output (the batch re-runs from
+    the checkpoint) and converge to the correct state, and neither the
+    table directory nor its staging sibling may hold residue."""
     landing = str(tmp_path / "cdc_landing")
     table = str(tmp_path / "cdc_table")
     ck = str(tmp_path / "ck_cdc")
@@ -1310,12 +1329,14 @@ def test_cdc_apply_stream_cleans_stale_staging_leftovers(spark, tmp_path):
 
     # simulate a crash mid-batch: a fully-written staging dir for
     # bucket 1 that never swapped in (contents would-be-next state)
-    stale = os.path.join(table, "bucket=1__staging")
+    stale = os.path.join(
+        table + "__staging", os.path.basename(_cdc_bucket(spark, table, 1))
+    )
     os.makedirs(stale)
     with open(os.path.join(stale, "garbage.parquet"), "w") as f:
         f.write("not parquet")
 
-    # next batch touches bucket 1 again: the stale dir must be
+    # next batch touches key 1's bucket again: the stale dir must be
     # replaced by the real staging write, then swapped cleanly
     _cdc_arrive(spark, landing, [(1, 111, 1, "U"), (9, 900, 1, "I")])
     runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
@@ -1327,6 +1348,165 @@ def test_cdc_apply_stream_cleans_stale_staging_leftovers(spark, tmp_path):
         if e.endswith("__staging") or e.endswith("__old")
     ]
     assert residue == [], residue
+    assert not os.path.exists(table + "__staging")
+
+
+def test_cdc_apply_stream_keeps_the_recorded_bucket_layout(spark, tmp_path):
+    """The table's recorded layout wins over a later ``n_buckets``: a key
+    loaded under 8 buckets and updated under 4 holds one live row, and
+    its tombstone removes it. A stream keyed on another column raises
+    instead of folding into the table."""
+    import json
+
+    landing = str(tmp_path / "cdc_landing")
+    table = str(tmp_path / "cdc_table")
+    ck = str(tmp_path / "ck_cdc")
+
+    def drain(n_buckets):
+        runner.cdc_apply_stream(
+            spark, landing, CDC_SCHEMA, table, ck, n_buckets=n_buckets
+        )
+        return sorted(
+            (r.k, r.qp) for r in runner.read_cdc_table(spark, table).collect()
+        )
+
+    _cdc_arrive(spark, landing, [(2, 20, 0, "I"), (5, 50, 0, "I")])
+    assert drain(8) == [(2, 20), (5, 50)]
+    _cdc_arrive(spark, landing, [(5, 55, 1, "U")])
+    assert drain(4) == [(2, 20), (5, 55)]
+    _cdc_arrive(spark, landing, [(5, 0, 2, "D")])
+    assert drain(4) == [(2, 20)]
+    with open(os.path.join(table, ".layout.json")) as fh:
+        layout = json.load(fh)
+    assert (layout["keys"], layout["n_buckets"]) == (["k"], 8)
+
+    with pytest.raises(ValueError, match="keys"):
+        runner.cdc_apply_stream(
+            spark, landing, CDC_SCHEMA, table, str(tmp_path / "ck_qp"),
+            key_col="qp",
+        )
+    assert drain(8) == [(2, 20)]
+
+    # a dir in the earlier `bucket=<k % n>` layout records no layout: the
+    # stream raises rather than write into it
+    old = str(tmp_path / "old_cdc_table")
+    spark.createDataFrame([(2, 20, 0, "I")], CDC_SCHEMA).withColumn(
+        "bucket", F.col("k") % 8
+    ).write.partitionBy("bucket").parquet(old)
+    before = sorted(os.listdir(old))
+    with pytest.raises(ValueError, match="no bucket layout"):
+        runner.cdc_apply_stream(
+            spark, landing, CDC_SCHEMA, old, str(tmp_path / "ck_old")
+        )
+    assert sorted(os.listdir(old)) == before
+
+
+def test_cdc_apply_stream_string_key(spark, tmp_path):
+    """A STRING key buckets like any other (the bucket is a hash of the
+    key, not arithmetic on it)."""
+    schema = StructType(
+        [
+            StructField("k", StringType()),
+            StructField("qp", LongType()),
+            StructField("seq", LongType()),
+            StructField("op", StringType()),
+        ]
+    )
+    landing = str(tmp_path / "cdc_landing")
+    table = str(tmp_path / "cdc_table")
+    ck = str(tmp_path / "ck_cdc")
+
+    _cdc_arrive(spark, landing, [("a", 1, 0, "I"), ("b", 2, 0, "I")], schema)
+    runner.cdc_apply_stream(spark, landing, schema, table, ck)
+    _cdc_arrive(spark, landing, [("a", 0, 1, "D")], schema)
+    runner.cdc_apply_stream(spark, landing, schema, table, ck)
+    got = [(r.k, r.qp) for r in runner.read_cdc_table(spark, table).collect()]
+    assert got == [("b", 2)]
+
+
+def test_cdc_apply_stream_aborts_swap_on_short_staging_write(
+    spark, tmp_path, monkeypatch
+):
+    """The CDC write passes ingest's read-back gate: a staging write that
+    reads back short raises out of the batch before any bucket is
+    swapped, so the checkpoint does not commit it, and the next run
+    replays the batch to the right state."""
+    from pyspark.errors import StreamingQueryException
+
+    landing = str(tmp_path / "cdc_landing")
+    table = str(tmp_path / "cdc_table")
+    ck = str(tmp_path / "ck_cdc")
+
+    _cdc_arrive(spark, landing, [(k, k * 10, 0, "I") for k in range(16)])
+    runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
+
+    def files():
+        return {
+            os.path.join(dp, f)
+            for dp, _, fs in os.walk(table)
+            for f in fs
+            if f.endswith(".parquet")
+        }
+
+    before = files()
+    _cdc_arrive(
+        spark, landing, [(k, k * 100, 1, "U") for k in range(8)] + [(9, 0, 1, "D")]
+    )
+    real = pl._count_parquet
+    monkeypatch.setattr(
+        pl, "_count_parquet", lambda spark_, path, schema: real(spark_, path, schema) - 1
+    )
+    with pytest.raises(StreamingQueryException, match="read back"):
+        runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
+    monkeypatch.setattr(pl, "_count_parquet", real)
+    assert files() == before
+    assert not os.path.exists(table + "__staging")
+
+    runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
+    got = sorted((r.k, r.qp) for r in runner.read_cdc_table(spark, table).collect())
+    want = [(k, k * 100) for k in range(8)] + [
+        (k, k * 10) for k in range(10, 16)
+    ] + [(8, 80)]
+    assert got == sorted(want)
+
+
+def test_cdc_batch_job_count_is_pinned(spark, tmp_path):
+    """Spark jobs for one CDC micro-batch that rewrites all 8 buckets of
+    an existing table, around the whole drain: the touched-bucket
+    ``collect_set``, the clustered merge write and its read-back. It
+    was 28 while each bucket had its own inferred read, write and swap
+    behind an ``isEmpty()``, a persist and a ``distinct().collect()``. A
+    drain with no new data runs none."""
+    landing = str(tmp_path / "cdc_landing")
+    table = str(tmp_path / "cdc_table")
+    ck = str(tmp_path / "ck_cdc")
+
+    def jobs():
+        return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+    _cdc_arrive(spark, landing, [(k, k, 0, "I") for k in range(64)])
+    runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
+    assert len([e for e in os.listdir(table) if e.startswith(pl.BUCKET_COL)]) == 8
+
+    def files():
+        return {
+            e: frozenset(os.listdir(os.path.join(table, e)))
+            for e in os.listdir(table)
+            if e.startswith(pl.BUCKET_COL)
+        }
+
+    old = files()
+    _cdc_arrive(spark, landing, [(k, -k, 1, "U") for k in range(64)])
+    before = jobs()
+    progress = runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
+    assert jobs() - before == 6
+    assert sum(p["numInputRows"] for p in progress) > 0
+    new = files()
+    assert len(new) == 8 and all(new[b] != old[b] for b in new)
+
+    before = jobs()
+    runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
+    assert jobs() == before
 
 
 def test_stream_first_seen_daily_agrees_with_batch(spark, event_batches, tmp_path):
@@ -1468,7 +1648,11 @@ def test_streaming_runner_makes_each_replay_decision_once():
     each, so the streaming sinks cannot fork them again: availableNow
     and awaitTermination appear only in _drain, ``batch={`` only in
     _write_batch/_other_batches; no sink heals or deletes a dir, and an
-    isEmpty() test only returns early, never guards a batch-dir write."""
+    isEmpty() test only returns early, never guards a batch-dir write.
+    The CDC table has no maintainer of its own here: the module swaps
+    no directory and heals no partition children, computes no
+    ``% n_buckets`` bucket, and the CDC apply and reader hold no bare
+    parquet read (sources/pipeline.py maintains and reads the table)."""
     import ast
 
     with open(runner.__file__, encoding="utf-8") as fh:
@@ -1500,3 +1684,18 @@ def test_streaming_runner_makes_each_replay_decision_once():
         if isinstance(node, ast.If) and "isEmpty" in ast.unparse(node.test):
             assert [type(b) for b in node.body] == [ast.Return], ast.unparse(node)
             assert not node.orelse
+    swaps = {
+        ast.unparse(c.func)
+        for c in ast.walk(tree)
+        if isinstance(c, ast.Call)
+        and isinstance(c.func, ast.Attribute)
+        and c.func.attr in ("swap", "swap_children", "heal_children")
+    }
+    assert not swaps, swaps
+    assert "% n_buckets" not in text
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef) and node.name in (
+            "cdc_apply_stream",
+            "read_cdc_table",
+        ):
+            assert "spark.read.parquet" not in ast.unparse(node), node.name
