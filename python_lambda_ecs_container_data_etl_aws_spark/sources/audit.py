@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from . import swap
+from . import recorded, swap
 
 if TYPE_CHECKING:  # pragma: no cover - import cycle guard (typing only)
     from .pipeline import IngestReport
@@ -118,7 +118,7 @@ def load_ingest_log(spark: SparkSession, log_dir: str) -> DataFrame:
             stacklevel=2,
         )
     try:
-        return spark.read.schema(LOG_SCHEMA).parquet(log_dir)
+        return recorded.read(spark, log_dir, StructType.fromDDL(LOG_SCHEMA))
     except AnalysisException:
         # fall back to a typed zero-row log ONLY when the path is
         # genuinely absent or holds no day partitions (fresh deployment,
@@ -154,45 +154,31 @@ def status_rollup(log: DataFrame) -> DataFrame:
 
 def compact_log(spark: SparkSession, log_dir: str, log_date: str) -> int:
     """Compact one closed ``log_date`` partition: N one-row appended
-    files → one file, installed by the crash-safe swap. The nightly
-    small-file maintenance the module docstring promises — every `ingest_file`
-    appends one tiny parquet file per outcome, which is the right write
-    path (no read-modify-write on the hot log) but leaves day
-    partitions made of thousands of 1-row files. Returns the number of
-    rows compacted.
+    files → one file, read with the declared ``LOG_SCHEMA`` and
+    installed by ``recorded.install`` — one Spark job. The nightly
+    small-file maintenance the module docstring promises — every
+    `ingest_file` appends one tiny parquet file per outcome, which is
+    the right write path (no read-modify-write on the hot log) but
+    leaves day partitions made of thousands of 1-row files. Returns the
+    number of rows compacted.
 
     Only run on CLOSED days (no concurrent appends): an append racing
     the swap would be lost. Idempotent — re-compacting is a no-op
     rewrite.
     """
     import os
-    import shutil
 
     part = os.path.join(log_dir, f"log_date={log_date}")
-    # staging is DOT-prefixed so partition discovery never sees it — an
-    # un-prefixed leftover would parse as a malformed log_date value and
-    # break every later read
-    staging = os.path.join(log_dir, f".log_date={log_date}__staging")
     # heal crashes for EVERY day, not just this one
     swap.heal_children(log_dir)
     if not os.path.isdir(part):
         return 0
-    shutil.rmtree(staging, ignore_errors=True)
-    rows = spark.read.parquet(part)
-    n = rows.count()
-    rows.coalesce(1).write.mode("overwrite").parquet(staging)
-    # same "never install a failed write" gate as pipeline.compact_table:
-    # the staged day must hold every audit row before the swap — a short
-    # write must not displace the only copy of a day's audit history
-    persisted = spark.read.parquet(staging).count() if n else 0
-    if persisted != n:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(
-            f"compact_log aborted: staging holds {persisted} rows for "
-            f"log_date={log_date}, expected {n}; live partition untouched"
-        )
-    swap.swap(staging, part)
-    return n
+    # the day's files hold every column but the partition's own
+    day = StructType(
+        [f for f in StructType.fromDDL(LOG_SCHEMA).fields if f.name != "log_date"]
+    )
+    rows = recorded.read(spark, part, day)
+    return recorded.install(rows.coalesce(1), part)[0]
 
 
 def expire_log(log_dir: str, keep_after: str) -> list[str]:

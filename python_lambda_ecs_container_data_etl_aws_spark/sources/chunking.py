@@ -143,12 +143,3 @@ def assign_chunks(df_with_autoid: DataFrame, total_rows: int, size_mib: float, t
 def n_chunks(total_rows: int, size_mib: float, target_mib: float = 5.0) -> int:
     return math.ceil(total_rows / lines_per_file(total_rows, size_mib, target_mib))
 
-
-def write_chunked(df: DataFrame, path: str, max_records_per_file: int) -> None:
-    """Physical splitting at scale: let the writer cap records per file
-    instead of materializing chunk ids (`maxRecordsPerFile`)."""
-    (
-        df.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .parquet(path)
-    )

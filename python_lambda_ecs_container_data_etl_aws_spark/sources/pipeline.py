@@ -23,9 +23,10 @@ merge then
      delta replaces (merge.mark_replaced). That one persisted pass
      feeds both the report's retraction (the marked rows) and the
      merged buckets (the delta plus the unmarked rows) — no join;
-  3. writes the merged buckets to a staging dir, one file per bucket
-     (the window already holds each bucket in one task), and swaps each
-     touched bucket directory in through the crash-safe swap
+  3. installs the merged buckets (recorded.install): one staged file
+     per bucket (the window already holds each bucket in one task),
+     gated on the staged footers holding every row written, then each
+     touched bucket directory swapped in through the crash-safe swap
      (sources/swap.py): a crash mid-swap leaves every bucket either
      fully old or fully new, never destroyed.
 Cost per arriving file is proportional to the delta's bucket fanout,
@@ -39,6 +40,9 @@ through it too, with its own per-key rule.
 The A2 count gate (`2.2:300-308`) validates the rows THIS file
 delivered (src − bad vs rows staged), never the cumulative table —
 comparing a 2-row delta against a billion-row table is meaningless.
+Every write this module makes is checked against its own footers:
+a short install raises ``recorded.ShortWrite``, which ingest_file
+reports as ``count_mismatch`` and compaction and the CDC stream raise.
 """
 
 from __future__ import annotations
@@ -50,7 +54,7 @@ import warnings
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -91,25 +95,13 @@ def _bucket_expr(keys: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
 
-def _count_parquet(
-    spark: SparkSession, path: str | list[str], schema: StructType
-) -> int:
-    """Row count of a written dir (or files), read with the schema of the
-    frame just written — parquet footers only, no data scan, no
-    inference. The single seam every 'never install a failed write'
-    read-back gate goes through (ingest staging, keyless append,
-    compaction staging)."""
-    return recorded.read(spark, path, schema).count()
-
-
 def _heal(table_dir: str) -> None:
     """Crash recovery for a permanent table, run by its maintenance
     entry points before anything reads or recreates it: the
-    whole-table aside of an unbucketed compaction, every bucket aside,
-    and the scratch of an interrupted compaction."""
+    whole-table aside of an unbucketed compaction and every bucket
+    aside."""
     swap.heal(table_dir)
     swap.heal_children(table_dir)
-    shutil.rmtree(table_dir + "__compact", ignore_errors=True)
 
 
 def _is_bucketed(table_dir: str) -> bool:
@@ -156,14 +148,14 @@ def _stage_merge(
     delta: DataFrame,
     keys: list[str],
     n_parts: int,
-    staging: str,
+    table_dir: str,
     refresh: Callable[[DataFrame | None], None] | None,
     order: list[Column] | None,
-) -> tuple[StructType, int]:
-    """Merge ``delta`` into ``perm`` (None for a fresh table) and write
-    the result to ``staging``, partitioned by bucket, one file per
-    bucket. Returns the written schema and row count, the count
-    observed on the write itself.
+) -> tuple[StructType, int, int]:
+    """Merge ``delta`` into ``perm`` (None for a fresh table) and install
+    the result over the buckets it holds, one file per bucket
+    (recorded.install). Returns the written schema, the rows installed
+    and the buckets swapped.
 
     With ``order``, the first row per key under it wins
     (merge.latest_per_key). Without, the delta replaces the key
@@ -171,33 +163,22 @@ def _stage_merge(
     replaces. That marked relation feeds the retraction and the write,
     so it is persisted: the touched buckets are scanned and shuffled
     once. This function owns it and releases it on every way out."""
+
+    def install(rows: DataFrame) -> tuple[StructType, int, int]:
+        return rows.schema, *recorded.install(rows, table_dir, (BUCKET_COL,))
+
     if order is not None:
-        return _observed_write(
-            latest_per_key(perm, delta, keys, order, BUCKET_COL, n_parts), staging
-        )
+        return install(latest_per_key(perm, delta, keys, order, BUCKET_COL, n_parts))
     if perm is None:
         refresh(None)
         # one bucket -> one task -> one file: no small-file accretion
-        return _observed_write(delta.repartition(n_parts, F.col(BUCKET_COL)), staging)
+        return install(delta.repartition(n_parts, F.col(BUCKET_COL)))
     marked = mark_replaced(perm, delta, keys, BUCKET_COL, n_parts).persist()
     try:
         refresh(replaced_rows(marked))
-        return _observed_write(merged_rows(marked), staging)
+        return install(merged_rows(marked))
     finally:
         marked.unpersist()
-
-
-def _observed_write(
-    rows: DataFrame, staging: str, by: tuple[str, ...] = (BUCKET_COL,)
-) -> tuple[StructType, int]:
-    obs = Observation("staged")
-    (
-        rows.observe(obs, F.count(F.lit(1)).alias("rows"))
-        .write.mode("overwrite")
-        .partitionBy(*by)
-        .parquet(staging)
-    )
-    return rows.schema, int(obs.get["rows"])
 
 
 def _layout_conflict(
@@ -239,14 +220,14 @@ def _upsert_buckets(
     touched: list[int],
     refresh: Callable[[DataFrame | None], None] | None = None,
     order: list[Column] | None = None,
-) -> tuple[int, int, int]:
+) -> tuple[int, int]:
     """Merge ``rows`` into the bucketed table at ``table_dir`` — the one
     maintainer of bucketed tables (ingest_file, the CDC stream).
     ``touched`` are the buckets ``rows`` hash into; ``refresh``/``order``
     pick the per-key rule (_stage_merge). Only the touched buckets are
     read (a legacy unbucketed table migrates whole); the merge is
-    staged, and swapped in only if its read-back holds every row
-    written. Returns (rows read back, rows written, buckets swapped)."""
+    installed by recorded.install, which raises ``recorded.ShortWrite``
+    on a short write. Returns (rows installed, buckets swapped)."""
     layout = _read_layout(table_dir)
     schema = _table_schema(layout)
     delta = rows.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
@@ -262,19 +243,12 @@ def _upsert_buckets(
         n_parts = n_buckets
     else:
         perm, n_parts = None, n_buckets
-    staging = table_dir + "__staging"
-    written, expected = _stage_merge(
-        perm, delta, keys, n_parts, staging, refresh, order
+    written, installed, swapped = _stage_merge(
+        perm, delta, keys, n_parts, table_dir, refresh, order
     )
-    persisted = _count_parquet(spark, staging, written)
-    if persisted != expected:
-        # never install a short write: the old buckets are the good copy
-        shutil.rmtree(staging, ignore_errors=True)
-        return persisted, expected, 0
-    swapped = swap.swap_children(staging, table_dir, f"{BUCKET_COL}=")
     if schema is None:
         _write_layout(table_dir, keys, n_buckets, written)
-    return persisted, expected, swapped
+    return installed, swapped
 
 
 def ingest_file(
@@ -382,14 +356,17 @@ def ingest_file(
         #    minus bad rows vs the good rows the canonical read produced
         #    (all three from the read's one counting pass);
         #  - write gate: the files THIS load physically wrote, read back
-        #    (parquet footers — no data scan), must hold the rows the
+        #    (parquet footers, on the driver), must hold the rows the
         #    write observed itself emitting. Comparing the plan against
         #    itself would be a tautology; the read-back catches
         #    lost/partial writes, and every count is bounded by the
-        #    delta/touched buckets, never the table.
+        #    delta/touched buckets, never the table. A short write of
+        #    the table or the report raises recorded.ShortWrite with
+        #    nothing installed; the load reports count_mismatch, and
+        #    re-running the file converges.
         loaded = res.good_rows
         extras: dict = {}
-        write_ok = True
+        detail = ""
 
         # Report maintenance ordering + crash recovery: the incremental
         # refresh runs BEFORE the table swap (its retract state reads the
@@ -443,79 +420,77 @@ def ingest_file(
                 marker_batch_id=load_id,
             )
 
-        if keys is not None:
-            # a keys or bucket-count conflict rejects the load through the
-            # normal path (audit row + on_reject + cache release), like
-            # every other failure
-            conflict = _layout_conflict(spark, table_dir, layout, keys, n_buckets)
-            if conflict is not None:
-                return _reject(conflict)
-            if loaded == 0:
-                # Empty accepted delta (header-only file, or every bad row
-                # quarantined within maxerrors): nothing to merge, and the
-                # staging overwrite would hold no part files — the
-                # read-back verification would then die on parquet schema
-                # inference instead of reporting a clean zero-row load.
-                # Short-circuit: no write, no swap, no migration (a legacy
-                # unbucketed table migrates on its next non-empty load).
-                extras["persisted_rows"] = 0
-                extras["buckets_touched"] = 0
-            else:
-                persisted, expected, extras["buckets_touched"] = _upsert_buckets(
-                    spark, table_dir, res.good, keys, n_buckets, res.buckets,
-                    refresh=_refresh_incremental,
-                )
-                write_ok = persisted == expected
-                extras["persisted_rows"] = persisted
-        else:
-            _refresh_incremental(None)
-            before_files = (
-                {f for f in os.listdir(table_dir) if f.endswith(".parquet")}
-                if table_existed
-                else set()
-            )
-            res.good.write.mode(
-                "append" if table_existed else "overwrite"
-            ).parquet(table_dir)
-            new_files = [
-                os.path.join(table_dir, f)
-                for f in os.listdir(table_dir)
-                if f.endswith(".parquet") and f not in before_files
-            ]
-            persisted = (
-                _count_parquet(spark, new_files, res.good.schema) if new_files else 0
-            )
-            write_ok = persisted == loaded
-            extras["persisted_rows"] = persisted
-            if not write_ok:
-                # roll the append back to the pre-load state — a partial
-                # write must not linger in the live table
-                if table_existed:
-                    for f in new_files:
-                        try:
-                            os.remove(f)
-                        except OSError:
-                            pass
+        try:
+            if keys is not None:
+                # a keys or bucket-count conflict rejects the load through
+                # the normal path (audit row + on_reject + cache release),
+                # like every other failure
+                conflict = _layout_conflict(spark, table_dir, layout, keys, n_buckets)
+                if conflict is not None:
+                    return _reject(conflict)
+                if loaded == 0:
+                    # Empty accepted delta (header-only file, or every bad
+                    # row quarantined within maxerrors): nothing to merge.
+                    # No write, no swap, no migration (a legacy unbucketed
+                    # table migrates on its next non-empty load).
+                    extras["persisted_rows"] = 0
+                    extras["buckets_touched"] = 0
                 else:
-                    shutil.rmtree(table_dir, ignore_errors=True)
+                    extras["persisted_rows"], extras["buckets_touched"] = (
+                        _upsert_buckets(
+                            spark, table_dir, res.good, keys, n_buckets, res.buckets,
+                            refresh=_refresh_incremental,
+                        )
+                    )
+            else:
+                _refresh_incremental(None)
+                before_files = (
+                    {f for f in os.listdir(table_dir) if f.endswith(".parquet")}
+                    if table_existed
+                    else set()
+                )
+                res.good.write.mode(
+                    "append" if table_existed else "overwrite"
+                ).parquet(table_dir)
+                new_files = [
+                    os.path.join(table_dir, f)
+                    for f in os.listdir(table_dir)
+                    if f.endswith(".parquet") and f not in before_files
+                ]
+                extras["persisted_rows"] = sum(map(recorded.footer_rows, new_files))
+                if extras["persisted_rows"] != loaded:
+                    # roll the append back to the pre-load state — a
+                    # partial write must not linger in the live table
+                    if table_existed:
+                        for f in new_files:
+                            try:
+                                os.remove(f)
+                            except OSError:
+                                pass
+                    else:
+                        shutil.rmtree(table_dir, ignore_errors=True)
+                    raise recorded.ShortWrite(
+                        table_dir, extras["persisted_rows"], loaded
+                    )
 
-        if bootstrap_report:
-            merged_facts = recorded.read(
-                spark, table_dir, _table_schema(_read_layout(table_dir))
-            )
-            if BUCKET_COL in merged_facts.columns:
-                merged_facts = merged_facts.drop(BUCKET_COL)
-            refresh_report(
-                spark,
-                rdir,
-                report_spec,
-                delta_state=aggregate_state(merged_facts, report_spec),
-                marker_batch_id=load_id,
-            )
+            if bootstrap_report:
+                merged_facts = recorded.read(
+                    spark, table_dir, _table_schema(_read_layout(table_dir))
+                )
+                if BUCKET_COL in merged_facts.columns:
+                    merged_facts = merged_facts.drop(BUCKET_COL)
+                refresh_report(
+                    spark,
+                    rdir,
+                    report_spec,
+                    delta_state=aggregate_state(merged_facts, report_spec),
+                    marker_batch_id=load_id,
+                )
+        except recorded.ShortWrite as e:
+            detail = str(e)
 
-        ok = (
-            validate_counts(res.src_rows - res.bad_rows, loaded, maxerrors)
-            and write_ok
+        ok = not detail and validate_counts(
+            res.src_rows - res.bad_rows, loaded, maxerrors
         )
         report = IngestReport(
             file=fname,
@@ -523,7 +498,7 @@ def ingest_file(
             loaded_rows=loaded,
             bad_rows=res.bad_rows,
             status="ok" if ok else "count_mismatch",
-            detail="" if write_ok else "persisted rows != staged rows",
+            detail=detail,
             extras=extras,
         )
         if backup_dir:
@@ -577,13 +552,14 @@ def compact_table(
     read (partition pruning keeps every healthy bucket untouched — same
     contract as the merge itself); each is rewritten as one file per
     bucket (``repartition(n, bucket)`` maps a bucket to exactly one
-    task) and swapped in through the same crash-safe swap as ingest
-    (sources/swap.py), so a crash mid-compaction never loses a bucket.
-    Returns the number of buckets compacted.
+    task) and installed like ingest's merge (recorded.install): a short
+    write raises ``recorded.ShortWrite`` with the live table untouched,
+    and a crash mid-compaction never loses a bucket. Returns the number
+    of buckets compacted.
 
     Unbucketed tables (the keyless append path — one new file per
-    appended load) compact as a whole: rewrite to ``max_files_per_bucket``
-    files in staging, then swap the whole table dir. A crash inside the
+    appended load) compact as a whole: ``max_files_per_bucket`` files
+    installed over the whole table dir. A crash inside the
     swap is healed on entry here AND by ``ingest_file`` before anything
     else reads or recreates the path.
 
@@ -599,9 +575,7 @@ def compact_table(
         return n_files > max_files_per_bucket
 
     schema = _table_schema(_read_layout(table_dir))
-    staging = table_dir + "__compact"
-    bucketed = _is_bucketed(table_dir)
-    if not bucketed:
+    if not _is_bucketed(table_dir):
         if not oversized(table_dir):
             return 0
         rows = recorded.read(spark, table_dir, schema)
@@ -618,17 +592,4 @@ def compact_table(
             F.col(BUCKET_COL).isin(todo)
         )
         rows, by = rows.repartition(len(todo), F.col(BUCKET_COL)), (BUCKET_COL,)
-    written, expected = _observed_write(rows, staging, by)
-    # the read-back gate of _upsert_buckets: a silently short write must
-    # never displace good data
-    persisted = _count_parquet(spark, staging, written)
-    if persisted != expected:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(
-            f"compact_table aborted: staging holds {persisted} rows, "
-            f"expected {expected}; live table left untouched"
-        )
-    if bucketed:
-        return swap.swap_children(staging, table_dir, f"{BUCKET_COL}=")
-    swap.swap(staging, table_dir)
-    return 1
+    return recorded.install(rows, table_dir, by)[1]

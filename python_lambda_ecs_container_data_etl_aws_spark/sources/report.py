@@ -15,10 +15,9 @@ can be passed as row-level :func:`contributions`, so the refresh's one
 aggregate folds them together with the base.
 
 The report table itself is |groups|-sized, so a full rewrite of the
-report directory per refresh, installed by the crash-safe swap
-(sources/swap.py), is the cheap part; the win is never re-scanning the
-facts. Each refresh records the state's schema in the report dir
-(sources/recorded.py), so reading the report launches no
+report directory per refresh, count-gated by ``recorded.install``, is
+the cheap part; the win is never re-scanning the facts. The install
+records the state's schema, so reading the report launches no
 schema-inference job.
 """
 
@@ -122,10 +121,10 @@ def refresh_report(
     # groups whose every row was replaced away retract to n_rows = 0 —
     # they have no surviving facts and leave the report
     state = state.filter(F.col("n_rows") > 0)
-    recorded.replace(
-        state,
+    recorded.install(
+        state.coalesce(1),
         report_dir,
-        {} if marker_batch_id is None else {"_last_batch": str(marker_batch_id)},
+        files={} if marker_batch_id is None else {"_last_batch": str(marker_batch_id)},
     )
 
 

@@ -1,14 +1,11 @@
 """Crash-safe directory swap — the one replacement, package-wide, for
 the reference's transactional temp→permanent move (`2.2
 loading-lambda-for-mysql.py:267-316`, where MySQL makes the step
-atomic). Every table the package rewrites in place goes through it:
-the buckets of ingest and of the streaming CDC apply, and compaction
-(pipeline), the tables rewritten whole — the maintained report and the
-streaming kept table (recorded.replace) — and audit-log day compaction
-(audit).
+atomic), behind ``recorded.install``, which installs every table the
+package rewrites in place.
 
-Protocol: write a staging dir, rename the live dir aside to the
-dot-prefixed sibling ``.<name>__old``, rename staging in, drop the
+Protocol: write the dot-prefixed sibling ``.<name>__staging``, rename
+the live dir aside to ``.<name>__old``, rename staging in, drop the
 aside. Each rename is atomic, so a crash leaves the data old or new,
 never lost:
 
@@ -17,10 +14,11 @@ never lost:
 - after rename-in: live holds the new data, a stale aside lingers.
 
 :func:`heal` covers all three with one rule: live missing → restore
-the aside; live present → drop the aside. The aside is dot-prefixed
-because Spark's file index skips '.'/'_'-prefixed paths: a leftover is
-invisible to partition discovery, where an un-prefixed one would parse
-as a malformed partition value and fail every later read.
+the aside; live present → drop the aside. Staging and aside are
+dot-prefixed because Spark's file index skips '.'/'_'-prefixed paths:
+a leftover is invisible to partition discovery (an audit-log day sits
+in a partitioned dir), where an un-prefixed one would parse as a
+malformed partition value and fail every later read.
 
 Single maintainer: only a table's maintenance entry points heal it,
 with no exception. A reader healing mid-swap would restore an aside
@@ -40,6 +38,12 @@ def aside(path: str) -> str:
     """The aside name of ``path``: its dot-prefixed ``__old`` sibling."""
     parent, name = os.path.split(os.path.abspath(path))
     return os.path.join(parent, f".{name}{_ASIDE_SUFFIX}")
+
+
+def staging(path: str) -> str:
+    """The staging name of ``path``: its dot-prefixed ``__staging`` sibling."""
+    parent, name = os.path.split(os.path.abspath(path))
+    return os.path.join(parent, f".{name}__staging")
 
 
 def heal(path: str) -> None:

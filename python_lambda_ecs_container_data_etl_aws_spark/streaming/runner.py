@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
+from ..sources import recorded
+
 
 def file_stream(
     spark: SparkSession,
@@ -423,9 +425,8 @@ def dedup_ingest_stream(
         bsh, bb = bsh.persist(), bb.persist()
         ish, ib = _other_batches(sh_dir, batch_id), _other_batches(bands_dir, batch_id)
         if ish and ib:
-            pairs = neardup_pairs_vs_index(
-                spark.read.parquet(*ish), spark.read.parquet(*ib), bsh, bb, threshold
-            )
+            index = recorded.read(spark, ish, bsh.schema), recorded.read(spark, ib, bb.schema)
+            pairs = neardup_pairs_vs_index(*index, bsh, bb, threshold)
         else:
             pairs = _jaccard_verify(candidate_pairs_from_bands(bb), bsh).filter(
                 F.col("jaccard") >= threshold
@@ -556,9 +557,8 @@ def segment_dedup_ingest_stream(
         # own crashed attempt's segments would gut the whole batch
         other_batches = _other_batches(index_dir, batch_id)
         if other_batches:
-            idx = (
-                spark.read.parquet(*other_batches).select("seg_text").distinct()
-            )
+            stored = recorded.read(spark, other_batches, seg.select("seg_text").schema)
+            idx = stored.select("seg_text").distinct()
             seg = seg.join(
                 idx.withColumn("__in_corpus", F.lit(1)), "seg_text", "left"
             )
@@ -636,8 +636,9 @@ def exact_dedup_ingest_stream(
         if others:
             # on-disk index column stays "__nmd5" (the stored values
             # are raw md5 hashes — pre-refactor indexes remain valid)
+            stored = batch.select(F.col("__gk").alias("__nmd5")).schema
             idx = (
-                spark.read.parquet(*others)
+                recorded.read(spark, others, stored)
                 .select(F.col("__nmd5").alias("__gk"))
                 .distinct()
             )
@@ -687,12 +688,13 @@ def source_cap_stream(
 
     Replay-safe by construction: the fold dedups by id before ranking,
     so re-folding an already-folded batch is a no-op; the kept table
-    (≤ cap × |sources| rows — state, not data) is replaced whole with
-    its schema recorded (sources/recorded.py), through the crash-safe
-    swap, so reading it back launches no schema-inference job."""
+    (≤ cap × |sources| rows — state, not data) is replaced whole by
+    ``recorded.install`` (a short write raises out of the batch, which
+    then replays), with its schema recorded, so reading it back
+    launches no schema-inference job."""
     from pyspark.sql import Window
 
-    from ..sources import recorded, swap
+    from ..sources import swap
 
     # heal a crashed swap at STREAM START: a restart with no new input
     # fires zero batches, and readers of the kept table would otherwise
@@ -720,7 +722,7 @@ def source_cap_stream(
             .filter(F.col("__rn") <= cap)
             .drop("__rn", "__dup")
         )
-        recorded.replace(kept, kept_dir)
+        recorded.install(kept.coalesce(1), kept_dir)
 
     return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
@@ -892,7 +894,7 @@ def boilerplate_lines_ingest_stream(
         others = _other_batches(index_dir, batch_id)
         if others:
             hist = (
-                spark.read.parquet(*others)
+                recorded.read(spark, others, batch_df_counts.schema)
                 .groupBy("__lmd5")
                 .agg(F.sum("ndocs").cast("bigint").alias("hdocs"))
             )
@@ -1045,14 +1047,9 @@ def cdc_apply_stream(
         touched = batch_df.agg(F.collect_set(bucket)).first()[0]
         if not touched:
             return
-        persisted, expected, _ = pipeline._upsert_buckets(
+        pipeline._upsert_buckets(
             spark, table_dir, batch_df, [key_col], n_buckets, touched, order=order
         )
-        if persisted != expected:
-            raise RuntimeError(
-                f"CDC batch {batch_id}: staging read back {persisted} of "
-                f"{expected} rows; nothing swapped, the batch replays"
-            )
 
     return _drain(src.writeStream.foreachBatch(sink), checkpoint_dir)
 
@@ -1158,16 +1155,17 @@ def abtest_monitor_stream(
             )
             .persist()
         )
+        ids = b.select("user_id").schema
         seen = _other_batches(users_dir, batch_id)
         new_users = (
-            b.join(spark.read.parquet(*seen), "user_id", "anti")
+            b.join(recorded.read(spark, seen, ids), "user_id", "anti")
             if seen
             else b
         )
         conv = _other_batches(conv_dir, batch_id)
         purchasers = b.filter(F.col("has_conv") == 1)
         new_convs = (
-            purchasers.join(spark.read.parquet(*conv), "user_id", "anti")
+            purchasers.join(recorded.read(spark, conv, ids), "user_id", "anti")
             if conv
             else purchasers
         )
@@ -1204,7 +1202,8 @@ def read_abtest_readout(spark: SparkSession, state_dir: str) -> DataFrame:
     the batch query so both emit identical columns and arithmetic."""
     from ..plans.business import abtest_readout_from_counts
 
-    deltas = spark.read.parquet(os.path.join(state_dir, "arm_deltas"))
+    schema = StructType.fromDDL("arm BIGINT, new_users BIGINT, new_convs BIGINT")
+    deltas = recorded.read(spark, os.path.join(state_dir, "arm_deltas"), schema)
     t = deltas.agg(
         F.coalesce(
             F.sum(F.when(F.col("arm") == 0, F.col("new_users"))), F.lit(0)

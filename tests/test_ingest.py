@@ -16,7 +16,14 @@ from pyspark.sql.types import StructType
 
 from python_lambda_ecs_container_data_etl_aws_spark.catalog import load_table
 from python_lambda_ecs_container_data_etl_aws_spark.export import export_report_csv
-from python_lambda_ecs_container_data_etl_aws_spark.sources import archive, chunking, merge, registry
+from python_lambda_ecs_container_data_etl_aws_spark.sources import (
+    archive,
+    chunking,
+    merge,
+    recorded,
+    registry,
+    swap,
+)
 from python_lambda_ecs_container_data_etl_aws_spark.sources.audit import (
     LOG_SCHEMA,
     expire_log,
@@ -32,7 +39,13 @@ from python_lambda_ecs_container_data_etl_aws_spark.sources.pipeline import (
     ingest_file,
     read_permanent,
 )
-from python_lambda_ecs_container_data_etl_aws_spark.sources.report import ReportSpec, read_report
+from python_lambda_ecs_container_data_etl_aws_spark.sources.report import (
+    ReportSpec,
+    aggregate_state,
+    last_applied_marker,
+    read_report,
+    refresh_report,
+)
 from tests.conftest import SF_DIR
 
 HEADER = ",".join(registry.PRICEINDEX.canonical_columns)
@@ -383,19 +396,21 @@ def test_keyed_delta_builds_no_relation_from_python_rows(spark, tmp_path, monkey
 
 def test_keyed_delta_job_count_is_pinned(spark, tmp_path):
     """Spark jobs for one accepted keyed delta into an existing bucketed
-    table, with the audit log and the maintained report on: 12. It was
-    25 while the permanent table, the staging read-back and the report
-    were read with schema inference, the touched buckets came from a
-    ``distinct().collect()``, the merge was a full-outer join with a
-    second semi-join for the retraction, and the write gate counted a
-    persisted merge (29 before that, when the read counted with three
-    actions). A rise here is a new eager action on the per-file path."""
+    table, with the audit log and the maintained report on: 10. It was
+    12 while the staging read-back was a Spark count (2 jobs) rather
+    than the driver's footer count, 25 while the permanent table, the
+    staging read-back and the report were read with schema inference,
+    the touched buckets came from a ``distinct().collect()``, the merge
+    was a full-outer join with a second semi-join for the retraction,
+    and the write gate counted a persisted merge (29 before that, when
+    the read counted with three actions). A rise here is a new eager
+    action on the per-file path."""
     wh, log_dir, delta = _bucketed_table_and_delta(spark, tmp_path)
     before = _jobs_so_far(spark)
     rep = _ingest_keyed(spark, delta, wh, log_dir)
     jobs = _jobs_so_far(spark) - before
     assert rep.status == "ok"
-    assert jobs == 12
+    assert jobs == 10
 
 
 def test_recorded_schema_reads_launch_no_job(spark, tmp_path):
@@ -508,7 +523,7 @@ def test_failed_staging_write_releases_cached_relations(spark, tmp_path, monkeyp
     real_parquet = DataFrameWriter.parquet
 
     def _parquet(self, path, *args, **kwargs):
-        if os.path.basename(path) == "priceindex__staging":
+        if os.path.basename(path) == ".priceindex__staging":
             raise OSError("staging volume full")
         return real_parquet(self, path, *args, **kwargs)
 
@@ -518,3 +533,116 @@ def test_failed_staging_write_releases_cached_relations(spark, tmp_path, monkeyp
         _ingest_keyed(spark, delta, wh, log_dir)
     monkeypatch.undo()
     assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+
+
+def _file_bytes(root: str) -> dict:
+    """Every file under ``root`` (hidden ones too) -> its bytes."""
+    out = {}
+    for dp, _, fs in os.walk(root):
+        for f in fs:
+            with open(os.path.join(dp, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(dp, f), root)] = fh.read()
+    return out
+
+
+def _short_footers(monkeypatch, path: str) -> None:
+    """Make the footer count of ``path``'s staging read one row short."""
+    real = recorded.footer_rows
+    monkeypatch.setattr(
+        recorded,
+        "footer_rows",
+        lambda p: real(p) - (p == swap.staging(path)),
+    )
+
+
+def test_refresh_report_aborts_on_short_staging_write(spark, tmp_path, monkeypatch):
+    """The maintained report is installed through the footer read-back
+    gate: a short staged report raises and leaves the live report and
+    its ``_last_batch`` marker as they were, with no staging left. The
+    same refresh then applies."""
+    wh, _, _ = _bucketed_table_and_delta(spark, tmp_path)
+    rdir = os.path.join(wh, "priceindex__report")
+    before, marker = _file_bytes(rdir), last_applied_marker(rdir)
+    delta = aggregate_state(
+        read_permanent(spark, wh, "priceindex").filter(F.col("DGUID") == "D1"),
+        REPORT_SPEC,
+    )
+
+    _short_footers(monkeypatch, rdir)
+    with pytest.raises(recorded.ShortWrite, match="read back 0 rows, expected 1"):
+        refresh_report(spark, rdir, REPORT_SPEC, delta, marker_batch_id="again")
+    monkeypatch.undo()
+    assert _file_bytes(rdir) == before and last_applied_marker(rdir) == marker
+    assert not os.path.exists(swap.staging(rdir))
+
+    refresh_report(spark, rdir, REPORT_SPEC, delta, marker_batch_id="again")
+    assert last_applied_marker(rdir) == "again"
+    assert [(r.GEO, r.n_rows) for r in read_report(spark, rdir).collect()] == [
+        ("Canada", 21)
+    ]
+
+
+def test_short_bucket_write_reports_count_mismatch_and_rerun_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A keyed delta whose staged buckets read back short is a
+    ``count_mismatch`` load with its audit row, and every live bucket
+    stays byte-identical. Re-running the same file converges the table
+    and the report."""
+    wh, log_dir, delta = _bucketed_table_and_delta(spark, tmp_path)
+    table_dir = os.path.join(wh, "priceindex")
+    before = _file_bytes(table_dir)
+
+    _short_footers(monkeypatch, table_dir)
+    rep = _ingest_keyed(spark, delta, wh, log_dir)
+    monkeypatch.undo()
+    assert rep.status == "count_mismatch" and "read back" in rep.detail
+    assert _file_bytes(table_dir) == before
+    assert not os.path.exists(swap.staging(table_dir))
+    log = load_ingest_log(spark, log_dir).collect()
+    assert ("PriceIndex_delta.csv", "count_mismatch") in {
+        (r.file, r.status) for r in log
+    }
+
+    assert _ingest_keyed(spark, delta, wh, log_dir).status == "ok"
+    rows = {r.DGUID: (r.GEO, r.VALUE) for r in read_permanent(spark, wh, "priceindex").collect()}
+    assert len(rows) == 22
+    assert rows["D2"] == ("Quebec", "9.0") and rows["N1"] == ("Canada", "1.0")
+    report = {
+        r.GEO: (r.n_rows, float(r.value_sum))
+        for r in read_report(spark, os.path.join(wh, "priceindex__report")).collect()
+    }
+    moved = sum(i + 0.5 for i in (1, 2, 3))
+    assert report == {
+        "Canada": (19, sum(i + 0.5 for i in range(20)) - moved + 2.0),
+        "Quebec": (3, 27.0),
+    }
+
+
+def test_short_write_during_report_bootstrap_leaves_the_report_to_the_rerun(
+    spark, tmp_path, monkeypatch
+):
+    """A report missing over a table with history is bootstrapped from
+    the merged table after the swap. When the bucket install is short,
+    nothing is merged, so no report is bootstrapped from the old table
+    and marked applied: the re-run bootstraps it with the delta in."""
+    import shutil
+
+    wh, log_dir, delta = _bucketed_table_and_delta(spark, tmp_path)
+    rdir = os.path.join(wh, "priceindex__report")
+    shutil.rmtree(rdir)
+
+    _short_footers(monkeypatch, os.path.join(wh, "priceindex"))
+    assert _ingest_keyed(spark, delta, wh, log_dir).status == "count_mismatch"
+    monkeypatch.undo()
+    assert not os.path.exists(rdir)
+
+    assert _ingest_keyed(spark, delta, wh, log_dir).status == "ok"
+    report = {
+        r.GEO: (r.n_rows, float(r.value_sum)) for r in read_report(spark, rdir).collect()
+    }
+    moved = sum(i + 0.5 for i in (1, 2, 3))
+    assert report == {
+        "Canada": (19, sum(i + 0.5 for i in range(20)) - moved + 2.0),
+        "Quebec": (3, 27.0),
+    }

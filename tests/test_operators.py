@@ -1181,7 +1181,7 @@ def test_compact_log_aborts_swap_on_short_staging_write(spark, tmp_path, monkeyp
     leave the day partition untouched."""
     import os
 
-    from python_lambda_ecs_container_data_etl_aws_spark.sources import audit
+    from python_lambda_ecs_container_data_etl_aws_spark.sources import audit, recorded
     from python_lambda_ecs_container_data_etl_aws_spark.sources.pipeline import (
         IngestReport,
     )
@@ -1195,17 +1195,9 @@ def test_compact_log_aborts_swap_on_short_staging_write(spark, tmp_path, monkeyp
     day = next(e for e in os.listdir(log_dir) if e.startswith("log_date="))
     date = day.split("=", 1)[1]
 
-    real_read = spark.read.parquet
-
-    class FakeReader:
-        def parquet(self, path):
-            df = real_read(path)
-            return df.limit(2) if path.endswith("__staging") else df
-
-    monkeypatch.setattr(
-        type(spark), "read", property(lambda self: FakeReader())
-    )
-    with pytest.raises(RuntimeError, match="compact_log aborted"):
+    real = recorded.footer_rows
+    monkeypatch.setattr(recorded, "footer_rows", lambda path: real(path) - 1)
+    with pytest.raises(recorded.ShortWrite, match="read back 2 rows, expected 3"):
         audit.compact_log(spark, log_dir, date)
     monkeypatch.undo()
     assert audit.load_ingest_log(spark, log_dir).count() == 3
@@ -1213,6 +1205,39 @@ def test_compact_log_aborts_swap_on_short_staging_write(spark, tmp_path, monkeyp
     # healthy path still compacts
     assert audit.compact_log(spark, log_dir, date) == 3
     assert audit.load_ingest_log(spark, log_dir).count() == 3
+
+
+def test_compact_log_job_count_is_pinned(spark, tmp_path):
+    """Compacting a day of three one-row log files runs 1 Spark job, the
+    write: the day is read with the declared log schema and the staged
+    rows are counted from the footers on the driver. It was 7 while the
+    day and its staging were read inferred and counted with separate
+    actions."""
+    import os
+
+    from python_lambda_ecs_container_data_etl_aws_spark.sources import audit
+    from python_lambda_ecs_container_data_etl_aws_spark.sources.pipeline import (
+        IngestReport,
+    )
+
+    log_dir = str(tmp_path / "log")
+    for i in range(3):
+        audit.log_ingest(
+            spark, log_dir, IngestReport(file=f"f{i}.csv", route="t", loaded_rows=i),
+            now_us=1_700_000_000_000_000,
+        )
+
+    def jobs():
+        return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+    before = jobs()
+    assert audit.compact_log(spark, log_dir, "2023-11-14") == 3
+    assert jobs() - before == 1
+    files = os.listdir(os.path.join(log_dir, "log_date=2023-11-14"))
+    assert len([f for f in files if f.endswith(".parquet")]) == 1
+    assert sorted(r.file for r in audit.load_ingest_log(spark, log_dir).collect()) == [
+        "f0.csv", "f1.csv", "f2.csv"
+    ]
 
 
 def test_audio_features_rejects_non_16bit(spark):

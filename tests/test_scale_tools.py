@@ -986,6 +986,7 @@ def test_compact_table_aborts_swap_on_short_staging_write(spark, tmp_path, monke
     import pytest as _pt
 
     from python_lambda_ecs_container_data_etl_aws_spark.sources import pipeline as pl
+    from python_lambda_ecs_container_data_etl_aws_spark.sources import recorded, swap
 
     land = tmp_path / "landing"
     land.mkdir()
@@ -1006,13 +1007,11 @@ def test_compact_table_aborts_swap_on_short_staging_write(spark, tmp_path, monke
         if p.endswith(".parquet")
     }
 
-    real = pl._count_parquet
-    monkeypatch.setattr(
-        pl, "_count_parquet", lambda spark_, path, schema: real(spark_, path, schema) - 1
-    )
-    with _pt.raises(RuntimeError, match="compact_table aborted"):
+    real = recorded.footer_rows
+    monkeypatch.setattr(recorded, "footer_rows", lambda path: real(path) - 1)
+    with _pt.raises(recorded.ShortWrite, match="read back"):
         pl.compact_table(spark, table_dir)
-    monkeypatch.setattr(pl, "_count_parquet", real)
+    monkeypatch.setattr(recorded, "footer_rows", real)
     after = {
         os.path.join(dp, p)
         for dp, _, fs in os.walk(table_dir)
@@ -1020,7 +1019,7 @@ def test_compact_table_aborts_swap_on_short_staging_write(spark, tmp_path, monke
         if p.endswith(".parquet")
     }
     assert after == before  # no bucket swapped, no staging left live
-    assert not os.path.isdir(table_dir + "__compact")
+    assert not os.path.isdir(swap.staging(table_dir))
     assert spark.read.parquet(table_dir).count() == 80
 
     # unbucketed whole-table path: same abort contract
@@ -1032,12 +1031,10 @@ def test_compact_table_aborts_swap_on_short_staging_write(spark, tmp_path, monke
         )
         ingest_file(spark, str(f), wh2)  # keyless append
     t2 = os.path.join(wh2, "priceindex")
-    monkeypatch.setattr(
-        pl, "_count_parquet", lambda spark_, path, schema: real(spark_, path, schema) - 1
-    )
-    with _pt.raises(RuntimeError, match="compact_table aborted"):
+    monkeypatch.setattr(recorded, "footer_rows", lambda path: real(path) - 1)
+    with _pt.raises(recorded.ShortWrite, match="read back"):
         pl.compact_table(spark, t2)
-    monkeypatch.setattr(pl, "_count_parquet", real)
+    monkeypatch.setattr(recorded, "footer_rows", real)
     assert spark.read.parquet(t2).count() == 20
     # and with the healthy read-back, compaction proceeds normally
     assert pl.compact_table(spark, t2) == 1
@@ -1289,13 +1286,16 @@ def test_swap_protocol_has_one_implementation():
 
 
 def test_package_tables_have_one_reader_and_one_persist_owner():
-    """Every parquet read in sources/pipeline.py and sources/report.py
-    goes through sources/recorded.read, the one reader that passes a
-    recorded schema (and infers only for a table that records none).
-    pipeline.py persists one relation, the marked merge, in the one
-    function that owns it and releases it in ``finally``, and collects
-    no ``distinct()`` set. The bucket directory name is spelled in
-    pipeline.py alone, so no other module lays out or lists buckets."""
+    """Every parquet read in the package goes through
+    sources/recorded.read, the one reader that passes a recorded schema
+    (and infers only for a table that records none), except the catalog's
+    external test tables (catalog.py) and a caller-given path
+    (serving.py). pipeline.py persists one relation, the marked merge,
+    in the one function that owns it and releases it in ``finally``, and
+    collects no ``distinct()`` set. The bucket directory name is spelled
+    in pipeline.py alone, so no other module lays out or lists buckets.
+    recorded.install is the one installer: the swaps are called and
+    write counts observed in sources/recorded.py alone."""
     import ast
 
     import python_lambda_ecs_container_data_etl_aws_spark.sources as src
@@ -1360,6 +1360,30 @@ def test_package_tables_have_one_reader_and_one_persist_owner():
                     if "__bucket=" in fh.read():
                         spellers.add(os.path.relpath(path, pkg_root))
     assert spellers == {os.path.join("sources", "pipeline.py")}
+
+    readers, swappers, observers = set(), set(), set()
+    for dirpath, _, files in os.walk(pkg_root):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, pkg_root)
+            with open(path, encoding="utf-8") as fh:
+                text = fh.read()
+            if "Observation" in text:
+                observers.add(rel)
+            for c in ast.walk(ast.parse(text)):
+                if not (isinstance(c, ast.Call) and isinstance(c.func, ast.Attribute)):
+                    continue
+                callee = ast.unparse(c.func.value)
+                if c.func.attr == "parquet" and ".read" in callee:
+                    readers.add(rel)
+                if c.func.attr in ("swap", "swap_children") and callee == "swap":
+                    swappers.add(rel)
+    recorded_py = os.path.join("sources", "recorded.py")
+    assert readers == {recorded_py, "catalog.py", os.path.join("sources", "serving.py")}
+    assert swappers == {recorded_py}
+    assert observers == {recorded_py}
 
 
 def test_synth_sf_replication_invariants(tmp_path):

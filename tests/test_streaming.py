@@ -17,6 +17,7 @@ from pyspark.sql.types import (
 
 from python_lambda_ecs_container_data_etl_aws_spark.catalog import load_table
 from python_lambda_ecs_container_data_etl_aws_spark.sources import pipeline as pl
+from python_lambda_ecs_container_data_etl_aws_spark.sources import recorded, swap
 from python_lambda_ecs_container_data_etl_aws_spark.streaming import runner
 from tests.conftest import SF_DIR
 
@@ -833,6 +834,49 @@ def test_source_cap_stream_recovers_on_restart_without_new_data(spark, tmp_path)
     assert spark.read.parquet(kept_dir).count() == 2
 
 
+def test_source_cap_stream_aborts_on_short_kept_write(spark, tmp_path, monkeypatch):
+    """The kept table is installed through the footer read-back gate: a
+    short staged fold raises out of the drain with the kept table
+    unchanged and no staging left, the checkpoint does not commit the
+    batch, and the next drain folds it."""
+    from pyspark.errors import StreamingQueryException
+
+    doc_schema = StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("text", StringType()),
+            StructField("source", StringType()),
+        ]
+    )
+    landing = str(tmp_path / "sw_landing")
+    kept_dir = str(tmp_path / "sw_kept")
+    ck = str(tmp_path / "ck_sw")
+
+    def arrive(rows):
+        spark.createDataFrame(rows, doc_schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(landing)
+
+    def kept_files():
+        return {f.name: f.read_bytes() for f in (tmp_path / "sw_kept").iterdir()}
+
+    arrive([(1, "a b c", "s"), (2, "a b", "s")])
+    runner.source_cap_stream(spark, landing, doc_schema, kept_dir, ck, cap=2)
+    before = kept_files()
+
+    arrive([(3, "a b c d", "s")])
+    real = recorded.footer_rows
+    monkeypatch.setattr(recorded, "footer_rows", lambda path: real(path) - 1)
+    with pytest.raises(StreamingQueryException, match="read back"):
+        runner.source_cap_stream(spark, landing, doc_schema, kept_dir, ck, cap=2)
+    monkeypatch.setattr(recorded, "footer_rows", real)
+    assert kept_files() == before
+    assert not os.path.exists(swap.staging(kept_dir))
+
+    runner.source_cap_stream(spark, landing, doc_schema, kept_dir, ck, cap=2)
+    assert {r.doc_id for r in spark.read.parquet(kept_dir).collect()} == {1, 3}
+
+
 def test_boilerplate_lines_stream_arrival_time_df(spark, tmp_path):
     """Streaming CCNet boilerplate removal (q81's front-door twin):
     a line reaching min_docs distinct docs — within one batch or
@@ -1159,7 +1203,7 @@ def test_cdc_apply_stream_recovers_crashed_bucket_swap(spark, tmp_path):
 
 def test_read_cdc_table_skips_staging_left_by_crashed_batch(spark, tmp_path):
     """A crash between staging bucket K and swapping it in leaves
-    ``<table>__staging/__bucket=K`` next to the live table. The reader
+    ``.<table>__staging/__bucket=K`` next to the live table. The reader
     must take only the live bucket dirs: every key exactly once, not
     twice until the checkpoint replays the batch."""
     import shutil
@@ -1173,7 +1217,7 @@ def test_read_cdc_table_skips_staging_left_by_crashed_batch(spark, tmp_path):
     # key 1's bucket: its staged copy was written, the swap never ran
     bdir = _cdc_bucket(spark, table, 1)
     shutil.copytree(
-        bdir, os.path.join(table + "__staging", os.path.basename(bdir))
+        bdir, os.path.join(swap.staging(table), os.path.basename(bdir))
     )
     per_key = {
         r.k: r.n
@@ -1316,7 +1360,7 @@ def test_cdc_apply_stream_fresh_checkpoint_replay_is_idempotent(spark, tmp_path)
 
 def test_cdc_apply_stream_cleans_stale_staging_leftovers(spark, tmp_path):
     """A crash between STAGING a bucket and swapping it (the two-phase
-    apply) leaves ``<table>__staging/__bucket=K`` behind. On replay the
+    apply) leaves ``.<table>__staging/__bucket=K`` behind. On replay the
     sink must discard the stale staging output (the batch re-runs from
     the checkpoint) and converge to the correct state, and neither the
     table directory nor its staging sibling may hold residue."""
@@ -1330,7 +1374,7 @@ def test_cdc_apply_stream_cleans_stale_staging_leftovers(spark, tmp_path):
     # simulate a crash mid-batch: a fully-written staging dir for
     # bucket 1 that never swapped in (contents would-be-next state)
     stale = os.path.join(
-        table + "__staging", os.path.basename(_cdc_bucket(spark, table, 1))
+        swap.staging(table), os.path.basename(_cdc_bucket(spark, table, 1))
     )
     os.makedirs(stale)
     with open(os.path.join(stale, "garbage.parquet"), "w") as f:
@@ -1348,7 +1392,7 @@ def test_cdc_apply_stream_cleans_stale_staging_leftovers(spark, tmp_path):
         if e.endswith("__staging") or e.endswith("__old")
     ]
     assert residue == [], residue
-    assert not os.path.exists(table + "__staging")
+    assert not os.path.exists(swap.staging(table))
 
 
 def test_cdc_apply_stream_keeps_the_recorded_bucket_layout(spark, tmp_path):
@@ -1452,15 +1496,13 @@ def test_cdc_apply_stream_aborts_swap_on_short_staging_write(
     _cdc_arrive(
         spark, landing, [(k, k * 100, 1, "U") for k in range(8)] + [(9, 0, 1, "D")]
     )
-    real = pl._count_parquet
-    monkeypatch.setattr(
-        pl, "_count_parquet", lambda spark_, path, schema: real(spark_, path, schema) - 1
-    )
+    real = recorded.footer_rows
+    monkeypatch.setattr(recorded, "footer_rows", lambda path: real(path) - 1)
     with pytest.raises(StreamingQueryException, match="read back"):
         runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
-    monkeypatch.setattr(pl, "_count_parquet", real)
+    monkeypatch.setattr(recorded, "footer_rows", real)
     assert files() == before
-    assert not os.path.exists(table + "__staging")
+    assert not os.path.exists(swap.staging(table))
 
     runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
     got = sorted((r.k, r.qp) for r in runner.read_cdc_table(spark, table).collect())
@@ -1473,10 +1515,11 @@ def test_cdc_apply_stream_aborts_swap_on_short_staging_write(
 def test_cdc_batch_job_count_is_pinned(spark, tmp_path):
     """Spark jobs for one CDC micro-batch that rewrites all 8 buckets of
     an existing table, around the whole drain: the touched-bucket
-    ``collect_set``, the clustered merge write and its read-back. It
-    was 28 while each bucket had its own inferred read, write and swap
-    behind an ``isEmpty()``, a persist and a ``distinct().collect()``. A
-    drain with no new data runs none."""
+    ``collect_set`` and the clustered merge write; the read-back counts
+    footers on the driver. It was 6 while the read-back was a Spark
+    count, and 28 while each bucket had its own inferred read, write
+    and swap behind an ``isEmpty()``, a persist and a
+    ``distinct().collect()``. A drain with no new data runs none."""
     landing = str(tmp_path / "cdc_landing")
     table = str(tmp_path / "cdc_table")
     ck = str(tmp_path / "ck_cdc")
@@ -1499,7 +1542,7 @@ def test_cdc_batch_job_count_is_pinned(spark, tmp_path):
     _cdc_arrive(spark, landing, [(k, -k, 1, "U") for k in range(64)])
     before = jobs()
     progress = runner.cdc_apply_stream(spark, landing, CDC_SCHEMA, table, ck)
-    assert jobs() - before == 6
+    assert jobs() - before == 4
     assert sum(p["numInputRows"] for p in progress) > 0
     new = files()
     assert len(new) == 8 and all(new[b] != old[b] for b in new)
@@ -1651,8 +1694,10 @@ def test_streaming_runner_makes_each_replay_decision_once():
     isEmpty() test only returns early, never guards a batch-dir write.
     The CDC table has no maintainer of its own here: the module swaps
     no directory and heals no partition children, computes no
-    ``% n_buckets`` bucket, and the CDC apply and reader hold no bare
-    parquet read (sources/pipeline.py maintains and reads the table)."""
+    ``% n_buckets`` bucket (sources/pipeline.py maintains and reads the
+    table). No function holds a bare parquet read: every per-batch
+    store is read through sources/recorded.read with the schema its
+    sink writes."""
     import ast
 
     with open(runner.__file__, encoding="utf-8") as fh:
@@ -1693,9 +1738,5 @@ def test_streaming_runner_makes_each_replay_decision_once():
     }
     assert not swaps, swaps
     assert "% n_buckets" not in text
-    for node in tree.body:
-        if isinstance(node, ast.FunctionDef) and node.name in (
-            "cdc_apply_stream",
-            "read_cdc_table",
-        ):
-            assert "spark.read.parquet" not in ast.unparse(node), node.name
+    # every per-batch store is read with the schema its sink writes
+    assert "spark.read." not in text
