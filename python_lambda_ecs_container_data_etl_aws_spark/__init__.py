@@ -11,7 +11,8 @@ columns) mandated by the project north star.
 
 Layout
 ------
-- ``session``   : SparkSession factory (AQE, timezone, shuffle sizing)
+- ``session``   : SparkSession factory (AQE, timezone, shuffle sizing),
+                  and ``local_frame`` for driver-held rows
 - ``catalog``   : loaders for the test star schema + events/documents/embeddings
 - ``plans``     : the declared query catalog (Q01-Q16 + extension queries),
                   each with a DuckDB oracle-SQL twin

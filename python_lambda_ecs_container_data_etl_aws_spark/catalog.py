@@ -4,10 +4,17 @@ Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file each under
 ``/root/testdata/sf{0.001,0.01,0.1}``.
 
+Every table reads through ``sources/recorded.read`` with the schema
+its file's own footer holds, derived on the driver
+(``recorded.footer_schema``): building a table's scan launches no
+Spark job. Only a path with no local data file (a remote URI) is
+inferred.
+
 Scale posture: loaders return plain scans (no .cache()) so Catalyst
 can push filters/projections into the parquet reader; at 100 TB the
 same code reads a partitioned table directory instead of a single
-file and partition pruning applies unchanged.
+file, its schema from one footer, and partition pruning applies
+unchanged.
 """
 
 from __future__ import annotations
@@ -18,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .session import configure
+from .sources import recorded
 
 TABLE_NAMES = [
     "region",
@@ -47,7 +55,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     configure(spark)
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return recorded.read(spark, f"{sf_dir}/{name}.parquet", None)
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,18 +65,20 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     testdata generations — TIMESTAMP(NANOS) (read as BIGINT under
     ``spark.sql.legacy.parquet.nanosAsLong``), TIMESTAMP(MICROS)
     isAdjustedToUTC=false (read as TIMESTAMP_NTZ), or an adjusted
-    TIMESTAMP (read as TIMESTAMP_LTZ) — so we dispatch on the resolved
-    Spark type instead of assuming one. All three paths produce the
-    same integer instant DuckDB's ``epoch_us(ts)`` yields (session tz
-    is pinned UTC, so the NTZ cast is interpretation-free). Epoch
-    integers sidestep every timezone/format hazard in cross-engine
-    comparison, and the normalization is a zero-shuffle projection the
-    scan absorbs. A file Spark cannot read (TIMESTAMP(NANOS) on a
-    session where nanosAsLong could not be set) raises; it is never
-    loaded through the driver instead.
+    TIMESTAMP (read as TIMESTAMP_LTZ) — so we dispatch on the type the
+    file's footer schema gives ``ts`` (``recorded.footer_schema``, the
+    type Spark's inference would resolve) instead of assuming one. All
+    three paths produce the same integer instant DuckDB's
+    ``epoch_us(ts)`` yields (session tz is pinned UTC, so the NTZ cast
+    is interpretation-free). Epoch integers sidestep every
+    timezone/format hazard in cross-engine comparison, and the
+    normalization is a zero-shuffle projection the scan absorbs. A file
+    Spark cannot read (TIMESTAMP(NANOS) on a session where nanosAsLong
+    could not be set) raises from the footer mapping, as Spark's
+    inference would; it is never loaded through the driver instead.
     """
     configure(spark)
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = recorded.read(spark, f"{sf_dir}/events.parquet", None)
     ts_type = df.schema["ts"].dataType.simpleString()
     if ts_type == "bigint":
         ts_us = F.expr("ts div 1000")  # nanosAsLong: truncate nanos→micros

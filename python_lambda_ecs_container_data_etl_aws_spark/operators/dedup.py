@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.spread import spread_scan
+from ..session import local_frame
 
 # Mersenne prime 2^31-1: universal-hash modulus. Keys and coefficients
 # stay below 2^31 so a*x+b fits in a 63-bit long (Spark 4 runs ANSI
@@ -568,21 +569,17 @@ def connected_components(
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         e2.unpersist()
-        import pandas as pd
-
-        spark = edges.sparkSession
-        # hand the assignment back through Arrow (pandas), not
-        # parallelize: a tuple-list createDataFrame is a Python-RDD
-        # scan whose first aggregation measured ~4s of per-session
-        # overhead; the Arrow local relation costs milliseconds
-        pdf = pd.DataFrame(
-            {"node": list(parent), "cluster_rep": [find(n) for n in parent]},
-            dtype="int64",
+        # hand the assignment back as an Arrow local relation
+        # (session.local_frame), not a tuple-list or pandas
+        # createDataFrame: with arrow.pyspark.enabled off (the session
+        # default) both are Python-RDD scans whose first aggregation
+        # measured ~4s of per-session overhead. The explicit schema
+        # keeps a pair-free corpus (every doc unique) a zero-row result.
+        return local_frame(
+            edges.sparkSession,
+            [(n, find(n)) for n in parent],
+            "node BIGINT, cluster_rep BIGINT",
         )
-        # explicit schema: a pair-free corpus (every doc unique) yields
-        # an EMPTY frame, and schema inference on empty data raises —
-        # "no near-dups" must be a zero-row result, not a crash
-        return spark.createDataFrame(pdf, "node BIGINT, cluster_rep BIGINT")
     edges = e2.select(F.col("a").alias(a_col), F.col("b").alias(b_col))
     # persist + materialize the symmetric edge relation: every round's
     # join consumes it, and without the cache each round would recompute

@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..session import local_frame
+
 
 def _maybe_broadcast(df: DataFrame, flag: bool) -> DataFrame:
     return F.broadcast(df) if flag else df
@@ -143,9 +145,7 @@ def pagerank(
                     StructField("r", LongType()),
                 ]
             )
-            return spark.createDataFrame(
-                [(n, int(r[n])) for n in nodes_d], out_schema
-            )
+            return local_frame(spark, [(n, int(r[n])) for n in nodes_d], out_schema)
     outw = we.groupBy(src).agg(F.sum("w").cast("bigint").alias("tw"))
     # node set from the AGGREGATED relation — it carries the identical
     # distinct src/dst values, so deriving nodes from the raw edge

@@ -73,6 +73,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_events, load_table
+from ..session import local_frame
 from .core import ORACLE, _q
 from .evalsuite import _md5i_spark, _md5i_sql
 
@@ -212,9 +213,7 @@ def q158(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("supp_ab")
     )
     supp_rows = [(i, s) for i, s in freq]
-    fdf = spark.createDataFrame(
-        supp_rows or [("", 0)], "item STRING, supp BIGINT"
-    )
+    fdf = local_frame(spark, supp_rows or [("", 0)], "item STRING, supp BIGINT")
     fa = fdf.select(F.col("item").alias("item_a"), F.col("supp").alias("supp_ante"))
     fb = fdf.select(F.col("item").alias("item_b"), F.col("supp").alias("supp_cons"))
     return (

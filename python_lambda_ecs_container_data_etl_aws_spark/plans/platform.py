@@ -93,6 +93,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import local_frame
 from ..sources.chunking import add_autoid
 from .core import ORACLE, _q
 from .corpus import CDC_LOG_CTE, _md5_ordered, cdc_log
@@ -1905,7 +1906,8 @@ ORDER BY d.doc_id
 @_q("q122_lexicon_sentiment")
 def q122(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    lex = spark.createDataFrame(
+    lex = local_frame(
+        spark,
         [(w, 1) for w in _SENT_POS] + [(w, -1) for w in _SENT_NEG],
         "term string, pol int",
     )

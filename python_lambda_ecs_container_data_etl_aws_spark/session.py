@@ -16,7 +16,8 @@ import os
 import warnings
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Runtime SQL confs that queries in this package rely on. They are
 # applied by ``configure()`` to *any* session (including one created by
@@ -141,3 +142,24 @@ def get_spark(app_name: str = "python-lambda-ecs-etl-spark", cpus: int | None = 
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return configure(builder.getOrCreate())
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str | StructType) -> DataFrame:
+    """Driver-held ``rows`` (tuples in ``schema``'s column order) as a
+    ``LocalRelation``: the rows ride into the plan inside one Arrow
+    table, so scanning them runs no Python worker and no job. A
+    tuple-list ``createDataFrame`` is instead a Python-RDD scan
+    (``LogicalRDD``) whose tasks each start a Python worker. A
+    ``pyarrow.Table`` takes the Arrow path whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -17,6 +17,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def add_autoid(df: DataFrame, order_cols: list[str], partitions: int | None = None) -> DataFrame:
     """Append dense 1-based ``autoid`` ordered by ``order_cols``.
@@ -30,7 +32,9 @@ def add_autoid(df: DataFrame, order_cols: list[str], partitions: int | None = No
     branch per partition is O(P) deep and blows past JVM codegen method
     limits somewhere past ~10k partitions, exactly the partition counts
     a 100 TB input arrives with. The broadcast table is one row per
-    partition regardless of P.
+    partition regardless of P, built on the driver as a
+    ``LocalRelation`` (``session.local_frame``): joining it starts no
+    Python worker and runs no job.
 
     The within-partition number comes from the data's cached sort
     order (``sortWithinPartitions`` + the record-index bits of
@@ -64,9 +68,7 @@ def add_autoid(df: DataFrame, order_cols: list[str], partitions: int | None = No
     for pid in sorted(counts):
         offsets.append((pid, acc))
         acc += counts[pid]
-    off_df = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "__pid INT, __off BIGINT"
-    )
+    off_df = local_frame(df.sparkSession, offsets or [(0, 0)], "__pid INT, __off BIGINT")
     rn = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)) + 1
     return (
         ranged.withColumn("__rn", rn)
@@ -111,7 +113,7 @@ def add_prefix_sum(
     for pid in sorted(sums):
         offsets.append((pid, acc))
         acc += int(sums[pid] or 0)
-    off_df = df.sparkSession.createDataFrame(offsets or [(0, 0)], "__pid INT, __off BIGINT")
+    off_df = local_frame(df.sparkSession, offsets or [(0, 0)], "__pid INT, __off BIGINT")
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order_cols)

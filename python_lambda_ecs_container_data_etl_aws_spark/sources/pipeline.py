@@ -137,10 +137,18 @@ def _write_layout(
 
 def _table_schema(layout: dict | None) -> StructType | None:
     """The schema a layout records; None for a table without one (keyless,
-    or bucketed before schemas were recorded), which reads inferred."""
+    or bucketed before schemas were recorded)."""
     if layout is None or "schema" not in layout:
         return None
     return StructType.fromJson(layout["schema"])
+
+
+def _recorded_schema(table_dir: str) -> StructType | None:
+    """The schema recorded for the table at ``table_dir``: its layout's,
+    else the ``_schema`` a whole-table install wrote. None for a table
+    with neither (a keyless table never compacted), which
+    ``recorded.read`` reads with its footer schema."""
+    return _table_schema(_read_layout(table_dir)) or recorded.load_schema(table_dir)
 
 
 def _stage_merge(
@@ -475,7 +483,7 @@ def ingest_file(
 
             if bootstrap_report:
                 merged_facts = recorded.read(
-                    spark, table_dir, _table_schema(_read_layout(table_dir))
+                    spark, table_dir, _recorded_schema(table_dir)
                 )
                 if BUCKET_COL in merged_facts.columns:
                     merged_facts = merged_facts.drop(BUCKET_COL)
@@ -533,7 +541,7 @@ def read_permanent(
         if strict:
             raise RuntimeError(msg)
         warnings.warn(msg, stacklevel=2)
-    df = recorded.read(spark, table_dir, _table_schema(_read_layout(table_dir)))
+    df = recorded.read(spark, table_dir, _recorded_schema(table_dir))
     return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
 
@@ -574,7 +582,7 @@ def compact_table(
         n_files = sum(f.endswith(".parquet") for f in os.listdir(d))
         return n_files > max_files_per_bucket
 
-    schema = _table_schema(_read_layout(table_dir))
+    schema = _recorded_schema(table_dir)
     if not _is_bucketed(table_dir):
         if not oversized(table_dir):
             return 0

@@ -429,8 +429,8 @@ def test_recorded_schema_reads_launch_no_job(spark, tmp_path):
 
 def test_layout_without_schema_loads_and_then_records_it(spark, tmp_path):
     """A bucketed table whose ``.layout.json`` predates recorded schemas
-    reads inferred once; its next load lands correctly and records the
-    schema."""
+    reads with its footer schema once; its next load lands correctly and
+    records the schema."""
     import json
 
     wh, log_dir, delta = _bucketed_table_and_delta(spark, tmp_path)
@@ -470,6 +470,137 @@ def test_report_files_disagreeing_with_recorded_schema_raise(spark, tmp_path):
         recorded.write_schema(rdir, StructType(fields))
         with pytest.raises(ValueError, match="schema recorded"):
             read_report(spark, rdir)
+
+
+def test_timestamp_ntz_table_reads_back_through_its_record(spark, tmp_path):
+    """A table the package installs with a TIMESTAMP_NTZ column reads
+    back through its own record: the footer check maps the column as
+    Spark does (``timestamp_ntz``), not as a UTC-adjusted timestamp."""
+    path = str(tmp_path / "ntz")
+    rows = spark.sql(
+        "SELECT 1 AS k, TIMESTAMP_NTZ'2024-01-02 03:04:05.678901' AS t"
+    )
+    assert recorded.install(rows, path) == (1, 1)
+    schema = recorded.load_schema(path)
+    assert schema.simpleString() == "struct<k:int,t:timestamp_ntz>"
+    back = recorded.read(spark, path, schema).collect()
+    assert [(r.k, str(r.t)) for r in back] == [(1, "2024-01-02 03:04:05.678901")]
+
+
+def test_keyless_table_read_launches_no_job(spark, tmp_path):
+    """Building the read of a keyless (appended) table launches no Spark
+    job: with no layout it takes the ``_schema`` a compaction recorded,
+    and before any compaction the footer schema of one of its files."""
+    from python_lambda_ecs_container_data_etl_aws_spark.sources.pipeline import (
+        compact_table,
+    )
+
+    wh = str(tmp_path / "wh")
+    for day, n in (("d1", 6), ("d2", 4)):
+        path = _write_csv(
+            tmp_path, f"PriceIndex_{day}.csv",
+            [HEADER] + [_price_row(f"{day}_{i}", "1.0") for i in range(n)],
+        )
+        assert ingest_file(spark, path, wh).status == "ok"
+    table_dir = os.path.join(wh, "priceindex")
+    for compacted in (False, True):
+        assert (recorded.load_schema(table_dir) is not None) == compacted
+        before = _jobs_so_far(spark)
+        table = read_permanent(spark, wh, "priceindex")
+        assert _jobs_so_far(spark) == before
+        assert table.columns == list(registry.PRICEINDEX.canonical_columns)
+        assert table.count() == 10
+        if not compacted:
+            assert compact_table(spark, table_dir) == 1
+
+
+def test_footer_schema_is_spark_inference_on_the_catalog_tables(spark):
+    """For every table of both perfbench tiers, the footer schema is the
+    schema Spark's inference reads."""
+    import glob
+
+    data = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "data")
+    files = sorted(
+        glob.glob(os.path.join(data, "sf0.001", "*.parquet"))
+        + glob.glob(os.path.join(data, "sf0.01", "*.parquet"))
+    )
+    assert len(files) == 20
+    for f in files:
+        assert recorded.footer_schema(f) == spark.read.parquet(f).schema, f
+
+
+@pytest.mark.parametrize(
+    "unit, tz, int96, want",
+    [
+        ("ns", None, False, "bigint"),  # NANOS, read under nanosAsLong
+        ("us", None, True, "timestamp"),  # INT96
+        ("us", None, False, "timestamp_ntz"),  # MICROS, not adjusted
+        ("us", "UTC", False, "timestamp"),  # MICROS, adjusted
+    ],
+)
+def test_footer_schema_timestamp_encodings_match_spark(
+    spark, tmp_path, unit, tz, int96, want
+):
+    """Each timestamp encoding a landing file has arrived in maps to the
+    type Spark's inference gives it under the package session; the
+    arrow type alone cannot tell INT96 or NANOS from MICROS."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    f = str(tmp_path / "ts.parquet")
+    ts = pa.array([datetime.datetime(2024, 1, 2, 3, 4, 5, 678901)], pa.timestamp(unit, tz=tz))
+    pq.write_table(pa.table({"t": ts}), f, use_deprecated_int96_timestamps=int96)
+    schema = recorded.footer_schema(f)
+    assert schema == spark.read.parquet(f).schema
+    assert schema["t"].dataType.simpleString() == want
+
+
+def test_footer_schema_of_a_spark_file_is_its_row_metadata(spark, tmp_path):
+    """A file Spark wrote carries its schema in the footer's row
+    metadata; that key, the one Spark's inference reads, is the footer
+    schema (DECIMAL(28,4) here, nested and non-null fields nullable)."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "spark_dec")
+    spark.sql(
+        "SELECT CAST(1.5 AS DECIMAL(28,4)) AS d, array(1, 2) AS a, 'x' AS s"
+    ).write.parquet(path)
+    f = next(
+        os.path.join(path, n) for n in sorted(os.listdir(path)) if n.endswith(".parquet")
+    )
+    key = pq.read_metadata(f).metadata[recorded.SPARK_SCHEMA_KEY]
+    assert StructType.fromJson(json.loads(key))["d"].dataType.simpleString() == "decimal(28,4)"
+    schema = recorded.footer_schema(path)
+    assert schema == spark.read.parquet(path).schema
+    assert schema.simpleString() == "struct<d:decimal(28,4),a:array<int>,s:string>"
+
+
+def test_footer_schema_raises_on_a_type_it_cannot_map(tmp_path):
+    """A column Spark would not read as one exact type is never guessed:
+    the error names the column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    f = str(tmp_path / "u.parquet")
+    pq.write_table(pa.table({"k": pa.array([1], pa.int64()), "u": pa.array([1], pa.uint32())}), f)
+    with pytest.raises(ValueError, match="column 'u'"):
+        recorded.footer_schema(f)
+
+
+def test_catalog_load_all_launches_no_job(spark):
+    """Building every catalog table's scan launches no Spark job: each
+    reads with its footer schema, derived on the driver."""
+    from python_lambda_ecs_container_data_etl_aws_spark.catalog import load_all
+
+    before = _jobs_so_far(spark)
+    dfs = load_all(spark, SF_DIR)
+    assert _jobs_so_far(spark) == before
+    assert dfs["events"].schema["ts_us"].dataType.simpleString() == "bigint"
+    assert dfs["lineitem"].schema == spark.read.parquet(f"{SF_DIR}/lineitem.parquet").schema
 
 
 def test_audit_row_round_trips_quoted_non_ascii_file_name(spark, tmp_path):

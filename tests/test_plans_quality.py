@@ -1670,3 +1670,39 @@ def test_q192_dq_suite_one_scan_per_table_pruned(spark):
     schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
     li = [s for s in schemas if "l_quantity" in s]
     assert li and all("l_comment" not in s and "l_shipdate" not in s for s in li)
+
+
+def test_driver_built_relations_are_local_relations(spark):
+    """Rows the driver holds (add_autoid's offsets, q122's lexicon,
+    q158's frequent items, pagerank's and connected components' driver
+    results) enter the plan as a ``LocalRelation``, never as a
+    Python-RDD scan (``LogicalRDD``), whose tasks each start a Python
+    worker."""
+    from python_lambda_ecs_container_data_etl_aws_spark.session import local_frame
+
+    df = local_frame(spark, [(0, 0)], "__pid INT, __off BIGINT")
+    assert df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
+    for name in (
+        "q09_autoid_rownumber",
+        "q122_lexicon_sentiment",
+        "q158_basket_rules",
+        "q99_domain_pagerank",
+        "q47_neardup_clusters",
+    ):
+        analyzed = QUERIES[name](spark, SF_DIR)._jdf.queryExecution().analyzed()
+        assert "LogicalRDD" not in analyzed.toString(), name
+        assert "LocalRelation" in analyzed.toString(), name
+    spark.catalog.clearCache()
+
+
+def test_q09_build_job_count_is_pinned(spark):
+    """Building q09 on a cold cache runs 5 Spark jobs, all add_autoid's
+    range sample and per-partition counts: the tables read with footer
+    schemas (no inference job) and the offsets join in as a local
+    relation. It was 6 while lineitem's schema was inferred."""
+    spark.catalog.clearCache()
+    jobs = spark.sparkContext._jsc.sc().dagScheduler()
+    before = jobs.numTotalJobs()
+    QUERIES["q09_autoid_rownumber"](spark, SF_DIR)
+    assert jobs.numTotalJobs() - before == 5
+    spark.catalog.clearCache()

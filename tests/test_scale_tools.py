@@ -1287,10 +1287,11 @@ def test_swap_protocol_has_one_implementation():
 
 def test_package_tables_have_one_reader_and_one_persist_owner():
     """Every parquet read in the package goes through
-    sources/recorded.read, the one reader that passes a recorded schema
-    (and infers only for a table that records none), except the catalog's
-    external test tables (catalog.py) and a caller-given path
-    (serving.py). pipeline.py persists one relation, the marked merge,
+    sources/recorded.read, the one reader that passes a recorded or a
+    footer schema (and infers only for a path with no local data file),
+    the catalog's test tables included, except a caller-given path
+    (serving.py). Rows the driver holds become a DataFrame only through
+    session.local_frame, the one ``createDataFrame``. pipeline.py persists one relation, the marked merge,
     in the one function that owns it and releases it in ``finally``, and
     collects no ``distinct()`` set. The bucket directory name is spelled
     in pipeline.py alone, so no other module lays out or lists buckets.
@@ -1361,7 +1362,7 @@ def test_package_tables_have_one_reader_and_one_persist_owner():
                         spellers.add(os.path.relpath(path, pkg_root))
     assert spellers == {os.path.join("sources", "pipeline.py")}
 
-    readers, swappers, observers = set(), set(), set()
+    readers, swappers, observers, local_rows = set(), set(), set(), set()
     for dirpath, _, files in os.walk(pkg_root):
         for f in files:
             if not f.endswith(".py"):
@@ -1372,7 +1373,13 @@ def test_package_tables_have_one_reader_and_one_persist_owner():
                 text = fh.read()
             if "Observation" in text:
                 observers.add(rel)
-            for c in ast.walk(ast.parse(text)):
+            tree = ast.parse(text)
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef):
+                    for c in ast.walk(fn):
+                        if isinstance(c, ast.Attribute) and c.attr == "createDataFrame":
+                            local_rows.add((rel, fn.name))
+            for c in ast.walk(tree):
                 if not (isinstance(c, ast.Call) and isinstance(c.func, ast.Attribute)):
                     continue
                 callee = ast.unparse(c.func.value)
@@ -1381,7 +1388,8 @@ def test_package_tables_have_one_reader_and_one_persist_owner():
                 if c.func.attr in ("swap", "swap_children") and callee == "swap":
                     swappers.add(rel)
     recorded_py = os.path.join("sources", "recorded.py")
-    assert readers == {recorded_py, "catalog.py", os.path.join("sources", "serving.py")}
+    assert readers == {recorded_py, os.path.join("sources", "serving.py")}
+    assert local_rows == {("session.py", "local_frame")}
     assert swappers == {recorded_py}
     assert observers == {recorded_py}
 
