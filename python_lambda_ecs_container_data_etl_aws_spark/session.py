@@ -141,6 +141,15 @@ def get_spark(app_name: str = "python-lambda-ecs-etl-spark", cpus: int | None = 
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
+    # Static, so it is set here and not in RUNTIME_CONFS (configure()
+    # would warn CANNOT_MODIFY_CONFIG on a running session). With it on,
+    # every pyspark.sql.functions call captures its Python call site:
+    # it walks the stack, retries ``import IPython`` and makes about 5
+    # py4j round trips, so F.col costs 3.1 ms instead of 0.36 ms and the
+    # CSV loader spends ~150 ms per file composing expressions. The
+    # trade: an analysis error keeps its condition and message but its
+    # DataFrame context no longer names the Python file:line.
+    builder = builder.config("spark.python.sql.dataFrameDebugging.enabled", "false")
     return configure(builder.getOrCreate())
 
 
@@ -152,14 +161,19 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str | StructType
     (``LogicalRDD``) whose tasks each start a Python worker. A
     ``pyarrow.Table`` takes the Arrow path whatever
     ``spark.sql.execution.arrow.pyspark.enabled`` says."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
+
+
+def arrow_table(rows: list[tuple], schema: StructType):
+    """``rows`` (tuples in ``schema``'s column order) as one
+    ``pyarrow.Table`` typed by ``schema``."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
     columns = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
     )
-    return spark.createDataFrame(table, schema)

@@ -7,10 +7,11 @@ appends one row; re-running a load appends another row rather than
 updating in place — the log is the immutable record the "did
 yesterday's load succeed" query reads.
 
-The row is built JVM-side, as a typed literal projection over a
-one-row range, and appended in one Spark job: no Python-local rows, so
-no Python worker starts for a one-row write, and file names (which come
-from outside the program) never pass through SQL text.
+The driver already holds the row, so the driver writes it: one parquet
+file per row, written with pyarrow into the day partition by
+``recorded.append_local`` (footer row count checked, then renamed in):
+no Spark job and no Python worker. Spark reads the files with the
+declared ``LOG_SCHEMA``, whichever writer made them.
 
 Scale posture: one tiny file per load event, partitioned by log_date so
 status queries prune to the days they ask about. At 100 TB-scale load
@@ -21,6 +22,7 @@ partitions) — the append contract and schema stay identical.
 from __future__ import annotations
 
 import datetime as _dt
+import os
 import time
 from typing import TYPE_CHECKING
 
@@ -28,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
 from . import recorded, swap
 
 if TYPE_CHECKING:  # pragma: no cover - import cycle guard (typing only)
@@ -39,14 +42,23 @@ LOG_SCHEMA = (
 )
 
 
+def _day_schema() -> StructType:
+    """The columns of a day's files: every one but the partition's own."""
+    return StructType(
+        [f for f in StructType.fromDDL(LOG_SCHEMA).fields if f.name != "log_date"]
+    )
+
+
 def log_ingest(
     spark: SparkSession,
     log_dir: str,
     report: "IngestReport",
     now_us: int | None = None,
 ) -> None:
-    """Append one audit row for ``report``. ``now_us`` is injectable for
-    deterministic tests; defaults to wall-clock."""
+    """Append one audit row for ``report`` to its ``log_date`` day, as
+    one driver-written file (``recorded.append_local``): no Spark job.
+    ``now_us`` is injectable for deterministic tests; defaults to
+    wall-clock."""
     # the write path is a maintenance entry point (single-maintainer
     # contract, sources/swap.py), so it is the safe place to heal a
     # crashed compaction swap — readers must not
@@ -61,29 +73,8 @@ def log_ingest(
         report.status,
         report.detail,
         ts,
-        day,
     )
-    (
-        _log_row(spark, row)
-        .coalesce(1)
-        .write.mode("append")
-        .partitionBy("log_date")
-        .parquet(log_dir)
-    )
-
-
-def _log_row(spark: SparkSession, values: tuple | None = None) -> DataFrame:
-    """One ``LOG_SCHEMA`` row of ``values`` (all NULL when omitted) as
-    literals cast to the declared types, projected over a one-partition
-    range — the relation never leaves the JVM."""
-    schema = StructType.fromDDL(LOG_SCHEMA)
-    values = values or (None,) * len(schema.fields)
-    return spark.range(0, 1, 1, 1).select(
-        *[
-            F.lit(v).cast(f.dataType).alias(f.name)
-            for f, v in zip(schema.fields, values)
-        ]
-    )
+    recorded.append_local(os.path.join(log_dir, f"log_date={day}"), [row], _day_schema())
 
 
 def load_ingest_log(spark: SparkSession, log_dir: str) -> DataFrame:
@@ -103,7 +94,6 @@ def load_ingest_log(spark: SparkSession, log_dir: str) -> DataFrame:
     next log_ingest / compact_log / expire_log heals it — so stranded
     day asides trigger a warning here, making the partial read
     observable without mutating the log dir."""
-    import os
     import warnings
 
     from pyspark.errors import AnalysisException
@@ -130,7 +120,7 @@ def load_ingest_log(spark: SparkSession, log_dir: str) -> DataFrame:
             e.startswith("log_date=") for e in os.listdir(log_dir)
         ):
             raise
-        return _log_row(spark).limit(0)
+        return local_frame(spark, [], LOG_SCHEMA)
 
 
 def status_rollup(log: DataFrame) -> DataFrame:
@@ -166,18 +156,12 @@ def compact_log(spark: SparkSession, log_dir: str, log_date: str) -> int:
     the swap would be lost. Idempotent — re-compacting is a no-op
     rewrite.
     """
-    import os
-
     part = os.path.join(log_dir, f"log_date={log_date}")
     # heal crashes for EVERY day, not just this one
     swap.heal_children(log_dir)
     if not os.path.isdir(part):
         return 0
-    # the day's files hold every column but the partition's own
-    day = StructType(
-        [f for f in StructType.fromDDL(LOG_SCHEMA).fields if f.name != "log_date"]
-    )
-    rows = recorded.read(spark, part, day)
+    rows = recorded.read(spark, part, _day_schema())
     return recorded.install(rows.coalesce(1), part)[0]
 
 
@@ -186,7 +170,6 @@ def expire_log(log_dir: str, keep_after: str) -> list[str]:
     ``keep_after`` (ISO date string — lexicographic compare is date
     compare). Partition-dir deletes, no data scan. Returns the dropped
     dates."""
-    import os
     import shutil
 
     dropped = []

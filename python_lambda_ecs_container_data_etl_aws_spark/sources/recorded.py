@@ -25,6 +25,9 @@ column names or types.
 (`2.2 loading-lambda-for-mysql.py:267-316`, gate `2.2:300-308`). Its
 read-back sums the staged footers' row counts on the driver: what a
 Spark ``count()`` of the files would read, without the job.
+:func:`append_local` is the same gate for rows the driver already
+holds (the audit log's one row per load): it writes them with pyarrow
+and renames the checked file in, with no Spark job at all.
 """
 
 from __future__ import annotations
@@ -47,6 +50,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..session import arrow_table
 from . import swap
 
 SCHEMA_FILE = "_schema"
@@ -108,6 +112,28 @@ def install(
             fh.write(text)
     swap.swap(staging, path)
     return expected, 1
+
+
+def append_local(dir_path: str, rows: list[tuple], schema: StructType) -> None:
+    """Append driver-held ``rows`` (tuples in ``schema``'s order) to the
+    parquet table at ``dir_path`` as one new file, written by pyarrow on
+    the driver — no Spark job. The file is written under a dot-prefixed
+    name, which readers skip, its footer row count is checked (a
+    mismatch removes it and raises :class:`ShortWrite`), and it is then
+    renamed in, so a reader sees the whole file or none of it."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(dir_path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    hidden = os.path.join(dir_path, "." + name)
+    pq.write_table(arrow_table(rows, schema), hidden)
+    found = footer_rows(hidden)
+    if found != len(rows):
+        os.remove(hidden)
+        raise ShortWrite(dir_path, found, len(rows))
+    os.replace(hidden, os.path.join(dir_path, name))
 
 
 def footer_rows(path: str) -> int:

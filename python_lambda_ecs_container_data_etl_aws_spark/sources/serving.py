@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import recorded
+
 
 def write_serving_table(
     df: DataFrame,
@@ -53,9 +55,11 @@ def point_query(
     projection: list[str] | None = None,
 ) -> DataFrame:
     """The GSI query shape: equality on (hash, range) + projection.
-    Partition pruning handles the hash key; row-group stats the range."""
+    Partition pruning handles the hash key; row-group stats the range.
+    The table reads with its footer schema (``recorded.read``), so
+    building a lookup runs no Spark job."""
     df = (
-        spark.read.parquet(path)
+        recorded.read(spark, path, None)
         .filter(F.col(partition_col) == partition_value)
         .filter(F.col(cluster_col) == cluster_value)
     )

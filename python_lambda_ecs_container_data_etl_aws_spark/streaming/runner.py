@@ -314,15 +314,17 @@ def ingest_stream(
     With :func:`refresh_report_once` as the hook this is the streaming
     twin of the maintained report (sources/report.py): the
     load→rebuild-report loop (`2.2:376-398`) folding each batch into the
-    report, never rescanning the facts. (The fact append shares the
-    standard parquet-sink caveat: a replayed batch appends again.)
+    report, never rescanning the facts. Each batch's facts land in
+    ``out_dir/batch=<id>`` (:func:`_write_batch`), so a batch replayed
+    after a lost commit replaces its own dir instead of appending its
+    rows again.
     """
     src = file_stream(spark, landing_dir, schema, fmt)
     if transform is not None:
         src = transform(src)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
+        _write_batch(batch_df, out_dir, batch_id)
         if on_batch_complete is not None:
             on_batch_complete(batch_df, batch_id)
 

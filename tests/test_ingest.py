@@ -9,6 +9,7 @@ import os
 from collections import Counter
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
@@ -91,6 +92,95 @@ def test_maxerrors_gate(spark, tmp_path):
     res2 = read_csv_canonical(spark, path, registry.PRICEINDEX, maxerrors=6)
     assert res2.accepted
     assert validate_counts(16, res2.good.count(), maxerrors=6)
+
+
+# (file bytes, sep, encoding) per case; the driver must return exactly
+# Spark's columns, except where HEADER_MAY_RAISE allows a ValueError
+HEADER_CORPUS = {
+    "plain": (b"a,b,c\n1,2,3\n", ",", "UTF-8"),
+    "quoted_sep": (b'"a,b",c\n1,2\n', ",", "UTF-8"),
+    "escaped_quote": (b'"a\\"q",b\n1,2\n', ",", "UTF-8"),
+    "escaped_backslash": (b'"a\\\\b","c\\\\",d\n', ",", "UTF-8"),
+    "unquoted_backslash_and_quote": (b'a\\"q,b"c\n', ",", "UTF-8"),
+    "empty": (b"a,,c\n1,2,3\n", ",", "UTF-8"),
+    "quoted_empty": (b'a,"",c\n1,2,3\n', ",", "UTF-8"),
+    "trailing_sep": (b"a,b,\n1,2,3\n", ",", "UTF-8"),
+    "case_insensitive_dups": (b"a,A,b,a\n1,2,3,4\n", ",", "UTF-8"),
+    "non_ascii_dups": ("\u00c9,\u00e9\n".encode(), ",", "UTF-8"),
+    "surrounding_spaces": (b" a , b,c \n1,2,3\n", ",", "UTF-8"),
+    "space_before_quote": (b' "a",b\n', ",", "UTF-8"),
+    "blanks_after_quote": (b'"a" ,"b"\t,"c"  \n', ",", "UTF-8"),
+    "bom": (b"\xef\xbb\xbfa,b\n1,2\n", ",", "UTF-8"),
+    "bom_latin1": (b"\xef\xbb\xbf\"a\",b\n", ",", "ISO-8859-1"),
+    "crlf": (b"a,b\r\n1,2\r\n", ",", "UTF-8"),
+    "cr": (b"a,b\r1,2\r", ",", "UTF-8"),
+    "leading_blank_lines": (b"\n\r\na,b\n1,2\n", ",", "UTF-8"),
+    "leading_space_lines": (b"   \n \r\na,b\n1,2\n", ",", "UTF-8"),
+    "leading_tab_line": (b"\t\na,b\n", ",", "UTF-8"),
+    "iso_8859_1": ("caf\u00e9,b\n1,2\n".encode("latin-1"), ",", "ISO-8859-1"),
+    "semicolon": (b'a;"b;c";d,e\n1;2;3\n', ";", "UTF-8"),
+    "tab": (b'a\t"b\tc"\td\n1\t2\t3\n', "\t", "UTF-8"),
+    "empty_file": (b"", ",", "UTF-8"),
+    "blank_file": (b"\n  \n", ",", "UTF-8"),
+    "doubled_quote": (b'"a""q",b\n1,2\n', ",", "UTF-8"),
+    "text_after_quote": (b'"a"x,b\n', ",", "UTF-8"),
+    "unterminated_quote": (b'"a,b\n1,2\n', ",", "UTF-8"),
+    "undecodable": (b"a\xff,b\n", ",", "UTF-8"),
+    "suffixed_names_collide": (b"a,a,a1\n1,2,3\n", ",", "UTF-8"),
+}
+HEADER_MAY_RAISE = {
+    "doubled_quote", "text_after_quote", "unterminated_quote", "undecodable"
+}
+
+
+def test_csv_header_matches_spark_header_inference(spark, tmp_path):
+    """The driver's header read gives the columns Spark's header pass
+    gives, case by case; where it cannot reproduce Spark's parse, or
+    Spark rejects the header (``a,a,a1`` suffixes to ``a0,a1,a1``), it
+    raises a ValueError naming the file, never a different list."""
+    from python_lambda_ecs_container_data_etl_aws_spark.sources.loader import csv_header
+
+    for name, (data, sep, encoding) in HEADER_CORPUS.items():
+        path = tmp_path / f"{name}.csv"
+        path.write_bytes(data)
+        try:
+            want = (
+                spark.read.option("header", True)
+                .option("sep", sep)
+                .option("encoding", encoding)
+                .csv(str(path))
+                .columns
+            )
+        except AnalysisException:
+            want = None
+        try:
+            got = csv_header(str(path), sep, encoding)
+        except ValueError as e:
+            assert want is None or name in HEADER_MAY_RAISE, (name, e)
+            assert str(path) in str(e)
+            continue
+        assert got == want, name
+
+
+def test_read_csv_canonical_job_count_is_pinned(spark, tmp_path):
+    """Reading a local CSV runs 3 Spark jobs, all of them the counting
+    aggregate over the cached scan: the header is read on the driver.
+    It was 4 while the header was a Spark pass."""
+    path = _write_csv(tmp_path, "PriceIndex_h.csv", [HEADER, ROW])
+    before = _jobs_so_far(spark)
+    res = read_csv_canonical(spark, path, registry.PRICEINDEX)
+    assert _jobs_so_far(spark) - before == 3
+    assert res.good_rows == 1 and res.good.columns == list(registry.PRICEINDEX.canonical_columns)
+    res.release()
+
+
+def test_unresolved_column_still_raises_its_condition(spark):
+    """With PySpark's call-site capture off (session.get_spark), an
+    analysis error keeps its condition and names the column."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(AnalysisException, match="no_such_col") as e:
+        spark.range(1).select(F.col("no_such_col"))
+    assert e.value.getCondition().startswith("UNRESOLVED_COLUMN")
 
 
 def test_routing_lookup():
@@ -364,10 +454,10 @@ def _jobs_so_far(spark) -> int:
 
 
 def test_keyed_delta_builds_no_relation_from_python_rows(spark, tmp_path, monkeypatch):
-    """Every relation on the ingest → audit → report path of an accepted
-    keyed delta is built JVM-side: ``createDataFrame`` over Python-local
-    rows starts a Python worker, which costs more than the one-row
-    audit append itself."""
+    """Every relation on the ingest → report path of an accepted keyed
+    delta is built JVM-side: ``createDataFrame`` over Python-local rows
+    starts a Python worker. The audit row is no relation at all: the
+    driver writes its file."""
     wh, log_dir, delta = _bucketed_table_and_delta(spark, tmp_path)
 
     def _local_rows(*args, **kwargs):
@@ -396,7 +486,9 @@ def test_keyed_delta_builds_no_relation_from_python_rows(spark, tmp_path, monkey
 
 def test_keyed_delta_job_count_is_pinned(spark, tmp_path):
     """Spark jobs for one accepted keyed delta into an existing bucketed
-    table, with the audit log and the maintained report on: 10. It was
+    table, with the audit log and the maintained report on: 8. It was
+    10 while the audit row was a one-row Spark write and the CSV header
+    a Spark header pass (1 job each) rather than both on the driver,
     12 while the staging read-back was a Spark count (2 jobs) rather
     than the driver's footer count, 25 while the permanent table, the
     staging read-back and the report were read with schema inference,
@@ -410,7 +502,44 @@ def test_keyed_delta_job_count_is_pinned(spark, tmp_path):
     rep = _ingest_keyed(spark, delta, wh, log_dir)
     jobs = _jobs_so_far(spark) - before
     assert rep.status == "ok"
-    assert jobs == 10
+    assert jobs == 8
+
+
+def test_rejected_file_job_count_is_pinned(spark, tmp_path):
+    """An over-gate file (more bad rows than ``maxerrors``) into an
+    existing bucketed table, with the audit log on, runs 3 Spark jobs:
+    the read's counting aggregate over the cached scan. Its header is
+    read and its audit row written on the driver."""
+    wh, log_dir, _ = _bucketed_table_and_delta(spark, tmp_path)
+    bad = _write_csv(
+        tmp_path,
+        "PriceIndex_bad.csv",
+        [HEADER] + [_price_row("D1", "1.0")] + [ROW + ",overflow"] * 6,
+    )
+    before = _jobs_so_far(spark)
+    rep = _ingest_keyed(spark, bad, wh, log_dir)
+    jobs = _jobs_so_far(spark) - before
+    assert (rep.status, rep.bad_rows) == ("rejected", 6)
+    assert jobs == 3
+
+
+def test_unroutable_file_and_log_ingest_run_no_job(spark, tmp_path):
+    """A file no route claims is logged and skipped with 0 Spark jobs,
+    and so is any ``log_ingest`` call: the audit row is a parquet file
+    the driver writes."""
+    log_dir = str(tmp_path / "log")
+    stray = _write_csv(tmp_path, "unrelated.csv", [HEADER, ROW])
+    before = _jobs_so_far(spark)
+    rep = ingest_file(spark, stray, str(tmp_path / "wh"), log_dir=log_dir)
+    log_ingest(
+        spark, log_dir, IngestReport(file="a.csv", route="t", loaded_rows=1),
+        now_us=1_700_000_000_000_000,
+    )
+    assert _jobs_so_far(spark) == before
+    assert rep.status == "skipped"
+    assert sorted(r.file for r in load_ingest_log(spark, log_dir).collect()) == [
+        "a.csv", "unrelated.csv"
+    ]
 
 
 def test_recorded_schema_reads_launch_no_job(spark, tmp_path):
@@ -645,6 +774,59 @@ def test_ingest_log_schema_is_declared_empty_or_not(spark, tmp_path):
     expire_log(log_dir, keep_after="9999-01-01")
     emptied = load_ingest_log(spark, log_dir)  # dir left, no day partitions
     assert emptied.schema == want and emptied.count() == 0
+
+
+def _day_files(log_dir: str) -> list[str]:
+    """Every file in the log's one day partition, hidden ones too."""
+    (day,) = [e for e in os.listdir(log_dir) if e.startswith("log_date=")]
+    return sorted(os.listdir(os.path.join(log_dir, day)))
+
+
+def test_log_row_crash_before_its_rename_stays_invisible(spark, tmp_path, monkeypatch):
+    """A crash between writing a log row's file and renaming it in
+    leaves only a dot-prefixed file, which readers skip: the log reads
+    as it was."""
+    log_dir = str(tmp_path / "log")
+    log_ingest(
+        spark, log_dir, IngestReport(file="a.csv", route="t", loaded_rows=1),
+        now_us=1_700_000_000_000_000,
+    )
+
+    def _crash(src, dst):
+        raise OSError("driver died before the rename")
+
+    monkeypatch.setattr(recorded.os, "replace", _crash)
+    with pytest.raises(OSError, match="before the rename"):
+        log_ingest(
+            spark, log_dir, IngestReport(file="b.csv", route="t", loaded_rows=1),
+            now_us=1_700_000_000_000_000,
+        )
+    monkeypatch.undo()
+    files = _day_files(log_dir)
+    assert len(files) == 2 and [f for f in files if f.startswith(".")]
+    assert [r.file for r in load_ingest_log(spark, log_dir).collect()] == ["a.csv"]
+
+
+def test_short_log_row_raises_and_leaves_nothing(spark, tmp_path, monkeypatch):
+    """A log row file whose footer holds another row count than the
+    rows given raises ``ShortWrite`` and is removed before anything is
+    renamed in."""
+    log_dir = str(tmp_path / "log")
+    log_ingest(
+        spark, log_dir, IngestReport(file="a.csv", route="t", loaded_rows=1),
+        now_us=1_700_000_000_000_000,
+    )
+    before = _day_files(log_dir)
+    real = recorded.footer_rows
+    monkeypatch.setattr(recorded, "footer_rows", lambda p: real(p) - 1)
+    with pytest.raises(recorded.ShortWrite, match="read back 0 rows, expected 1"):
+        log_ingest(
+            spark, log_dir, IngestReport(file="b.csv", route="t", loaded_rows=1),
+            now_us=1_700_000_000_000_000,
+        )
+    monkeypatch.undo()
+    assert _day_files(log_dir) == before
+    assert load_ingest_log(spark, log_dir).count() == 1
 
 
 def test_failed_staging_write_releases_cached_relations(spark, tmp_path, monkeypatch):

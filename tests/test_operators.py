@@ -1208,11 +1208,12 @@ def test_compact_log_aborts_swap_on_short_staging_write(spark, tmp_path, monkeyp
 
 
 def test_compact_log_job_count_is_pinned(spark, tmp_path):
-    """Compacting a day of three one-row log files runs 1 Spark job, the
-    write: the day is read with the declared log schema and the staged
-    rows are counted from the footers on the driver. It was 7 while the
-    day and its staging were read inferred and counted with separate
-    actions."""
+    """Compacting a day of four one-row log files, three written by the
+    driver (``log_ingest``) and one by Spark, runs 1 Spark job, the
+    write: the day is read with the declared log schema whichever writer
+    made its files, and the staged rows are counted from the footers on
+    the driver. It was 7 while the day and its staging were read
+    inferred and counted with separate actions."""
     import os
 
     from python_lambda_ecs_container_data_etl_aws_spark.sources import audit
@@ -1221,22 +1222,28 @@ def test_compact_log_job_count_is_pinned(spark, tmp_path):
     )
 
     log_dir = str(tmp_path / "log")
+    day_dir = os.path.join(log_dir, "log_date=2023-11-14")
     for i in range(3):
         audit.log_ingest(
             spark, log_dir, IngestReport(file=f"f{i}.csv", route="t", loaded_rows=i),
             now_us=1_700_000_000_000_000,
         )
+    spark.createDataFrame(
+        [("f3.csv", "t", 3, 0, "ok", "", 1_700_000_000_000_000)],
+        "file STRING, route STRING, loaded_rows BIGINT, bad_rows BIGINT, "
+        "status STRING, detail STRING, ts_us BIGINT",
+    ).coalesce(1).write.mode("append").parquet(day_dir)
 
     def jobs():
         return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
 
     before = jobs()
-    assert audit.compact_log(spark, log_dir, "2023-11-14") == 3
+    assert audit.compact_log(spark, log_dir, "2023-11-14") == 4
     assert jobs() - before == 1
-    files = os.listdir(os.path.join(log_dir, "log_date=2023-11-14"))
+    files = os.listdir(day_dir)
     assert len([f for f in files if f.endswith(".parquet")]) == 1
     assert sorted(r.file for r in audit.load_ingest_log(spark, log_dir).collect()) == [
-        "f0.csv", "f1.csv", "f2.csv"
+        "f0.csv", "f1.csv", "f2.csv", "f3.csv"
     ]
 
 

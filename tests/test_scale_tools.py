@@ -1289,8 +1289,9 @@ def test_package_tables_have_one_reader_and_one_persist_owner():
     """Every parquet read in the package goes through
     sources/recorded.read, the one reader that passes a recorded or a
     footer schema (and infers only for a path with no local data file),
-    the catalog's test tables included, except a caller-given path
-    (serving.py). Rows the driver holds become a DataFrame only through
+    the catalog's test tables and the serving table included, and every
+    pyarrow parquet write (``pq.write_table``) is in sources/recorded.py
+    too. Rows the driver holds become a DataFrame only through
     session.local_frame, the one ``createDataFrame``. pipeline.py persists one relation, the marked merge,
     in the one function that owns it and releases it in ``finally``, and
     collects no ``distinct()`` set. The bucket directory name is spelled
@@ -1363,6 +1364,7 @@ def test_package_tables_have_one_reader_and_one_persist_owner():
     assert spellers == {os.path.join("sources", "pipeline.py")}
 
     readers, swappers, observers, local_rows = set(), set(), set(), set()
+    arrow_writers = set()
     for dirpath, _, files in os.walk(pkg_root):
         for f in files:
             if not f.endswith(".py"):
@@ -1387,8 +1389,11 @@ def test_package_tables_have_one_reader_and_one_persist_owner():
                     readers.add(rel)
                 if c.func.attr in ("swap", "swap_children") and callee == "swap":
                     swappers.add(rel)
+                if c.func.attr == "write_table":
+                    arrow_writers.add(rel)
     recorded_py = os.path.join("sources", "recorded.py")
-    assert readers == {recorded_py, os.path.join("sources", "serving.py")}
+    assert readers == {recorded_py}
+    assert arrow_writers == {recorded_py}
     assert local_rows == {("session.py", "local_frame")}
     assert swappers == {recorded_py}
     assert observers == {recorded_py}

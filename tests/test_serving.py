@@ -34,6 +34,25 @@ def test_serving_table_point_query_and_pruning(spark, tmp_path):
     assert pf_lines and any("1995-06" in ln for ln in pf_lines), plan[:2000]
 
 
+def test_point_query_build_runs_no_job(spark, tmp_path):
+    """A lookup reads the serving table with its footer schema, so
+    building one runs no Spark job (it inferred the schema with 1 job).
+    Five partitions stay under Spark's parallel-listing threshold."""
+    rows = spark.range(100).selectExpr(
+        "id AS AutoID", "concat('2023-01-0', CAST(id % 5 + 1 AS STRING)) AS Date",
+        "concat('G', CAST(id % 7 AS STRING)) AS GEO", "CAST(id AS DOUBLE) AS VALUE",
+    )
+    path = str(tmp_path / "serv")
+    serving.write_serving_table(rows, path, "Date", "GEO")
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
+    before = jobs()
+    got = serving.point_query(spark, path, "2023-01-03", "G2", "Date", "GEO", ["AutoID"])
+    assert jobs() == before
+    assert sorted(r.AutoID for r in got.collect()) == [
+        i for i in range(100) if i % 5 == 2 and i % 7 == 2
+    ]
+
+
 def test_empty_serving_refresh_stays_readable(spark, tmp_path):
     """Empty-sweep regression: refreshing the serving table with zero
     rows must leave a readable (schema-carrying) table, not a part-

@@ -217,7 +217,10 @@ def test_full_streaming_pipeline_route_canonical_complete(spark, tmp_path):
     )
     got = spark.read.parquet(out)
     assert got.count() == 8  # 5 + 3; converted_ file filtered out
-    assert set(got.columns) == set(registry.PRICEINDEX.canonical_columns) | {"source_file"}
+    # each micro-batch lands in its own batch=<id> dir
+    assert set(got.columns) == set(registry.PRICEINDEX.canonical_columns) | {
+        "source_file", "batch"
+    }
     assert fired == [["PriceIndex_a.csv", "price_b.csv"]]
 
 
@@ -277,6 +280,30 @@ def test_ingest_stream_returns_per_batch_progress(spark, tmp_path):
     )
     assert progress
     assert sum(p["numInputRows"] for p in progress) == len(rows)
+
+
+def test_ingest_stream_replay_after_a_lost_commit_writes_once(spark, tmp_path):
+    """A batch whose writes landed but whose checkpoint commit was lost
+    re-runs on restart; it replaces its own ``batch=<id>`` dir, so the
+    sink holds each row once (an append sink held 60 rows here)."""
+    landing, out = str(tmp_path / "lc_landing"), str(tmp_path / "lc_out")
+    ck = str(tmp_path / "lc_ck")
+    rows = [(i, None, i % 5, "view") for i in range(30)]
+    spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(landing)
+
+    def drain():
+        runner.ingest_stream(spark, landing, EVENT_SCHEMA, out, ck, fmt="parquet")
+
+    drain()
+    assert spark.read.parquet(out).count() == 30
+    commits = os.path.join(ck, "commits")
+    for f in ("0", ".0.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    drain()
+    got = spark.read.parquet(out)
+    assert got.count() == 30
+    assert got.select("event_id").distinct().count() == 30
 
 
 def test_stream_sessions_agree_with_batch_gap_logic(spark, event_batches, tmp_path):
