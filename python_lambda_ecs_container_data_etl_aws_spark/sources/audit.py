@@ -7,11 +7,13 @@ appends one row; re-running a load appends another row rather than
 updating in place — the log is the immutable record the "did
 yesterday's load succeed" query reads.
 
-The driver already holds the row, so the driver writes it: one parquet
-file per row, written with pyarrow into the day partition by
-``recorded.append_local`` (footer row count checked, then renamed in):
-no Spark job and no Python worker. Spark reads the files with the
-declared ``LOG_SCHEMA``, whichever writer made them.
+The driver already holds the row, so for a local log the driver writes
+it: one parquet file per row, written with pyarrow into the day
+partition by ``recorded.append_local`` (footer row count checked, then
+renamed in): no Spark job and no Python worker. A log at a URI
+(``s3a://``, ``hdfs://``, ``file:``) is appended by Spark, one job per
+row. Spark reads the files with the declared ``LOG_SCHEMA``, whichever
+writer made them.
 
 Scale posture: one tiny file per load event, partitioned by log_date so
 status queries prune to the days they ask about. At 100 TB-scale load
@@ -25,6 +27,7 @@ import datetime as _dt
 import os
 import time
 from typing import TYPE_CHECKING
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,10 +58,11 @@ def log_ingest(
     report: "IngestReport",
     now_us: int | None = None,
 ) -> None:
-    """Append one audit row for ``report`` to its ``log_date`` day, as
-    one driver-written file (``recorded.append_local``): no Spark job.
-    ``now_us`` is injectable for deterministic tests; defaults to
-    wall-clock."""
+    """Append one audit row for ``report`` to its ``log_date`` day: as
+    one driver-written file (``recorded.append_local``, no Spark job)
+    when ``log_dir`` is a local path, by a one-job Spark append when it
+    is a URI. ``now_us`` is injectable for deterministic tests; defaults
+    to wall-clock."""
     # the write path is a maintenance entry point (single-maintainer
     # contract, sources/swap.py), so it is the safe place to heal a
     # crashed compaction swap — readers must not
@@ -74,7 +78,17 @@ def log_ingest(
         report.detail,
         ts,
     )
-    recorded.append_local(os.path.join(log_dir, f"log_date={day}"), [row], _day_schema())
+    if urlsplit(log_dir).scheme:
+        (
+            local_frame(spark, [row + (day,)], LOG_SCHEMA)
+            .write.mode("append")
+            .partitionBy("log_date")
+            .parquet(log_dir)
+        )
+    else:
+        recorded.append_local(
+            os.path.join(log_dir, f"log_date={day}"), [row], _day_schema()
+        )
 
 
 def load_ingest_log(spark: SparkSession, log_dir: str) -> DataFrame:

@@ -77,22 +77,10 @@ def read_csv_canonical(
     the canonical columns; its distinct values over the good rows come
     back sorted in ``buckets``, from the same counting aggregate.
     """
-    # Pass 1: header only → the file's own column order, read on the
-    # driver from a local file (no job); Spark's header pass only for a
-    # path that is not one. Pass 2: full read with an explicit
-    # all-string schema + corrupt-record column — PERMISSIVE only
-    # captures malformed rows when a schema is given.
-    if os.path.isfile(path):
-        file_cols = csv_header(path, sep, encoding)
-    else:
-        file_cols = (
-            spark.read.option("header", True)
-            .option("sep", sep)
-            .option("encoding", encoding)
-            .csv(path)
-            .limit(0)
-            .columns
-        )
+    # Pass 1: header only → the file's own column order. Pass 2: full
+    # read with an explicit all-string schema + corrupt-record column —
+    # PERMISSIVE only captures malformed rows when a schema is given.
+    file_cols = file_columns(spark, path, sep, encoding)
     schema = StructType(
         [StructField(c, StringType()) for c in file_cols]
         + [StructField(CORRUPT_COL, StringType())]
@@ -154,50 +142,76 @@ def read_csv_canonical(
     )
 
 
-# the charsets Spark's line-based CSV read accepts whose line breaks,
-# separators and quotes are single ASCII bytes (Python codec names)
-_ASCII_CHARSETS = {"utf-8", "iso8859-1", "ascii"}
+def file_columns(
+    spark: SparkSession, path: str, sep: str = ",", encoding: str = "UTF-8"
+) -> list[str]:
+    """The columns of the CSV at ``path`` as Spark's header inference
+    names them: read on the driver (:func:`csv_header`, no job) for a
+    plain header in a local file, by Spark's header pass (1 job) for
+    any other."""
+    try:
+        return csv_header(spark, path, sep, encoding)
+    except ValueError:
+        return (
+            spark.read.option("header", True)
+            .option("sep", sep)
+            .option("encoding", encoding)
+            .csv(path)
+            .limit(0)
+            .columns
+        )
 
 
-def csv_header(path: str, sep: str = ",", encoding: str = "UTF-8") -> list[str]:
+# the charsets whose header the driver decodes as Spark does (Spark's
+# names); a file in any other takes Spark's header pass
+_DRIVER_CHARSETS = {"UTF-8", "ISO-8859-1", "US-ASCII"}
+# the header is read in blocks of this size, and a header line that has
+# not ended within _HEADER_MAX_BYTES takes Spark's header pass
+_HEADER_BLOCK_BYTES = 1 << 16
+_HEADER_MAX_BYTES = 1 << 20
+
+
+def csv_header(
+    spark: SparkSession, path: str, sep: str = ",", encoding: str = "UTF-8"
+) -> list[str]:
     """The column names Spark's CSV header inference gives the local
-    file ``path``, read on the driver — no Spark job.
+    file ``path``, read on the driver — no Spark job — when the header
+    is plain: it holds no quote and no backslash, so its fields are the
+    text between separators, verbatim.
 
     Spark's rules: the header is the first line (split at LF, CRLF or
     CR; a leading UTF-8 BOM dropped) that is not empty once spaces are
-    trimmed, decoded with ``encoding``; a field that starts with ``"``
-    is quoted (``\\"`` and ``\\\\`` unescape, blanks after the closing
-    quote are skipped), any other field is taken verbatim; an empty
-    name becomes ``_c{i}`` and a name duplicated (case-insensitively,
-    unless the active session sets ``spark.sql.caseSensitive``) gets
-    its index appended. A header this function cannot parse exactly as
-    Spark does — a doubled quote, text after a closing quote, an
-    unterminated quote, an undecodable byte, names that still collide —
-    raises ``ValueError`` naming the file: it never returns a different
-    column list."""
+    trimmed; an empty name becomes ``_c{i}`` and a name duplicated
+    (case-insensitively, unless ``spark`` sets
+    ``spark.sql.caseSensitive``) gets its index appended.
+
+    Anything else raises ``ValueError`` naming the file, and Spark's
+    header pass decides (:func:`file_columns`): a path that is not
+    a local file, a quote or backslash in the header, a charset other
+    than UTF-8, ISO-8859-1 or US-ASCII, an undecodable byte, a separator
+    that is not one plain character, a header line longer than 1 MiB,
+    names that still collide. It never returns a different column
+    list."""
 
     def unparsable(why: str) -> ValueError:
-        return ValueError(f"{path}: cannot read the CSV header as Spark does: {why}")
+        return ValueError(f"{path}: header left to Spark's header pass: {why}")
 
-    try:
-        charset = codecs.lookup(encoding).name
-    except LookupError:
-        charset = None
-    if charset not in _ASCII_CHARSETS:
-        raise unparsable(f"encoding {encoding!r} is not one of UTF-8, ISO-8859-1, US-ASCII")
+    if not os.path.isfile(path):
+        raise unparsable("not a local file")
+    if encoding.upper() not in _DRIVER_CHARSETS:
+        raise unparsable(f"encoding {encoding!r}")
     if len(sep) != 1 or sep in '"\\\r\n ':
         raise unparsable(f"separator {sep!r}")
-    line = _first_nonblank_line(path)
+    line = _first_nonblank_line(path, unparsable)
     if line is None:
         return []
-    text = line.decode(charset, errors="replace")
-    if "\ufffd" in text:
-        raise unparsable("an undecodable byte in the header")
-    fields = _split_header(text, sep, unparsable)
-    spark = SparkSession.getActiveSession()
-    case_sensitive = (
-        spark is not None and spark.conf.get("spark.sql.caseSensitive") == "true"
-    )
+    if b'"' in line or b"\\" in line:
+        raise unparsable("a quote or backslash in the header")
+    try:
+        fields = line.decode(encoding).split(sep)
+    except UnicodeDecodeError as e:
+        raise unparsable(f"an undecodable byte in the header ({e.reason})") from None
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
     key = (lambda n: n) if case_sensitive else str.lower
     seen = [key(f) for f in fields if f]
     dups = {k for k in seen if seen.count(k) > 1}
@@ -210,58 +224,31 @@ def csv_header(path: str, sep: str = ",", encoding: str = "UTF-8") -> list[str]:
     return names
 
 
-def _first_nonblank_line(path: str) -> bytes | None:
+def _first_nonblank_line(path: str, unparsable) -> bytes | None:
     """The first line of ``path`` that is not empty once spaces are
     trimmed, without its terminator (LF, CRLF or CR, as Hadoop's line
-    reader splits) and without a leading UTF-8 BOM; None if none."""
+    reader splits) and without a leading UTF-8 BOM; None if none. Reads
+    fixed-size blocks up to the end of that line, so a file with no LF
+    is not read whole."""
     with open(path, "rb") as fh:
-        first = True
-        for chunk in fh:  # each chunk ends at LF, or at the end of file
-            if first and chunk.startswith(codecs.BOM_UTF8):
-                chunk = chunk[len(codecs.BOM_UTF8) :]
-            first = False
-            lines = re.split(rb"\r\n|\r|\n", chunk)
-            if chunk.endswith((b"\n", b"\r")):
-                lines.pop()
+        tail, first = b"", True
+        while True:
+            block = fh.read(_HEADER_BLOCK_BYTES)
+            buf = tail + block
+            if first:
+                buf, first = buf.removeprefix(codecs.BOM_UTF8), False
+            # the last piece is unterminated until the end of the file; a
+            # CR split from its LF leaves an empty line, which is blank
+            *lines, tail = re.split(rb"\r\n|\r|\n", buf)
+            if not block:
+                lines.append(tail)
             for line in lines:
                 if line.strip(b" "):
                     return line
-    return None
-
-
-def _split_header(text: str, sep: str, unparsable) -> list[str]:
-    """``text`` split into fields as Spark's CSV parser splits a header
-    line (quote ``"``, escape ``\\``)."""
-    fields: list[str] = []
-    i, n = 0, len(text)
-    while True:
-        if text.startswith('"', i):
-            out, j = [], i + 1
-            while True:
-                if j >= n:
-                    raise unparsable(f"unterminated quote in field {len(fields)}")
-                c = text[j]
-                if c == "\\" and j + 1 < n and text[j + 1] in '"\\':
-                    out.append(text[j + 1])
-                    j += 2
-                elif c == '"':
-                    break
-                else:
-                    out.append(c)
-                    j += 1
-            j += 1
-            while j < n and text[j] in " \t" and text[j] != sep:
-                j += 1
-            if j < n and text[j] != sep:
-                raise unparsable(f"text after the closing quote of field {len(fields)}")
-            fields.append("".join(out))
-        else:
-            j = text.find(sep, i)
-            j = n if j < 0 else j
-            fields.append(text[i:j])
-        if j >= n:
-            return fields
-        i = j + 1
+            if not block:
+                return None
+            if len(tail) > _HEADER_MAX_BYTES:
+                raise unparsable("no line break in the first MiB")
 
 
 def validate_counts(src_rows: int, loaded_rows: int, maxerrors: int = 5) -> bool:

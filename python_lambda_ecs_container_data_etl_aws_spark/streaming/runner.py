@@ -317,8 +317,29 @@ def ingest_stream(
     report, never rescanning the facts. Each batch's facts land in
     ``out_dir/batch=<id>`` (:func:`_write_batch`), so a batch replayed
     after a lost commit replaces its own dir instead of appending its
-    rows again.
+    rows again, and readers of ``out_dir`` see a ``batch`` partition
+    column.
+
+    An ``out_dir`` written by the earlier flat append sink (part files
+    at its root) cannot take ``batch=`` dirs beside them — Spark's
+    partition discovery rejects the mix — so such a dir raises
+    ``ValueError`` before the stream starts: point the stream at a new
+    ``out_dir``, or move the old files into one.
     """
+    if os.path.isdir(out_dir):
+        flat = [
+            e
+            for e in os.listdir(out_dir)
+            if not e.startswith(("_", "."))
+            and os.path.isfile(os.path.join(out_dir, e))
+        ]
+        if flat:
+            raise ValueError(
+                f"{out_dir} holds data files at its root ({flat[0]}...), the "
+                "flat layout of the earlier append sink; ingest_stream "
+                "writes batch=<id> dirs, which cannot sit beside them: use "
+                "a new out_dir or move the old files"
+            )
     src = file_stream(spark, landing_dir, schema, fmt)
     if transform is not None:
         src = transform(src)

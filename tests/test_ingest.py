@@ -94,8 +94,9 @@ def test_maxerrors_gate(spark, tmp_path):
     assert validate_counts(16, res2.good.count(), maxerrors=6)
 
 
-# (file bytes, sep, encoding) per case; the driver must return exactly
-# Spark's columns, except where HEADER_MAY_RAISE allows a ValueError
+# (file bytes, sep, encoding) per case; the columns a load uses must be
+# exactly Spark's, and the driver must read every header but the
+# HEADER_TO_SPARK ones itself
 HEADER_CORPUS = {
     "plain": (b"a,b,c\n1,2,3\n", ",", "UTF-8"),
     "quoted_sep": (b'"a,b",c\n1,2\n', ",", "UTF-8"),
@@ -111,15 +112,21 @@ HEADER_CORPUS = {
     "space_before_quote": (b' "a",b\n', ",", "UTF-8"),
     "blanks_after_quote": (b'"a" ,"b"\t,"c"  \n', ",", "UTF-8"),
     "bom": (b"\xef\xbb\xbfa,b\n1,2\n", ",", "UTF-8"),
-    "bom_latin1": (b"\xef\xbb\xbf\"a\",b\n", ",", "ISO-8859-1"),
+    "bom_latin1": (b"\xef\xbb\xbfa,b\n", ",", "ISO-8859-1"),
+    "bom_latin1_quoted": (b"\xef\xbb\xbf\"a\",b\n", ",", "ISO-8859-1"),
     "crlf": (b"a,b\r\n1,2\r\n", ",", "UTF-8"),
     "cr": (b"a,b\r1,2\r", ",", "UTF-8"),
     "leading_blank_lines": (b"\n\r\na,b\n1,2\n", ",", "UTF-8"),
     "leading_space_lines": (b"   \n \r\na,b\n1,2\n", ",", "UTF-8"),
     "leading_tab_line": (b"\t\na,b\n", ",", "UTF-8"),
     "iso_8859_1": ("caf\u00e9,b\n1,2\n".encode("latin-1"), ",", "ISO-8859-1"),
-    "semicolon": (b'a;"b;c";d,e\n1;2;3\n', ";", "UTF-8"),
-    "tab": (b'a\t"b\tc"\td\n1\t2\t3\n', "\t", "UTF-8"),
+    "us_ascii": (b"a,b\n", ",", "US-ASCII"),
+    "us_ascii_high_byte": (b"caf\xe9,b\n", ",", "US-ASCII"),
+    "semicolon": (b"a;b,c;d\n1;2;3\n", ";", "UTF-8"),
+    "semicolon_quoted": (b'a;"b;c";d,e\n1;2;3\n', ";", "UTF-8"),
+    "tab": (b"a\tb c\td\n1\t2\t3\n", "\t", "UTF-8"),
+    "tab_quoted": (b'a\t"b\tc"\td\n1\t2\t3\n', "\t", "UTF-8"),
+    "multi_char_sep": (b"a||b\n1||2\n", "||", "UTF-8"),
     "empty_file": (b"", ",", "UTF-8"),
     "blank_file": (b"\n  \n", ",", "UTF-8"),
     "doubled_quote": (b'"a""q",b\n1,2\n', ",", "UTF-8"),
@@ -128,38 +135,121 @@ HEADER_CORPUS = {
     "undecodable": (b"a\xff,b\n", ",", "UTF-8"),
     "suffixed_names_collide": (b"a,a,a1\n1,2,3\n", ",", "UTF-8"),
 }
-HEADER_MAY_RAISE = {
-    "doubled_quote", "text_after_quote", "unterminated_quote", "undecodable"
+HEADER_TO_SPARK = {
+    "quoted_sep", "escaped_quote", "escaped_backslash",
+    "unquoted_backslash_and_quote", "quoted_empty", "space_before_quote",
+    "blanks_after_quote", "bom_latin1_quoted", "us_ascii_high_byte",
+    "semicolon_quoted", "tab_quoted", "multi_char_sep", "doubled_quote",
+    "text_after_quote", "unterminated_quote", "undecodable",
+    "suffixed_names_collide",
 }
 
 
 def test_csv_header_matches_spark_header_inference(spark, tmp_path):
-    """The driver's header read gives the columns Spark's header pass
-    gives, case by case; where it cannot reproduce Spark's parse, or
-    Spark rejects the header (``a,a,a1`` suffixes to ``a0,a1,a1``), it
-    raises a ValueError naming the file, never a different list."""
-    from python_lambda_ecs_container_data_etl_aws_spark.sources.loader import csv_header
+    """Case by case, the columns a load reads (``file_columns``) are the
+    ones Spark's header pass gives, and so is the driver's own read
+    (``csv_header``) of every plain header. A header the driver does not
+    read as Spark does — quoted, escaped, undecodable, or one whose
+    suffixed names collide (``a,a,a1``, which Spark rejects) — raises a
+    ValueError naming the file, and Spark's pass decides."""
+    from python_lambda_ecs_container_data_etl_aws_spark.sources.loader import (
+        csv_header,
+        file_columns,
+    )
 
     for name, (data, sep, encoding) in HEADER_CORPUS.items():
         path = tmp_path / f"{name}.csv"
         path.write_bytes(data)
-        try:
-            want = (
+
+        def spark_pass():
+            return (
                 spark.read.option("header", True)
                 .option("sep", sep)
                 .option("encoding", encoding)
                 .csv(str(path))
                 .columns
             )
+
+        try:
+            want = spark_pass()
         except AnalysisException:
             want = None
         try:
-            got = csv_header(str(path), sep, encoding)
+            got = csv_header(spark, str(path), sep, encoding)
         except ValueError as e:
-            assert want is None or name in HEADER_MAY_RAISE, (name, e)
+            assert name in HEADER_TO_SPARK, (name, e)
             assert str(path) in str(e)
-            continue
-        assert got == want, name
+        else:
+            assert name not in HEADER_TO_SPARK and got == want, name
+        if want is None:
+            with pytest.raises(AnalysisException):
+                file_columns(spark, str(path), sep, encoding)
+        else:
+            assert file_columns(spark, str(path), sep, encoding) == want, name
+
+
+def test_csv_header_reads_blocks_up_to_the_header_line(spark, tmp_path, monkeypatch):
+    """The header is read in fixed-size blocks and the read stops at the
+    end of its line, whatever the line break: a CR-only file is not read
+    whole. A CRLF split across two blocks leaves only a blank line, and
+    a header line that has not ended within the cap takes Spark's
+    header pass."""
+    from python_lambda_ecs_container_data_etl_aws_spark.sources import loader
+
+    monkeypatch.setattr(loader, "_HEADER_BLOCK_BYTES", 4)
+    monkeypatch.setattr(loader, "_HEADER_MAX_BYTES", 16)
+    read = []
+    real_open = open
+
+    class Counting:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def read(self, n):
+            block = self.fh.read(n)
+            read.append(len(block))
+            return block
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+    monkeypatch.setattr(
+        loader, "open", lambda p, mode: Counting(real_open(p, mode)), raising=False
+    )
+    cases = {
+        "cr_only": b"alpha,beta\r" + b"1,2\r" * 1000,
+        "crlf_across_blocks": b"   \r\nx,y\r\n1,2\r\n",
+    }
+    for name, data in cases.items():
+        path = tmp_path / f"{name}.csv"
+        path.write_bytes(data)
+        read.clear()
+        got = loader.csv_header(spark, str(path))
+        assert sum(read) <= 16, name
+        assert got == spark.read.option("header", True).csv(str(path)).columns, name
+    long = tmp_path / "long_header.csv"
+    long.write_bytes(b"a" * 40 + b",b\n1,2\n")
+    with pytest.raises(ValueError, match="no line break"):
+        loader.csv_header(spark, str(long))
+    assert loader.file_columns(spark, str(long)) == ["a" * 40, "b"]
+
+
+def test_quoted_header_file_loads_and_logs_its_row(spark, tmp_path):
+    """A header the driver leaves to Spark (here a doubled quote, which
+    Spark keeps verbatim) still loads through Spark's header pass, and
+    its audit row is written."""
+    path = _write_csv(
+        tmp_path, "PriceIndex_dq.csv", ['"a""q",' + HEADER, "x," + ROW]
+    )
+    log_dir = str(tmp_path / "log")
+    rep = ingest_file(spark, path, str(tmp_path / "wh"), log_dir=log_dir)
+    assert (rep.status, rep.loaded_rows) == ("ok", 1)
+    assert [(r.file, r.status) for r in load_ingest_log(spark, log_dir).collect()] == [
+        (os.path.basename(path), "ok")
+    ]
 
 
 def test_read_csv_canonical_job_count_is_pinned(spark, tmp_path):
@@ -755,6 +845,26 @@ def test_audit_row_round_trips_quoted_non_ascii_file_name(spark, tmp_path):
             1_700_000_000_000_000, "2023-11-14",
         )
     ]
+
+
+def test_audit_row_at_a_uri_log_dir_is_appended_by_spark(spark, tmp_path, monkeypatch):
+    """A ``log_dir`` with a URI scheme is not a local path, so its row is
+    appended by Spark (one job) into the dir the URI names; nothing is
+    written under the working directory."""
+    monkeypatch.chdir(tmp_path)
+    local = tmp_path / "remote_log"
+    log_dir = local.as_uri()
+    before = _jobs_so_far(spark)
+    log_ingest(
+        spark, log_dir, IngestReport(file="a.csv", route="t", loaded_rows=1),
+        now_us=1_700_000_000_000_000,
+    )
+    assert _jobs_so_far(spark) - before == 1
+    assert os.path.isdir(local / "log_date=2023-11-14")
+    assert not os.path.exists(tmp_path / "file:")
+    log = load_ingest_log(spark, log_dir)
+    assert log.schema == StructType.fromDDL(LOG_SCHEMA)
+    assert [(r.file, r.log_date) for r in log.collect()] == [("a.csv", "2023-11-14")]
 
 
 def test_ingest_log_schema_is_declared_empty_or_not(spark, tmp_path):

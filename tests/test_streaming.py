@@ -282,6 +282,22 @@ def test_ingest_stream_returns_per_batch_progress(spark, tmp_path):
     assert sum(p["numInputRows"] for p in progress) == len(rows)
 
 
+def test_ingest_stream_refuses_an_out_dir_of_the_flat_append_sink(spark, tmp_path):
+    """An ``out_dir`` holding part files at its root (the layout of the
+    earlier append sink) cannot take ``batch=`` dirs beside them, so the
+    stream raises before it starts and writes nothing."""
+    landing, out = str(tmp_path / "fl_landing"), str(tmp_path / "fl_out")
+    rows = [(i, None, i % 5, "view") for i in range(3)]
+    spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(landing)
+    spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(out)
+    before = sorted(os.listdir(out))
+    with pytest.raises(ValueError, match="flat layout"):
+        runner.ingest_stream(
+            spark, landing, EVENT_SCHEMA, out, str(tmp_path / "fl_ck"), fmt="parquet"
+        )
+    assert sorted(os.listdir(out)) == before
+
+
 def test_ingest_stream_replay_after_a_lost_commit_writes_once(spark, tmp_path):
     """A batch whose writes landed but whose checkpoint commit was lost
     re-runs on restart; it replaces its own ``batch=<id>`` dir, so the
